@@ -52,7 +52,14 @@ class KvCatalog extends TableCatalog with SupportsNamespaces
 
   private var catalogName: String = _
   private var warehouse: String = _
-  private def conf = new Configuration()
+  // the active session's, per call: a catalog outlives session conf changes
+  private def conf: Configuration = KvHadoopConf.active()
+
+  /** A table handle sharing one configuration with its schema read. */
+  private def openTable(path: String, asOf: Option[Long] = None): Table = {
+    val c = conf
+    new KvBatchTable(path, KvV2Util.inferSchema(path, c), asOf, c)
+  }
 
   // --- maintenance procedures: SQL `CALL graft_kv.system.compact(...)`
   // maps the reference's admin-side maintenance (HBase major compaction,
@@ -128,7 +135,7 @@ class KvCatalog extends TableCatalog with SupportsNamespaces
     }
     val path = tablePath(ident)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    new KvBatchTable(path, KvV2Util.inferSchema(path, conf))
+    openTable(path)
   }
 
   /** SQL time travel: `SELECT ... FROM t VERSION AS OF <v>` — a
@@ -146,7 +153,7 @@ class KvCatalog extends TableCatalog with SupportsNamespaces
       }
     val path = tablePath(ident)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    new KvBatchTable(path, KvV2Util.inferSchema(path, conf), Some(v))
+    openTable(path, Some(v))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -172,8 +179,9 @@ class KvCatalog extends TableCatalog with SupportsNamespaces
       }
     }
     val kvSchema = KvSchema(key, values.toSeq)
-    val fileSchema = KvDdl.createEmpty(path, kvSchema, schema, conf)
-    new KvBatchTable(path, fileSchema)
+    val c = conf
+    val fileSchema = KvDdl.createEmpty(path, kvSchema, schema, c)
+    new KvBatchTable(path, fileSchema, hadoopConf = c)
   }
 
   /** Schema evolution: `ALTER TABLE t ADD COLUMNS (c TYPE [COMMENT
@@ -219,7 +227,7 @@ class KvCatalog extends TableCatalog with SupportsNamespaces
       val out = fs(path).create(schemaFileOf(path), true)
       try out.write(kv.toJson.getBytes("UTF-8")) finally out.close()
     }
-    new KvBatchTable(path, KvV2Util.inferSchema(path, conf))
+    openTable(path)
   }
 
   private def readKvSchema(path: String): KvSchema = {
@@ -554,7 +562,7 @@ class KvFilesMetaTable(path: String) extends Table with SupportsRead {
         override def toBatch: Batch = this
 
         override def planInputPartitions(): Array[InputPartition] = {
-          val conf = new Configuration()
+          val conf = KvHadoopConf.active()
           val key = KvV2Util.readKeyField(path, conf)
           val files = KvStats.read(path, conf).map(_.files)
             .getOrElse(Seq.empty)

@@ -6,8 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -15,6 +14,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.kv.KvTable.{SeqCol, TombstoneCol, VersionCol}
 
@@ -38,7 +38,8 @@ import graft.kv.KvTable.{SeqCol, TombstoneCol, VersionCol}
   * chosen at compaction is the knob, exactly like region sizing.
   */
 class KvRowLevelOperationBuilder(path: String, tableSchema: StructType,
-                                 info: RowLevelOperationInfo)
+                                 info: RowLevelOperationInfo,
+                                 conf: Configuration)
     extends RowLevelOperationBuilder {
   // NOTE: the bucket-layout requirement is checked at SCAN PLANNING
   // (KvLiveScan), not here — Spark builds the row-level plan during
@@ -46,24 +47,25 @@ class KvRowLevelOperationBuilder(path: String, tableSchema: StructType,
   // SupportsDelete metadata path, so failing here would break
   // key-equality DELETE on unbucketed tables.
   override def build(): RowLevelOperation =
-    new KvRowLevelOperation(path, tableSchema, info.command)
+    new KvRowLevelOperation(path, tableSchema, info.command, conf)
 }
 
 class KvRowLevelOperation(path: String, tableSchema: StructType,
-                          cmd: RowLevelOperation.Command)
+                          cmd: RowLevelOperation.Command,
+                          conf: Configuration)
     extends RowLevelOperation with SupportsDelta {
 
   override def command(): RowLevelOperation.Command = cmd
 
   override def rowId(): Array[NamedReference] = {
-    val key = KvV2Util.readKeyField(path, new Configuration())
+    val key = KvV2Util.readKeyField(path, conf)
       .getOrElse(throw new IllegalStateException(
         s"kvtable($path): no _kvschema.json — cannot identify the rowkey"))
     Array(Expressions.column(key))
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new KvLiveScanBuilder(path, tableSchema)
+    new KvLiveScanBuilder(path, tableSchema, conf)
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
@@ -78,9 +80,9 @@ class KvRowLevelOperation(path: String, tableSchema: StructType,
         // doesn't carry the key (pure-DELETE plans project no data
         // columns; their tombstone volume is the matched-row count,
         // routed row-at-a-time without memory risk).
-        private val distBuckets = KvV2Util.readBuckets(path, new Configuration())
+        private val distBuckets = KvV2Util.readBuckets(path, conf)
         private val distKey: Option[String] =
-          KvV2Util.readKeyField(path, new Configuration())
+          KvV2Util.readKeyField(path, conf)
             .filter(k => distBuckets > 0 &&
               info.schema().fieldNames.contains(k))
 
@@ -99,22 +101,24 @@ class KvRowLevelOperation(path: String, tableSchema: StructType,
 
         override def toBatch: DeltaBatchWrite =
           new KvDeltaBatchWrite(path, tableSchema,
-            distBuckets, info.schema())
+            distBuckets, info.schema(), conf)
       }
     }
 }
 
 /** Scan of the LIVE view: column pruning only (predicates stay Spark-
   * side residuals — the rewrite plans them above the scan anyway). */
-class KvLiveScanBuilder(path: String, fullSchema: StructType)
+class KvLiveScanBuilder(path: String, fullSchema: StructType,
+                        conf: Configuration)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = fullSchema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = new KvLiveScan(path, fullSchema, required)
+  override def build(): Scan = new KvLiveScan(path, fullSchema, required, conf)
 }
 
-class KvLiveScan(path: String, fullSchema: StructType, required: StructType)
+class KvLiveScan(path: String, fullSchema: StructType, required: StructType,
+                 conf: Configuration)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -122,7 +126,6 @@ class KvLiveScan(path: String, fullSchema: StructType, required: StructType)
     s"kvtable-live($path) ReadSchema: ${required.simpleString}"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = new Configuration()
     require(KvV2Util.readBuckets(path, conf) > 0,
       s"kvtable($path): row-level UPDATE/MERGE and non-key DELETE need a " +
         "bucket-compacted table so the live view scans region-locally — " +
@@ -139,28 +142,30 @@ class KvLiveScan(path: String, fullSchema: StructType, required: StructType)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new KvLiveReaderFactory(path, fullSchema, required)
+    new KvLiveReaderFactory(path, fullSchema, required,
+      KvHadoopConf.broadcast(conf))
 }
 
 case class KvBucketPartition(bucket: Int, files: Array[String])
     extends InputPartition
 
 class KvLiveReaderFactory(path: String, fullSchema: StructType,
-                          required: StructType)
+                          required: StructType,
+                          conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new KvBucketLiveReader(path, partition.asInstanceOf[KvBucketPartition],
-      fullSchema, required)
+      fullSchema, required, conf.value.value)
 }
 
 /** Region-style bucket read: merge every file of the bucket, keep the
   * max-(version, seq) cell per key, drop tombstones, emit live rows
   * projected to `required`. */
 class KvBucketLiveReader(path: String, part: KvBucketPartition,
-                         fullSchema: StructType, required: StructType)
+                         fullSchema: StructType, required: StructType,
+                         conf: Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val conf = new Configuration()
   private val keyField: String =
     KvV2Util.readKeyField(path, conf).getOrElse(
       throw new IllegalStateException(s"kvtable($path): no rowkey declared"))
@@ -189,9 +194,7 @@ class KvBucketLiveReader(path: String, part: KvBucketPartition,
     // key -> (version, seq, values-in-readFields-order)
     val best = new java.util.HashMap[Any, (Long, Long, Array[Any])]()
     part.files.foreach { file =>
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), new HPath(file))
-        .withConf(conf).build()
+      val reader = KvV2Util.groupReader(new HPath(file), conf).build()
       try {
         var g = reader.read()
         while (g != null) {
@@ -245,22 +248,23 @@ class KvBucketLiveReader(path: String, part: KvBucketPartition,
   * schema, never from the incoming rows. */
 class KvDeltaBatchWrite(path: String, tableSchema: StructType,
                         buckets: Int,
-                        writeSchema: StructType)
+                        writeSchema: StructType,
+                        conf: Configuration)
     extends DeltaBatchWrite {
 
   private val assignedVersion =
-    KvV2Util.readMeta(path, new Configuration())._1 + 1
+    KvV2Util.readMeta(path, conf)._1 + 1
 
   // append-only job commit, shared with the plain V2 write path; the
   // commit's manifest schema is the TABLE's file layout (the write
   // schema of a pure DELETE is empty)
   private val inner = new KvBatchWrite(path,
     StructType(tableSchema.fields.filterNot(_.name == KvV2Util.BucketCol)),
-    assignedVersion, kvSchemaJson = None, truncate = false)
+    assignedVersion, kvSchemaJson = None, truncate = false, conf)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
     new KvDeltaWriterFactory(path, tableSchema, buckets, writeSchema,
-      assignedVersion)
+      assignedVersion, KvHadoopConf.broadcast(conf))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     inner.commit(messages)
@@ -270,19 +274,21 @@ class KvDeltaBatchWrite(path: String, tableSchema: StructType,
 
 class KvDeltaWriterFactory(path: String, tableSchema: StructType,
                            buckets: Int, writeSchema: StructType,
-                           assignedVersion: Long) extends DeltaWriterFactory {
+                           assignedVersion: Long,
+                           conf: Broadcast[SerializableConfiguration])
+    extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new KvDeltaWriter(path, tableSchema, buckets, writeSchema,
-      assignedVersion, partitionId, taskId)
+      assignedVersion, partitionId, taskId, conf.value.value)
 }
 
 class KvDeltaWriter(path: String, tableSchema: StructType, buckets: Int,
                     writeSchema: StructType, assignedVersion: Long,
-                    partitionId: Int, taskId: Long)
+                    partitionId: Int, taskId: Long, conf: Configuration)
     extends DeltaWriter[InternalRow] {
 
   private val keyField: String =
-    KvV2Util.readKeyField(path, new Configuration()).getOrElse(
+    KvV2Util.readKeyField(path, conf).getOrElse(
       throw new IllegalStateException(s"kvtable($path): no rowkey declared"))
   private val keyType: DataType =
     tableSchema.fields.find(_.name == keyField)
@@ -308,7 +314,7 @@ class KvDeltaWriter(path: String, tableSchema: StructType, buckets: Int,
     dataFields.map(f => writeSchema.fieldNames.indexOf(f.name))
 
   private val sink = new KvDataWriter(path, sinkSchema, assignedVersion,
-    partitionId, taskId, routeBuckets = buckets,
+    partitionId, taskId, conf, routeBuckets = buckets,
     routeKeyField = Some(keyField))
 
   private var seq: Long = partitionId.toLong << 33

@@ -30,10 +30,9 @@ import org.apache.spark.sql.types.StructType
   * that door open (segments are per-commit).
   */
 class KvMicroBatchStream(path: String, required: StructType,
-                         pushed: Array[Filter], fullSchema: StructType)
+                         pushed: Array[Filter], fullSchema: StructType,
+                         conf: Configuration)
     extends MicroBatchStream {
-
-  private def conf = new Configuration()
 
   private def currentFiles: Seq[String] =
     KvV2Util.dataFiles(path, conf)
@@ -52,16 +51,18 @@ class KvMicroBatchStream(path: String, required: StructType,
     val newRel = (target -- seen)
     if (newRel.isEmpty) Array.empty
     else {
-      val c = conf
-      val newFiles = KvV2Util.dataFiles(path, c)
-        .filter(f => newRel.contains(KvStats.relativize(path, f.getPath, c)))
-      KvV2Util.planPartitions(path, c, newFiles, pushed, fullSchema)
+      val newFiles = KvV2Util.dataFiles(path, conf)
+        .filter(f => newRel.contains(KvStats.relativize(path, f.getPath, conf)))
+      KvV2Util.planPartitions(path, conf, newFiles, pushed, fullSchema)
         .map(p => p: InputPartition)
     }
   }
 
+  // one broadcast for the stream's life, not one per micro-batch
+  private lazy val sharedConf = KvHadoopConf.broadcast(conf)
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new KvReaderFactory(required)
+    new KvReaderFactory(required, sharedConf)
 
   override def commit(end: Offset): Unit = ()
 

@@ -5,16 +5,20 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path => HPath}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{MessageType, PrimitiveType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, DecimalLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -24,6 +28,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 provider for the KV table log: `format("kvtable")`.
   *
@@ -70,7 +75,8 @@ class KvTableProvider extends TableProvider with DataSourceRegister {
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    KvV2Util.inferSchema(path(options), new Configuration())
+    KvV2Util.inferSchema(path(options),
+      KvHadoopConf.active(options.asCaseSensitiveMap.asScala.toMap))
 
   /** Writes supply their own schema (a brand-new table has no files to
     * infer from). */
@@ -78,16 +84,19 @@ class KvTableProvider extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new KvBatchTable(properties.get("path"), schema)
+    new KvBatchTable(properties.get("path"), schema,
+      hadoopConf = KvHadoopConf.active(properties.asScala.toMap))
 }
 
 /** `asOf`: a time-travel snapshot bound — scans see only log rows with
   * `__version <= asOf` (version-ceiling row filter in the reader,
   * row-group pruning from the manifest's `__version` min/max). The
   * snapshot is read-only. SQL: `SELECT ... FROM t VERSION AS OF <v>`
-  * via [[KvCatalog.loadTable(ident, version)]]. */
+  * via [[KvCatalog.loadTable(ident, version)]]. `hadoopConf` is the
+  * session configuration every scan and write of this table uses. */
 class KvBatchTable(path: String, tableSchema0: StructType,
-                   asOf: Option[Long] = None)
+                   asOf: Option[Long] = None,
+                   hadoopConf: Configuration)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -97,7 +106,7 @@ class KvBatchTable(path: String, tableSchema0: StructType,
   // `HBaseScheme.java:151-155`); declaring it so also satisfies the
   // row-level API, whose row ID attributes must be non-nullable.
   private val tableSchema: StructType =
-    KvV2Util.readKeyField(path, new Configuration())
+    KvV2Util.readKeyField(path, hadoopConf)
       .map(k => StructType(tableSchema0.fields.map(f =>
         if (f.name == k) f.copy(nullable = false) else f)))
       .getOrElse(tableSchema0)
@@ -111,11 +120,11 @@ class KvBatchTable(path: String, tableSchema0: StructType,
       TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ,
       TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new KvScanBuilder(path, tableSchema, asOf)
+    new KvScanBuilder(path, tableSchema, asOf, hadoopConf)
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     require(asOf.isEmpty, s"kvtable snapshot $name is read-only")
-    new KvWriteBuilder(path, info)
+    new KvWriteBuilder(path, info, hadoopConf)
   }
 
   /** SQL `DELETE FROM t WHERE <rowkey predicate>` — the reference's
@@ -137,18 +146,18 @@ class KvBatchTable(path: String, tableSchema0: StructType,
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(asOf.isEmpty, s"kvtable snapshot $name is read-only")
-    new KvRowLevelOperationBuilder(path, tableSchema, info)
+    new KvRowLevelOperationBuilder(path, tableSchema, info, hadoopConf)
   }
 
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    KvV2Util.deleteTarget(path, filters).isDefined
+    KvV2Util.deleteTarget(path, filters, hadoopConf).isDefined
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    KvV2Util.deleteTarget(path, filters) match {
+    KvV2Util.deleteTarget(path, filters, hadoopConf) match {
       case Some(None) =>
         // unconditional: truncate the log (driver-side, like REPLACE)
-        KvV2Util.truncateData(path, new Configuration())
+        KvV2Util.truncateData(path, hadoopConf)
       case Some(Some(keys)) if keys.nonEmpty =>
         val schema = graft.kv.KvTable.readSchema(spark, path)
         val keyType = tableSchema.fields.find(_.name == schema.keyField)
@@ -164,7 +173,8 @@ class KvBatchTable(path: String, tableSchema0: StructType,
 }
 
 class KvScanBuilder(path: String, fullSchema: StructType,
-                    asOf: Option[Long] = None)
+                    asOf: Option[Long] = None,
+                    hadoopConf: Configuration = KvHadoopConf.active())
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates
@@ -204,7 +214,7 @@ class KvScanBuilder(path: String, fullSchema: StructType,
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       n: Int): Boolean = {
     import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection}
-    val keyName = KvV2Util.readKeyField(path, new Configuration())
+    val keyName = KvV2Util.readKeyField(path, hadoopConf)
     val ok = orders.length == 1 && keyName.nonEmpty &&
       (orders(0).expression() match {
         case nr: NamedReference =>
@@ -277,7 +287,7 @@ class KvScanBuilder(path: String, fullSchema: StructType,
       }
     }
     if (!typesOk) return None
-    val conf = new Configuration()
+    val conf = hadoopConf
     val byRel: Map[String, KvStats.FileStat] =
       KvStats.read(path, conf)
         .map(_.files.map(f => f.path -> f).toMap).getOrElse(Map.empty)
@@ -341,7 +351,8 @@ class KvScanBuilder(path: String, fullSchema: StructType,
   override def build(): Scan = aggResult match {
     case Some((schema, values)) => new KvAggScan(path, schema, values)
     case None =>
-      new KvScan(path, fullSchema, required, pushed, asOf, limit, topN)
+      new KvScan(path, fullSchema, required, pushed, asOf, limit, topN,
+        hadoopConf)
   }
 }
 
@@ -394,7 +405,8 @@ case class KvAggPartition(values: Array[Any]) extends InputPartition
 class KvScan(path: String, fullSchema: StructType, required: StructType,
              pushed: Array[Filter], asOf: Option[Long] = None,
              limit: Option[Int] = None,
-             topN: Option[(Boolean, Int)] = None)
+             topN: Option[(Boolean, Int)] = None,
+             hadoopConf: Configuration)
     extends Scan with Batch with SupportsReportPartitioning
     with SupportsReportOrdering
     with SupportsRuntimeFiltering {
@@ -417,8 +429,8 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
       LessThanOrEqual(graft.kv.KvTable.VersionCol, v): Filter)
 
   private lazy val planned: Array[KvInputPartition] = {
-    val all = KvV2Util.planPartitions(path, new Configuration(),
-      KvV2Util.dataFiles(path, new Configuration()), planFilters, fullSchema)
+    val all = KvV2Util.planPartitions(path, hadoopConf,
+      KvV2Util.dataFiles(path, hadoopConf), planFilters, fullSchema)
     (topN, limit) match {
       // truncate ONLY the unfiltered case (Spark already restricts
       // limit/top-N pushdown to fully-pushed filters; this connector's
@@ -485,7 +497,7 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
     * micro-batches (see [[KvMicroBatchStream]]). */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new KvMicroBatchStream(path, required, pushed, fullSchema)
+    new KvMicroBatchStream(path, required, pushed, fullSchema, hadoopConf)
 
   // --- runtime (join-probe) filtering: a broadcast-join probe side or
   // DPP subquery delivers In/EqualTo filters on the rowkey or __bucket
@@ -495,7 +507,7 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
   @volatile private var runtimeBuckets: Option[Set[Int]] = None
 
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    val conf = new Configuration()
+    val conf = hadoopConf
     val cols = Seq.newBuilder[org.apache.spark.sql.connector.expressions.NamedReference]
     if (KvV2Util.readBuckets(path, conf) > 0) {
       cols += org.apache.spark.sql.connector.expressions.Expressions
@@ -508,7 +520,7 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
 
   override def filter(filters: Array[Filter]): Unit = {
     runtimeBuckets =
-      KvV2Util.bucketSetFor(path, new Configuration(), filters, fullSchema)
+      KvV2Util.bucketSetFor(path, hadoopConf, filters, fullSchema)
   }
 
   override def planInputPartitions(): Array[InputPartition] =
@@ -544,7 +556,7 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
     * compacted layouts. False on any unknown file — never wrong. */
   override def outputOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
-    val key = KvV2Util.readKeyField(path, new Configuration())
+    val key = KvV2Util.readKeyField(path, hadoopConf)
     val ok = key.exists(k => required.fieldNames.contains(k)) &&
       planned.nonEmpty && planned.forall(_.sorted)
     if (ok)
@@ -556,7 +568,7 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new KvReaderFactory(required, asOf)
+    new KvReaderFactory(required, KvHadoopConf.broadcast(hadoopConf), asOf)
 }
 
 /** One parquet row group: `[start, start+length)` byte range. `bucket`
@@ -576,7 +588,9 @@ case class KvInputPartition(file: String, start: Long, length: Long,
     new GenericInternalRow(Array[Any](bucket))
 }
 
-class KvReaderFactory(required: StructType, asOf: Option[Long] = None)
+class KvReaderFactory(required: StructType,
+                      conf: Broadcast[SerializableConfiguration],
+                      asOf: Option[Long] = None)
     extends PartitionReaderFactory {
   // Per-executor projection cache keyed by file: a file with G row
   // groups yields G partitions that all need the IDENTICAL projection —
@@ -586,15 +600,15 @@ class KvReaderFactory(required: StructType, asOf: Option[Long] = None)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new KvPartitionReader(partition.asInstanceOf[KvInputPartition], required,
-      projectionCache, asOf)
+      projectionCache, conf.value.value, asOf)
 }
 
+/** `sharedConf` is the scan's broadcast configuration: read, never set. */
 class KvPartitionReader(part: KvInputPartition, required: StructType,
                         projectionCache: java.util.concurrent.ConcurrentHashMap[String, String],
+                        sharedConf: Configuration,
                         asOf: Option[Long] = None)
     extends PartitionReader[InternalRow] {
-
-  private val conf = new Configuration()
 
   // Time-travel reads need `__version` to evaluate the snapshot bound
   // even when the query projects it away: widen the FILE projection
@@ -613,8 +627,7 @@ class KvPartitionReader(part: KvInputPartition, required: StructType,
   // file reuse it instead of re-parsing the footer.
   private val projection: String =
     projectionCache.computeIfAbsent(part.file, { file =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new HPath(file), conf))
+      val r = KvV2Util.openFooter(new HPath(file), sharedConf)
       val full = try r.getFooter.getFileMetaData.getSchema finally r.close()
       val kept: Seq[org.apache.parquet.schema.Type] =
         readFields.fieldNames.toSeq.flatMap { n =>
@@ -624,15 +637,21 @@ class KvPartitionReader(part: KvInputPartition, required: StructType,
       else new MessageType("spark_schema",
         new util.ArrayList[org.apache.parquet.schema.Type](kept.asJava)).toString
     })
-  if (projection.nonEmpty) conf.set("parquet.read.schema", projection)
 
   // withFileRange selects exactly the row groups whose midpoint falls in
   // [start, start+length) — this partition's single group.
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new HPath(part.file))
-      .withConf(conf)
+  private val reader: ParquetReader[Group] = {
+    val conf =
+      if (projection.isEmpty) sharedConf
+      else {
+        val own = KvHadoopConf.copy(sharedConf)
+        own.set(ReadSupport.PARQUET_READ_SCHEMA, projection)
+        own
+      }
+    KvV2Util.groupReader(new HPath(part.file), conf)
       .withFileRange(part.start, part.start + part.length)
       .build()
+  }
 
   private var current: Group = _
 
@@ -721,27 +740,51 @@ object KvV2Util {
   def readBuckets(path: String, conf: Configuration): Int =
     readMeta(path, conf)._2
 
+  /** The committed data files, path-sorted. Recursive (bucket-compacted
+    * tables nest files under `__bucket=N/`), skipping what Spark's file
+    * index skips: `.`-prefixed entries and `_`-prefixed ones without
+    * `=` — among them `_temporary/`, where a v1 write stages its attempt
+    * files until the job commits. */
   def dataFiles(path: String, conf: Configuration): Seq[FileStatus] = {
     val dir = new HPath(s"$path/data")
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) Seq.empty
-    else {
-      // recursive: bucket-compacted tables nest files under __bucket=N/
-      val it = fs.listFiles(dir, true)
-      val buf = Seq.newBuilder[FileStatus]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile && f.getPath.getName.endsWith(".parquet")) buf += f
-      }
-      buf.result().sortBy(_.getPath.toString)
+    else leafFiles(fs, dir)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.toString)
+  }
+
+  private def hidden(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+
+  /** Listing in the shape of Spark's `HadoopFSUtils`: HDFS returns block
+    * locations with the directory listing; elsewhere each file's status
+    * is rebuilt WITHOUT permissions, because the local filesystem's
+    * permission loader forks `ls -ld` per file. */
+  private def leafFiles(fs: FileSystem, dir: HPath): Seq[LocatedFileStatus] = {
+    val entries: Seq[FileStatus] = fs match {
+      case _: org.apache.hadoop.hdfs.DistributedFileSystem =>
+        val it = fs.listLocatedStatus(dir)
+        val buf = Seq.newBuilder[FileStatus]
+        while (it.hasNext) buf += it.next()
+        buf.result()
+      case _ => fs.listStatus(dir).toSeq
+    }
+    entries.filterNot(e => hidden(e.getPath.getName)).flatMap {
+      case d if d.isDirectory => leafFiles(fs, d.getPath)
+      case f: LocatedFileStatus => Seq(f)
+      case f =>
+        Seq(new LocatedFileStatus(f.getLen, false, f.getReplication,
+          f.getBlockSize, f.getModificationTime, 0L, null, null, null, null,
+          f.getPath, f.hasAcl, f.isEncrypted, f.isErasureCoded,
+          fs.getFileBlockLocations(f, 0, f.getLen)))
     }
   }
 
   def hosts(f: FileStatus, conf: Configuration): Array[String] = f match {
-    // dataFiles lists with listFiles(recursive) which returns
-    // LocatedFileStatus — block locations came WITH the listing. Reuse
-    // them: a second per-file getFileBlockLocations RPC at plan time
-    // would be 10^5 extra namenode calls at 100 TB.
+    // dataFiles returns LocatedFileStatus — block locations came WITH
+    // the listing. Reuse them: a second per-file getFileBlockLocations
+    // RPC at plan time would be 10^5 extra namenode calls at 100 TB.
     case lf: org.apache.hadoop.fs.LocatedFileStatus =>
       lf.getBlockLocations.flatMap(_.getHosts).distinct.filterNot(_ == "localhost")
     case _ =>
@@ -774,9 +817,26 @@ object KvV2Util {
 
   private[connector] def footerSchema(f: FileStatus, conf: Configuration): MessageType = {
     footerOpens.incrementAndGet()
-    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    val r = openFooter(f.getPath, conf)
     try r.getFooter.getFileMetaData.getSchema finally r.close()
   }
+
+  /** Open a parquet file's footer on `conf`. The one-argument
+    * `ParquetFileReader.open` would build its read options on a default
+    * `Configuration`, re-parsing Hadoop's XML defaults per file. */
+  def openFooter(file: HPath, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
+
+  /** Row reader over one parquet file on `conf`. parquet-mr's path-based
+    * `ParquetReader.builder` parses a default `Configuration` of its own
+    * even when `.withConf` follows; this constructor takes ours. */
+  def groupReader(file: HPath, conf: Configuration): ParquetReader.Builder[Group] =
+    new ParquetReader.Builder[Group](HadoopInputFile.fromPath(file, conf),
+        new HadoopParquetConfiguration(conf)) {
+      override protected def getReadSupport(): ReadSupport[Group] =
+        new GroupReadSupport()
+    }
 
   def sparkType(p: PrimitiveType): DataType = p.getLogicalTypeAnnotation match {
     // DECIMAL first, whatever its physical encoding (INT32/INT64 for
@@ -947,9 +1007,9 @@ object KvV2Util {
     * delete exactly these rowkeys. AND-ed key filters intersect; OR
     * trees of EqualTo/In union — the full addressable surface of an
     * HBase Delete/multi-Delete. */
-  def deleteTarget(path: String,
-                   filters: Array[Filter]): Option[Option[Set[Any]]] = {
-    val keyField = readKeyField(path, new Configuration()).getOrElse(return None)
+  def deleteTarget(path: String, filters: Array[Filter],
+                   conf: Configuration): Option[Option[Set[Any]]] = {
+    val keyField = readKeyField(path, conf).getOrElse(return None)
     def keySet(f: Filter): Option[Set[Any]] = f match {
       case EqualTo(c, v) if c == keyField && v != null => Some(Set(v))
       case EqualNullSafe(c, v) if c == keyField && v != null => Some(Set(v))

@@ -8,14 +8,16 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{MessageType, Types}
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** V2 write path for `format("kvtable")` (see [[KvTableProvider]] for
   * the read path). The sink appends immutable parquet files to the log;
@@ -31,7 +33,8 @@ import org.apache.spark.sql.types._
   * `__version/__seq/__tombstone`) — `KvTable.writeV2` prepares them and
   * passes the logical schema via the `kvschema` option.
   */
-class KvWriteBuilder(path: String, info: LogicalWriteInfo)
+class KvWriteBuilder(path: String, info: LogicalWriteInfo,
+                     hadoopConf: Configuration)
     extends WriteBuilder with SupportsTruncate {
 
   private var doTruncate = false
@@ -53,12 +56,12 @@ class KvWriteBuilder(path: String, info: LogicalWriteInfo)
     // distribution; neither do writes that don't carry the key column.
     private val routeBuckets: Int =
       if (doTruncate) 0
-      else KvV2Util.readMeta(path, new Configuration())._2
+      else KvV2Util.readMeta(path, hadoopConf)._2
     private val routeKey: Option[String] =
       if (routeBuckets <= 0) None
       else Option(info.options.get("kvschema"))
         .map(j => graft.kv.KvSchema.fromJson(j).keyField)
-        .orElse(KvV2Util.readKeyField(path, new Configuration()))
+        .orElse(KvV2Util.readKeyField(path, hadoopConf))
         .filter(k => info.schema().fieldNames.contains(k))
 
     import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -83,16 +86,16 @@ class KvWriteBuilder(path: String, info: LogicalWriteInfo)
       // seq, tombstone=false. Prepared raw rows (KvTable.writeV2) carry
       // explicit values and pass through untouched.
       val assignedVersion =
-        KvV2Util.readMeta(path, new Configuration())._1 + 1
+        KvV2Util.readMeta(path, hadoopConf)._1 + 1
       new KvBatchWrite(path, info.schema(), assignedVersion,
-        Option(info.options.get("kvschema")), doTruncate)
+        Option(info.options.get("kvschema")), doTruncate, hadoopConf)
     }
 
     override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
       require(!doTruncate,
         "kvtable streaming sink is append-only: use outputMode append/update")
       new KvStreamingWrite(path, info.schema(),
-        Option(info.options.get("kvschema")), info.queryId())
+        Option(info.options.get("kvschema")), info.queryId(), hadoopConf)
     }
   }
 }
@@ -121,16 +124,21 @@ class KvWriteBuilder(path: String, info: LogicalWriteInfo)
   */
 class KvStreamingWrite(path: String, schema: StructType,
                        kvSchemaJson: Option[String],
-                       queryId: String)
+                       queryId: String,
+                       hadoopConf: Configuration = KvHadoopConf.active())
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
+
+  // one broadcast for the query's life, not one per epoch
+  private lazy val sharedConf = KvHadoopConf.broadcast(hadoopConf)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     // per-epoch version: planned on the driver at epoch start, same
     // counter the batch path bumps at its commit
-    val (lastVer, buckets) = KvV2Util.readMeta(path, new Configuration())
-    val routeKey = KvV2Util.readKeyField(path, new Configuration())
-    new KvStreamingWriterFactory(path, schema, lastVer + 1, buckets, routeKey)
+    val (lastVer, buckets) = KvV2Util.readMeta(path, hadoopConf)
+    val routeKey = KvV2Util.readKeyField(path, hadoopConf)
+    new KvStreamingWriterFactory(path, schema, lastVer + 1, sharedConf,
+      buckets, routeKey)
   }
 
   override def commit(epochId: Long,
@@ -139,17 +147,19 @@ class KvStreamingWrite(path: String, schema: StructType,
     // segment, bump version counter — under the table lock, with the
     // epoch recorded in the same locked scope (replays are skipped)
     new KvBatchWrite(path, schema, 0L, kvSchemaJson, truncate = false,
-        epochTag = Some((queryId, epochId)))
+        hadoopConf, epochTag = Some((queryId, epochId)))
       .commit(messages)
 
   override def abort(epochId: Long,
                      messages: Array[WriterCommitMessage]): Unit =
-    new KvBatchWrite(path, schema, 0L, kvSchemaJson, truncate = false)
-      .abort(messages)
+    new KvBatchWrite(path, schema, 0L, kvSchemaJson, truncate = false,
+        hadoopConf).abort(messages)
 }
 
 class KvStreamingWriterFactory(path: String, schema: StructType,
-                               assignedVersion: Long, routeBuckets: Int = 0,
+                               assignedVersion: Long,
+                               conf: Broadcast[SerializableConfiguration],
+                               routeBuckets: Int = 0,
                                routeKey: Option[String] = None)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
@@ -157,7 +167,7 @@ class KvStreamingWriterFactory(path: String, schema: StructType,
     // streaming epochs can REPLAY: defer the publish rename to the
     // driver commit, whose epoch-dedup check runs first
     new KvDataWriter(path, schema, assignedVersion, partitionId, taskId,
-      routeBuckets, routeKey, deferPublish = true)
+      conf.value.value, routeBuckets, routeKey, deferPublish = true)
 }
 
 /** Task-commit message: published file paths plus their stats, extracted
@@ -186,30 +196,31 @@ case class KvCommitMessage(files: Seq[String],
 class KvBatchWrite(path: String, schema: StructType,
                    assignedVersion: Long,
                    kvSchemaJson: Option[String], truncate: Boolean,
+                   conf: Configuration,
                    epochTag: Option[(String, Long)] = None)
     extends BatchWrite {
 
   // Snapshot the pre-job files on the DRIVER at job start; commit-time
   // truncation removes exactly these (task files are new unique names).
   private val preExisting: Seq[org.apache.hadoop.fs.FileStatus] =
-    KvV2Util.dataFiles(path, new Configuration())
+    KvV2Util.dataFiles(path, conf)
 
   // bucket layout + rowkey resolved ONCE, driver-side: appends to a
   // bucket-compacted table route rows by key hash (a truncating write
   // resets the layout, so it never routes)
   private val routeBuckets: Int =
-    if (truncate) 0 else KvV2Util.readMeta(path, new Configuration())._2
+    if (truncate) 0 else KvV2Util.readMeta(path, conf)._2
   // resolved unconditionally: bucket routing needs it when bucketed,
   // and the per-file rowkey BLOOM needs it on every table
   private val routeKey: Option[String] =
-    KvV2Util.readKeyField(path, new Configuration())
+    KvV2Util.readKeyField(path, conf)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new KvWriterFactory(path, schema, assignedVersion, routeBuckets, routeKey,
+    new KvWriterFactory(path, schema, assignedVersion,
+      KvHadoopConf.broadcast(conf), routeBuckets, routeKey,
       deferPublish = epochTag.isDefined)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
     // Serialize the commit's meta + manifest read-modify-write against
     // other committers (v1 writers hold the same lock across their whole
     // job): a concurrent committer can no longer drop this job's
@@ -296,7 +307,7 @@ class KvBatchWrite(path: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new HPath(path).getFileSystem(new Configuration())
+    val fs = new HPath(path).getFileSystem(conf)
     messages.foreach {
       case KvCommitMessage(files, _, staged) =>
         (files ++ staged).foreach(f => fs.delete(new HPath(f), false))
@@ -306,13 +317,15 @@ class KvBatchWrite(path: String, schema: StructType,
 }
 
 class KvWriterFactory(path: String, schema: StructType,
-                      assignedVersion: Long, routeBuckets: Int = 0,
+                      assignedVersion: Long,
+                      conf: Broadcast[SerializableConfiguration],
+                      routeBuckets: Int = 0,
                       keyField: Option[String] = None,
                       deferPublish: Boolean = false)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new KvDataWriter(path, schema, assignedVersion, partitionId, taskId,
-      routeBuckets, keyField, deferPublish)
+      conf.value.value, routeBuckets, keyField, deferPublish)
 }
 
 /** Per-task buffered writer. Rows carrying a `__bucket` column are
@@ -323,11 +336,13 @@ class KvWriterFactory(path: String, schema: StructType,
   * are routed by hashing the rowkey when the table is bucket-compacted
   * (`routeBuckets` > 0, from the meta at job start) — so a plain SQL
   * `INSERT INTO` keeps the region layout too. Unbucketed tables write
-  * one file, as before.
+  * one file, as before. `conf` is the write's broadcast configuration:
+  * read, never set.
   */
 class KvDataWriter(path: String, schema: StructType,
                    assignedVersion: Long, partitionId: Int,
-                   taskId: Long, routeBuckets: Int = 0,
+                   taskId: Long, conf: Configuration,
+                   routeBuckets: Int = 0,
                    routeKeyField: Option[String] = None,
                    deferPublish: Boolean = false)
     extends DataWriter[InternalRow] {
@@ -440,10 +455,8 @@ class KvDataWriter(path: String, schema: StructType,
     val sub = if (bucket >= 0) s"${KvV2Util.BucketCol}=$bucket/" else ""
     val staged = s"$path/.staging/$sub$name"
     val file = s"$path/data/$sub$name"
-    val conf = new Configuration()
-    GroupWriteSupport.setSchema(messageType, conf)
-    (staged, file,
-      ExampleParquetWriter.builder(new HPath(staged)).withConf(conf).build())
+    (staged, file, ExampleParquetWriter.builder(new HPath(staged))
+      .withConf(conf).withType(messageType).build())
   })
 
   override def write(row: InternalRow): Unit = {
@@ -502,7 +515,6 @@ class KvDataWriter(path: String, schema: StructType,
   }
 
   override def commit(): WriterCommitMessage = {
-    val conf = new Configuration()
     val fs = new HPath(path).getFileSystem(conf)
     // Epoch-tagged (streaming) tasks DEFER the publish rename to the
     // driver commit: the replay check there runs before any file
@@ -540,7 +552,7 @@ class KvDataWriter(path: String, schema: StructType,
   }
 
   override def abort(): Unit = {
-    val fs = new HPath(path).getFileSystem(new Configuration())
+    val fs = new HPath(path).getFileSystem(conf)
     writers.values.foreach { case (staged, _, w) =>
       w.close()
       fs.delete(new HPath(staged), false)

@@ -6,8 +6,6 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.sources._
 
@@ -79,7 +77,7 @@ object KvStats {
   def fromFooter(file: HPath, relPath: String, len: Long,
                  conf: Configuration): FileStat = {
     KvV2Util.footerOpens.incrementAndGet()
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = KvV2Util.openFooter(file, conf)
     try {
       val groups = reader.getFooter.getBlocks.asScala.toSeq.map { b =>
         val cols = b.getColumns.asScala.flatMap { cc =>

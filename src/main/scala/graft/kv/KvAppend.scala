@@ -3,6 +3,8 @@ package graft.kv
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.connector.KvHadoopConf
+
 import KvTable.{TombstoneCol, VersionCol, SeqCol}
 
 /** HBase `Append` — the in-place cell-value append mutation — over the
@@ -92,7 +94,7 @@ object KvAppend {
     * the default batch-counter domain every new fragment is newer than
     * the merged cell, so compaction is always read-transparent there. */
   def compact(spark: SparkSession, path: String): Unit =
-    TableLock.withLock(path, spark.sparkContext.hadoopConfiguration) {
+    TableLock.withLock(path, KvHadoopConf(spark)) {
       KvTable.recoverMinor(spark, path)
       val schema = KvTable.readSchema(spark, path)
       val lastVer = KvTable.readMetaVersion(spark, path)

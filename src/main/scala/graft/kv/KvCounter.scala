@@ -3,6 +3,8 @@ package graft.kv
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.connector.KvHadoopConf
+
 import KvTable.{SeqCol, TombstoneCol, VersionCol}
 
 /** Distributed counters over a [[KvTable]] log — the engine analog of
@@ -99,7 +101,7 @@ object KvCounter {
     * subsequent batch-versioned increments and deletes still dominate.
     * Atomic via the same two-rename swap as [[KvTable.compact]]. */
   def compact(spark: SparkSession, path: String): Unit =
-    TableLock.withLock(path, spark.sparkContext.hadoopConfiguration) {
+    TableLock.withLock(path, KvHadoopConf(spark)) {
       KvTable.recoverMinor(spark, path) // replay any minor-compaction journal first
       val schema = KvTable.readSchema(spark, path)
       val lastVer = KvTable.readMetaVersion(spark, path)

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.connector.KvHadoopConf
+
 /** Dynamic column-family mode (SURVEY.md §1's schemaless-wide-row
   * extension): rows are `rowkey -> {family -> {qualifier -> value}}`
   * with an OPEN qualifier set, the HBase data model the reference's
@@ -42,7 +44,7 @@ object KvDynamic {
   private def metaFile(path: String) = s"$path/_kvdynamic.json"
 
   private def fs(spark: SparkSession, path: String) =
-    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new HPath(path).getFileSystem(KvHadoopConf(spark))
 
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new HPath(metaFile(path)))
@@ -110,7 +112,7 @@ object KvDynamic {
                  versionFrom: Option[Column] = None,
                  declaredFamilies: Option[Seq[String]] = None): Unit = {
     val spark = cells.sparkSession
-    TableLock.withLock(path, spark.sparkContext.hadoopConfiguration) {
+    TableLock.withLock(path, KvHadoopConf(spark)) {
     mode match {
       case SinkMode.Keep if exists(spark, path) =>
         throw new IllegalStateException(s"KvDynamic $path exists and mode is Keep")
@@ -184,7 +186,7 @@ object KvDynamic {
   private def appendTombstones(rows: DataFrame, path: String,
                                version: Option[Long]): Unit = {
     val spark = rows.sparkSession
-    TableLock.withLock(path, spark.sparkContext.hadoopConfiguration) {
+    TableLock.withLock(path, KvHadoopConf(spark)) {
     require(exists(spark, path), s"KvDynamic $path does not exist")
     val (keyField, fams, prevVer) = readMeta(spark, path)
     val batch = version.getOrElse(prevVer + 1)

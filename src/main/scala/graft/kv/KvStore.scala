@@ -2,6 +2,8 @@ package graft.kv
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
+import graft.connector.KvHadoopConf
+
 /** Storage SPI for KV tables — the seam where a wire-compatible backend
   * (a real HBase/Bigtable client) would bind.
   *
@@ -93,7 +95,7 @@ object ParquetKvStore extends KvStore {
              types: org.apache.spark.sql.types.StructType): Unit =
     if (!KvTable.exists(spark, table)) {
       graft.connector.KvDdl.createEmpty(table, schema, types,
-        spark.sparkContext.hadoopConfiguration)
+        KvHadoopConf(spark))
       ()
     }
 

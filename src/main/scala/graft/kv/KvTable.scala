@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.connector.KvHadoopConf
+
 /** Sink lifecycle modes, mirroring the reference's Cascading `SinkMode`
   * handling (`HBaseTap.java:32-35` default APPEND; `:123-132` REPLACE
   * drops the table driver-side before tasks write).
@@ -55,7 +57,7 @@ object KvTable {
   val TombstoneCol = "__tombstone"
 
   private def fs(spark: SparkSession, path: String): FileSystem =
-    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new HPath(path).getFileSystem(KvHadoopConf(spark))
 
   private def dataDir(path: String) = s"$path/data"
   private def schemaFile(path: String) = s"$path/_kvschema.json"
@@ -84,7 +86,7 @@ object KvTable {
   // connector's driver-side commit shares it
   private def readMeta(spark: SparkSession, path: String): (Long, Int) =
     graft.connector.KvV2Util.readMeta(path,
-      spark.sparkContext.hadoopConfiguration)
+      KvHadoopConf(spark))
 
   private[kv] def readMetaVersion(spark: SparkSession, path: String): Long =
     readMeta(spark, path)._1
@@ -98,7 +100,7 @@ object KvTable {
   private def writeMeta(spark: SparkSession, path: String, version: Long,
                         buckets: Int): Unit =
     graft.connector.KvV2Util.writeMeta(path,
-      spark.sparkContext.hadoopConfiguration, version, buckets)
+      KvHadoopConf(spark), version, buckets)
 
   /** Write `df` (whose columns must include the schema's key + value
     * fields) into the table at `path`.
@@ -115,7 +117,7 @@ object KvTable {
     // The lock spans version ALLOCATION through meta/manifest publish:
     // two concurrent appends can no longer both compute prevVer + 1
     // (which would collapse their LWW ordering to arbitrary seq ties).
-    TableLock.withLock(path, spark.sparkContext.hadoopConfiguration) {
+    TableLock.withLock(path, KvHadoopConf(spark)) {
       writeLocked(df, path, schema, mode, versionFrom)
     }
   }
@@ -186,7 +188,7 @@ object KvTable {
     val spark = updates.sparkSession
     require(schema.fieldNames.contains(checkField),
       s"checkField $checkField is not a field of $schema")
-    TableLock.withLock(path, spark.sparkContext.hadoopConfiguration) {
+    TableLock.withLock(path, KvHadoopConf(spark)) {
       require(exists(spark, path), s"KvTable $path does not exist")
       val k = schema.keyField
       val cur = read(spark, path)
@@ -252,7 +254,7 @@ object KvTable {
   def delete(keys: DataFrame, path: String, schema: KvSchema,
              version: Option[Long] = None): Unit = {
     val spark = keys.sparkSession
-    TableLock.withLock(path, spark.sparkContext.hadoopConfiguration) {
+    TableLock.withLock(path, KvHadoopConf(spark)) {
     require(exists(spark, path), s"KvTable $path does not exist")
     val batch = version.getOrElse(readMetaVersion(spark, path) + 1)
     // Tombstone rows must carry the TABLE's value types: parquet reads
@@ -302,7 +304,7 @@ object KvTable {
     // back-fill the stats manifest for the files this write added (the
     // V2 write path extracts stats task-side instead; see KvStats)
     graft.connector.KvStats.refresh(path,
-      spark.sparkContext.hadoopConfiguration)
+      KvHadoopConf(spark))
   }
 
   /** Restore a data dir stranded aside by a crash between [[swapData]]'s
@@ -338,7 +340,7 @@ object KvTable {
         if (restoreIfStranded(spark, path)) spark.read.parquet(dataDir(path))
         else if (e.getCondition == "UNABLE_TO_INFER_SCHEMA" && exists(spark, path)) {
           val schema = graft.connector.KvV2Util.inferSchema(path,
-            spark.sparkContext.hadoopConfiguration)
+            KvHadoopConf(spark))
           spark.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
         } else throw e
@@ -590,7 +592,7 @@ object KvTable {
     * `versionFrom` (event time). */
   def maxVersion(spark: SparkSession, path: String): Long = {
     import graft.connector.{KvStats, KvV2Util}
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = KvHadoopConf(spark)
     val byRel = KvStats.read(path, conf)
       .map(_.files.map(f => f.path -> f).toMap).getOrElse(Map.empty)
     val groups = KvV2Util.dataFiles(path, conf).flatMap { f =>
@@ -641,7 +643,7 @@ object KvTable {
   private[kv] def applyMutations(raw: DataFrame, path: String,
                                  schema: KvSchema, counterTo: Long): Unit = {
     val spark = raw.sparkSession
-    TableLock.withLock(path, spark.sparkContext.hadoopConfiguration) {
+    TableLock.withLock(path, KvHadoopConf(spark)) {
       if (exists(spark, path)) {
         val existing = readSchema(spark, path)
         require(existing == schema,
@@ -706,7 +708,7 @@ object KvTable {
     */
   def compact(spark: SparkSession, path: String,
               expireBelow: Option[Long] = None): Unit =
-    TableLock.withLock(path, spark.sparkContext.hadoopConfiguration) {
+    TableLock.withLock(path, KvHadoopConf(spark)) {
     recoverMinor(spark, path) // BEFORE the read plan lists files
     val schema = readSchema(spark, path)
     val lastVer = readMetaVersion(spark, path)
@@ -763,8 +765,8 @@ object KvTable {
   def compactMinor(spark: SparkSession, path: String,
                    smallFileBytes: Long = 32L * 1024 * 1024,
                    minFiles: Int = 2): Int =
-    TableLock.withLock(path, spark.sparkContext.hadoopConfiguration) {
-      val conf = spark.sparkContext.hadoopConfiguration
+    TableLock.withLock(path, KvHadoopConf(spark)) {
+      val conf = KvHadoopConf(spark)
       val f = fs(spark, path)
       recoverMinor(spark, path)
       // merge with the FILE schema: readRaw's schema includes the
@@ -869,8 +871,8 @@ object KvTable {
       while (it.hasNext)
         f.delete(new HPath(s"${dataDir(path)}/${it.next().asText}"), false)
       // entries for deleted files may linger in the manifest; rebuild
-      graft.connector.KvStats.clear(path, spark.sparkContext.hadoopConfiguration)
-      graft.connector.KvStats.refresh(path, spark.sparkContext.hadoopConfiguration)
+      graft.connector.KvStats.clear(path, KvHadoopConf(spark))
+      graft.connector.KvStats.refresh(path, KvHadoopConf(spark))
     }
     f.delete(new HPath(s"$path/.minor-tmp"), true)
     f.delete(log, false)
@@ -885,7 +887,7 @@ object KvTable {
     */
   def compactBucketed(spark: SparkSession, path: String, buckets: Int,
                       expireBelow: Option[Long] = None): Unit =
-    TableLock.withLock(path, spark.sparkContext.hadoopConfiguration) {
+    TableLock.withLock(path, KvHadoopConf(spark)) {
     require(buckets > 0, "buckets must be positive")
     recoverMinor(spark, path) // BEFORE the read plan lists files
     val schema = readSchema(spark, path)
@@ -939,7 +941,7 @@ object KvTable {
                     clusterCols: Seq[String], cells: Int = 256,
                     files: Int = 0,
                     expireBelow: Option[Long] = None): Unit =
-    TableLock.withLock(path, spark.sparkContext.hadoopConfiguration) {
+    TableLock.withLock(path, KvHadoopConf(spark)) {
     require(clusterCols.nonEmpty && clusterCols.size <= 8,
       "clusterCols must name 1-8 columns")
     require(cells >= 2 && cells <= 65536, "cells must be in [2, 65536]")
@@ -1050,9 +1052,9 @@ object KvTable {
     // compaction replaced every file: rebuild the stats manifest
     // (base + segments) from scratch
     graft.connector.KvStats.clear(path,
-      spark.sparkContext.hadoopConfiguration)
+      KvHadoopConf(spark))
     graft.connector.KvStats.refresh(path,
-      spark.sparkContext.hadoopConfiguration, keySorted = keySorted)
+      KvHadoopConf(spark), keySorted = keySorted)
   }
 
   /** Cells surviving HBase-Delete masking: drop tombstones and every

@@ -3,6 +3,8 @@ package graft.kv
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
 
+import graft.connector.KvHadoopConf
+
 /** Tiny driver-side JSON sidecar files shared by the incremental
   * consumers ([[KvIndex]] `_kvindexmeta.json`, [[KvMatView]]
   * `_kvmatviewmeta.json` + its refresh journal): one string field, one
@@ -25,7 +27,7 @@ private[kv] object MetaSidecar {
             listKey: String, listVals: Seq[String],
             longs: (String, Long)*): Unit = {
     val fs = new HPath(file).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+      KvHadoopConf(spark))
     val out = fs.create(new HPath(file), true)
     val list = listVals.map(v => s""""${esc(v)}"""").mkString("[", ",", "]")
     val tail = longs.map { case (k, v) => s""""${esc(k)}":$v""" }
@@ -42,7 +44,7 @@ private[kv] object MetaSidecar {
            scalarKey: String, listKey: String,
            longKeys: String*): (String, Seq[String], Seq[Long]) = {
     val fs = new HPath(file).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+      KvHadoopConf(spark))
     val in = fs.open(new HPath(file))
     val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
                finally in.close()
@@ -58,11 +60,11 @@ private[kv] object MetaSidecar {
 
   def exists(spark: SparkSession, file: String): Boolean = {
     val p = new HPath(file)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    p.getFileSystem(KvHadoopConf(spark)).exists(p)
   }
 
   def delete(spark: SparkSession, file: String): Unit = {
     val p = new HPath(file)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
+    p.getFileSystem(KvHadoopConf(spark)).delete(p, false)
   }
 }

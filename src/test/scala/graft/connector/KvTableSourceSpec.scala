@@ -440,6 +440,28 @@ class KvTableSourceSpec extends SparkSpec {
     assert(one.select("n").as[Long].head() === 7L)
   }
 
+  test("readers never plan a writer's uncommitted files under " +
+    "data/_temporary/") {
+    val path = TestSpark.scratch("v2-uncommitted")
+    val schema = KvSchema.of("k", "v" -> ("f", "v"))
+    KvTable.bulkLoad((0 until 50).map(i => (f"k$i%02d", s"v$i")).toDF("k", "v"),
+      path, schema, buckets = 4)
+    val before = KvTable.readV2(spark, path).count()
+    // keys the table does not hold, all routed to one bucket, staged
+    // where a v1 write attempt stages its files until the job commits
+    val bucketer = new KeyBucketer(org.apache.spark.sql.types.StringType, 4)
+    val (b, keys) = (0 until 40).map(i => s"new$i")
+      .groupBy(k => bucketer.bucketOf(
+        org.apache.spark.unsafe.types.UTF8String.fromString(k)))
+      .maxBy(_._2.size)
+    keys.map(k => (k, "uncommitted", 99L, 0L, false))
+      .toDF("k", "v", KvTable.VersionCol, KvTable.SeqCol, KvTable.TombstoneCol)
+      .coalesce(1).write
+      .parquet(s"$path/data/_temporary/0/t/${KvV2Util.BucketCol}=$b")
+    assert(KvTable.readV2(spark, path).count() === before)
+    assert(KvTable.get(spark, path, keys.head).count() === 0)
+  }
+
   test("prefix (StringStartsWith) and IN-list filters prune row groups " +
     "via manifest stats; IsNotNull prunes all-null groups") {
     val path = TestSpark.scratch("v2-prune-wide")
