@@ -1,10 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import Mains.jstr
 
 /** Benchmark main. Env knobs:
   *  - SPARK_GRAFT_SF_DIR: testdata dir (default sf0.1)
-  *  - SPARK_GRAFT_CPUS: local[N] + shuffle partitions (default 4)
+  *  - SPARK_GRAFT_CPUS: local[N] + shuffle partitions (default: the
+  *    machine's core count; see [[Session]])
+  *  - SPARK_GRAFT_SPLIT_MB: scan split size in MB (default 16)
   *  - SPARK_GRAFT_ONLY: comma-separated query names (default: all)
   *  - SPARK_GRAFT_REPS: timed repetitions per query (default 3)
   *  - SPARK_GRAFT_BENCH_OUT: file to also write the JSON line to
@@ -64,64 +67,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "/root/repo/bench_out.json")
-    // A malformed env var must name itself, not surface as a bare
-    // NumberFormatException from the middle of session construction.
-    val splitMb = {
-      val raw = sys.env.getOrElse("SPARK_GRAFT_SPLIT_MB", "16")
-      try raw.trim.toInt
-      catch { case _: NumberFormatException =>
-        sys.error(s"SPARK_GRAFT_SPLIT_MB must be an integer (MB); got '$raw'")
-      }
-    }
-    // SPARK_GRAFT_METRICS=off drops the task-metric listener entirely —
-    // the A/B lever for attributing listener overhead in bench totals.
-    val metricsOn =
-      !sys.env.get("SPARK_GRAFT_METRICS").exists(_.equalsIgnoreCase("off"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-    .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // Let AQE right-size the output partitioning of persisted plans
-      // (CC edge caches, minhash shingle caches): default-off Spark
-      // pins a cached plan to the shuffle-partition constant, so every
-      // consumer of a small cache pays full-width stages. Sizing cached
-      // output by DATA is the scale-adaptive choice at any SF (guide
-      // §2) — measured −1.0s dedup_clusters / −0.8s dedup_cluster_best
-      // at sf0.1 (same-JVM A/B), results identical (partitioning only).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Allow shuffled-hash join where its size conditions hold (guide
-      // §3.1/§9): SMJ pays two sorts SHJ doesn't; with AQE's accurate
-      // runtime sizes the planner only builds hash maps that fit.
-      // Interleaved A/B over the 12 join-heavy queries: 8.83/8.27 s
-      // (SMJ) vs 7.67/7.85 s (SHJ allowed); biggest movers q_tpch_q18
-      // 1.41→1.25, q9 1.13→1.02, q21 1.08→0.99; no query worse than
-      // +0.07. Plans only — results identical.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      // The driver's testdata is ONE flat file per table; at sf>=1 the
-      // fact file passes the default 128 MB split size and a whole scan
-      // would become a single task. Split size is the lever a real
-      // cluster tunes so file count × split size covers its cores;
-      // SPARK_GRAFT_SPLIT_MB overrides for big-SF evidence runs (scan
-      // parallelism is additionally capped by the file's row-group
-      // count — ScaleGen writes 4 MB blocks for exactly that reason).
-      // Default stays 16 MB: at sf0.1 (11 MB lineitem, ~1 MB row
-      // groups) finer splits measured a consistent LOSS — 11 tasks ×
-      // (footer parse + reader init + noop-commit) exceeds the row
-      // work they parallelize. Fixed costs win below ~100 MB inputs.
-      .config("spark.sql.files.maxPartitionBytes",
-        s"${splitMb * 1024 * 1024}")
-      .config("spark.sql.files.openCostInBytes", s"${256 * 1024}")
+    val spark = Session.builder("graft-bench", splitMb = Session.splitMb())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM (codegen, parquet reader, shuffle paths) on the tiny SF
@@ -159,8 +107,7 @@ object Bench {
       q.awaitTermination()
     }
 
-    val selected = SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = Mains.selectedQueries
 
     // Setup pass: build KV scratch tables untimed; the timed pass below
     // then reuses them (measuring reads, not table construction).
@@ -199,10 +146,9 @@ object Bench {
       df.write.format("noop").mode("overwrite").save()
 
     val metrics = new TaskMetricListener
-    if (metricsOn) spark.sparkContext.addSparkListener(metrics)
+    spark.sparkContext.addSparkListener(metrics)
     def flush(): Unit =
-      if (metricsOn)
-        org.apache.spark.graftbridge.ListenerFlush(spark.sparkContext)
+      org.apache.spark.graftbridge.ListenerFlush(spark.sparkContext)
 
     var shufW = Map.empty[String, Long]
     var shufR = Map.empty[String, Long]
@@ -280,10 +226,6 @@ object Bench {
         .takeWhile(_ != null).take(6).flatMap(resolve(_).iterator)
         .nextOption().getOrElse("unknown")
     }
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val medians = results.map { case (k, ts) =>
       k -> (if (ts.exists(_ < 0)) -1.0 else median(ts))
     }

@@ -1,0 +1,30 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Helpers the command-line mains share. */
+object Mains {
+
+  /** JSON string literal: quote, backslash and ALL control chars
+    * (< 0x20) escaped — a tab or CR in builder-authored SQL would
+    * otherwise make a reader's json.load fail. */
+  def jstr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** `SparkEntry.queries`, narrowed to the comma-separated names in
+    * SPARK_GRAFT_ONLY when it is set (fast local iteration; gate runs
+    * leave it unset and get every query). */
+  def selectedQueries: Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
+      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
+      case None => SparkEntry.queries
+    }
+}

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.kv.{KvField, KvSchema, KvTable, SinkMode}
@@ -45,12 +44,8 @@ object RetryProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
+    val spark = Session.builder("graft-retry-probe", cores = 8)
       .master("local[8, 4]")
-      .appName("graft-retry-probe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up replicator for the driver's testdata: builds an sf(0.1×F)
@@ -69,15 +69,7 @@ object ScaleGen {
     // 26: alphabet rotations (dim mode leaves documents untouched)
     require(factor >= 1 && factor <= (if (dimMode) 64 else 26),
       s"factor must be in [1,${if (dimMode) 64 else 26}]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder("graft-scalegen").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(dstDir))
 

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+
+import Mains.jstr
 
 /** Degradation probe for the SKEWED replicas (`ScaleGen ... skew`):
   * runs the shuffle-heavy + LSH/blocking query families and reports,
@@ -31,14 +32,7 @@ object SkewProbe {
     * knobs documented. Prints one JSON line; exits nonzero if the final
     * adaptive plan contains no skew=true shuffle join. */
   private def aqeDemo(sfDir: String): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-aqe-skew-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = Session.builder("graft-aqe-skew-demo", cores = 8)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m")
       .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
@@ -83,19 +77,7 @@ object SkewProbe {
     val sfDir = args(0)
     if (args.length > 1 && args(1) == "aqedemo") { aqeDemo(sfDir); return }
     val names = if (args.length > 1) args(1).split(",").toSeq else DefaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-skewprobe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.files.maxPartitionBytes",
-        s"${sys.env.getOrElse("SPARK_GRAFT_SPLIT_MB", "1").toInt * 1024 * 1024}")
+    val spark = Session.builder("graft-skewprobe", splitMb = Session.splitMb(1))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -116,8 +98,6 @@ object SkewProbe {
                              exception: Exception): Unit = ()
     })
 
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\")
-      .replace("\"", "\\\"") + "\""
     var failures = 0
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

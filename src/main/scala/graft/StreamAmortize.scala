@@ -4,12 +4,13 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.DecimalType
 
 import graft.kv.{KvSchema, KvTable, SinkMode}
+import Mains.jstr
 
 /** Streaming fixed-cost amortization probe.
   *
@@ -43,23 +44,12 @@ object StreamAmortize {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/repo/target/scale/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val chunks = sys.env.getOrElse("SPARK_GRAFT_CHUNKS", "8").toInt
     val outFile = sys.env.getOrElse("SPARK_GRAFT_AMORTIZE_OUT",
       "/root/repo/target/stream_amortize.json")
     val scratch = "/root/repo/target/amortize"
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-amortize")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .getOrCreate()
+    val spark = Session.builder("graft-stream-amortize").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Split a source table into `chunks` equal files — each becomes one
@@ -232,7 +222,6 @@ object StreamAmortize {
     // ---- report ----
     def median(xs: Seq[Double]): Double =
       if (xs.isEmpty) 0.0 else xs.sorted.apply(xs.length / 2)
-    def jstr(s: String) = "\"" + s + "\""
 
     println(f"%n${"shape"}%-12s ${"b1_sec"}%8s ${"steady_med"}%10s " +
       f"${"steady_n"}%8s ${"rows/batch"}%10s ${"final_sec"}%9s")

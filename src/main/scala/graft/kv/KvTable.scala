@@ -1019,22 +1019,19 @@ object KvTable {
     val w = current.write.mode("overwrite")
     (if (buckets > 0) w.partitionBy(BucketCol) else w).parquet(tmp)
     // A dynamic-partitioned write of an EMPTY collapse (every key
-    // tombstoned) emits NO files at all — unreadable. Rewrite the
-    // generation unpartitioned (one empty schema-bearing file) and
-    // drop the bucket layout: an empty table has no regions (found by
-    // the KvLifecycleProps random-op sequences).
-    val effBuckets = {
-      def hasParquet: Boolean = {
-        val it = f.listFiles(new HPath(tmp), true)
-        var found = false
-        while (!found && it.hasNext)
-          found = it.next().getPath.getName.endsWith(".parquet")
-        found
-      }
-      if (buckets > 0 && !hasParquet) {
-        current.drop(BucketCol).write.mode("overwrite").parquet(tmp)
-        0
-      } else buckets
+    // tombstoned) emits NO files at all — unreadable (found by the
+    // KvLifecycleProps random-op sequences). Write one empty
+    // schema-bearing file into bucket 0 instead, so the table keeps its
+    // bucket layout and row-level ops still run on it after the
+    // compaction that asked for that layout (found by KvRowLevelProps).
+    if (buckets > 0) {
+      val it = f.listFiles(new HPath(tmp), true)
+      var hasParquet = false
+      while (!hasParquet && it.hasNext)
+        hasParquet = it.next().getPath.getName.endsWith(".parquet")
+      if (!hasParquet)
+        current.drop(BucketCol).write.mode("overwrite")
+          .parquet(s"$tmp/$BucketCol=0")
     }
     if (f.exists(new HPath(old)))
       require(f.delete(new HPath(old), true),
@@ -1047,7 +1044,7 @@ object KvTable {
       throw new java.io.IOException(
         s"KvTable $path: compaction could not publish $tmp; old data restored")
     }
-    writeMeta(spark, path, lastVersion, effBuckets)
+    writeMeta(spark, path, lastVersion, buckets)
     f.delete(new HPath(old), true)
     // compaction replaced every file: rebuild the stats manifest
     // (base + segments) from scratch

@@ -41,7 +41,7 @@ object Png {
   // One zlib codec pair per thread, reset() per use: constructing a
   // Deflater/Inflater allocates NATIVE zlib state, and at one
   // allocation per image that init was the dominant constant of the
-  // ICO gate's PNG arm (graft.tools.IcoArmProbe measured the split).
+  // ICO gate's PNG arm (per-arm split measured in SCALING_r11.md §3).
   // reset() restores the exact initial parameters, so the emitted
   // deflate stream is byte-identical to a fresh instance's — the
   // encode-determinism pins (PngSpec, oracle hashes) are unaffected.

@@ -635,8 +635,8 @@ object RelationalQueries {
         // 'status' entry IS o_orderstatus, null-for-null), but the
         // generator barrier hid it from pushdown so the scan read every
         // order row. The raw-column spelling reaches PushedFilters;
-        // every map function above is untouched (MapFuncsProbe pins
-        // row equality at sf0.1).
+        // every map function above is untouched (row equality at sf0.1:
+        // OPTIMIZATION_r12.md item 11).
         .filter(col("o_orderstatus") === "O")
         // sort FIRST, derive after: the range partitioner's sample pass
         // re-executes the sort's child, so projecting the interpreted

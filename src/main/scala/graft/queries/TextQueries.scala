@@ -538,7 +538,8 @@ object TextQueries {
     // (one byte pass per doc) instead of explode -> groupBy(doc, token)
     // — the (doc, token) exchange + hash aggregate over every token
     // occurrence is gone; the exploded (doc, token, tf) rows are the
-    // identical multiset (TfidfProbe pins row equality at 3 SFs).
+    // identical multiset (row equality at 3 SFs: OPTIMIZATION_r12.md
+    // item 5a).
     // Shape at scale: one tokenize pass per consumer, df aggregates the
     // already-counted rows (partial-agg collapses to the vocab
     // map-side), and the df join back is broadcast when the vocab

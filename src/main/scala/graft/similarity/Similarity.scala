@@ -148,7 +148,8 @@ object Similarity {
     //    tie-break (rows arrive id-sorted, so first-wins == lowest id),
     //    the same total order Spark's row_number gave.
     // Output proven bit-identical to the unrolled form at 3 SFs
-    // (MmrProbe) and oracle-gated; the DuckDB CTE mirror is unchanged.
+    // (OPTIMIZATION_r12.md item 3) and oracle-gated; the DuckDB CTE
+    // mirror is unchanged.
     // At any scale the shuffle carries only qid-pool rows, as before —
     // minus the 7 materialization barriers.
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}

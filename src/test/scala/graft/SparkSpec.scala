@@ -3,19 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM under Test/fork). */
+/** Shared local session for all suites (one JVM under Test/fork), on
+  * the bench's session confs so plan pins hold for what the bench runs. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.sources.v2.bucketing.enabled", "true")
-    .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    .getOrCreate()
+  val cores = 4
+
+  lazy val spark: SparkSession =
+    graft.Session.builder("graft-test", cores = cores).getOrCreate()
 
   graft.functions.Native.register(spark)
 

@@ -92,6 +92,25 @@ class KvRowLevelSpec extends SparkSpec {
     spark.sql("DROP TABLE cat_rl.m2")
   }
 
+  test("a bucketed compaction of a table with no live rows keeps the " +
+      "bucket layout, so row-level ops still run on it") {
+    val path = makeTable("e1", None)
+    spark.sql("DELETE FROM cat_rl.e1 WHERE k IN ('a', 'b', 'c', 'd')")
+    spark.sql("CALL cat_rl.system.compact('e1', 2)")
+    assert(live("e1", path).count() === 0)
+    spark.sql("DELETE FROM cat_rl.e1 WHERE n >= 15")
+    spark.sql("UPDATE cat_rl.e1 SET n = n + 1 WHERE v = '1'")
+    Seq(("a", "A", 1L)).toDF("k", "v", "n").createOrReplaceTempView("src_e1")
+    spark.sql(
+      """MERGE INTO cat_rl.e1 t USING src_e1 s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET v = s.v, n = s.n
+        |WHEN NOT MATCHED THEN INSERT (k, v, n) VALUES (s.k, s.v, s.n)
+        |""".stripMargin)
+    assert(live("e1", path).as[(String, String, Long)].collect() ===
+      Array(("a", "A", 1L)))
+    spark.sql("DROP TABLE cat_rl.e1")
+  }
+
   test("row-level ops on an unbucketed table fail with compaction guidance") {
     makeTable("u2", None)
     val e = intercept[Exception] {

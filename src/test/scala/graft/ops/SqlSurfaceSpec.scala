@@ -55,12 +55,7 @@ class SqlSurfaceSpec extends SparkSpec {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .appName("graft-ext-probe")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
+      val s2 = graft.Session.builder("graft-ext-probe", cores = 2)
         .withExtensions(new graft.GraftExtensions)
         .getOrCreate()
       assert(s2 ne spark, "probe session must be new or the test is vacuous")

@@ -16,6 +16,5 @@ done
 # "-Dspark.memory.fraction=0.3") — SparkSession.builder picks spark.*
 # system properties up, the lever for the constrained-memory campaigns.
 exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   ${EXTRA_SPARK_OPTS:-} \
   -cp "$CLASSES:/opt/spark/jars/*" graft.Bench > "$OUT.log" 2>&1
