@@ -650,10 +650,6 @@ object KvDdl {
     require(logical.fieldNames.contains(kv.keyField),
       s"kvtable: key '${kv.keyField}' missing from declared columns")
     val f = new HPath(path).getFileSystem(conf)
-    // the empty data dir makes the v1 parquet read path hit
-    // UNABLE_TO_INFER_SCHEMA (handled: empty DF with the manifest
-    // schema) instead of PATH_NOT_FOUND on a freshly created table
-    f.mkdirs(new HPath(s"$path/data"))
     val out = f.create(new HPath(s"$path/_kvschema.json"), true)
     try out.write(kv.toJson.getBytes("UTF-8")) finally out.close()
     KvV2Util.writeMeta(path, conf, version = 0L, buckets = 0)

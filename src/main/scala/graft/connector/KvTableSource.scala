@@ -62,8 +62,8 @@ import org.apache.spark.util.SerializableConfiguration
   * Supported column types: string, binary, boolean, int, long, double,
   * float, and timestamps in BOTH physical parquet encodings — INT64
   * micros (the V2 writer's output) and INT96 nanos+julian-day (what
-  * Spark's own parquet writer emits by default, i.e. every v1-written
-  * table) — decoded per file.
+  * Spark's own parquet writer emits by default, i.e. every file a
+  * compaction wrote) — decoded per file.
   */
 class KvTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "kvtable"
@@ -166,7 +166,7 @@ class KvBatchTable(path: String, tableSchema0: StructType,
         val df = spark.createDataFrame(
           new util.ArrayList[org.apache.spark.sql.Row](rows.asJava),
           StructType(Seq(StructField(schema.keyField, keyType))))
-        graft.kv.KvTable.deleteV2(df, path, schema)
+        graft.kv.KvTable.delete(df, path, schema)
       case _ => () // empty key set: nothing to delete
     }
   }
@@ -743,7 +743,7 @@ object KvV2Util {
   /** The committed data files, path-sorted. Recursive (bucket-compacted
     * tables nest files under `__bucket=N/`), skipping what Spark's file
     * index skips: `.`-prefixed entries and `_`-prefixed ones without
-    * `=` — among them `_temporary/`, where a v1 write stages its attempt
+    * `=` — among them `_temporary/`, where a Spark write stages its attempt
     * files until the job commits. */
   def dataFiles(path: String, conf: Configuration): Seq[FileStatus] = {
     val dir = new HPath(s"$path/data")
@@ -885,7 +885,7 @@ object KvV2Util {
     case IntegerType | DateType => g.getInteger(idx, 0) // date = int days
     case LongType => g.getLong(idx, 0)
     case TimestampType =>
-      // physical encoding varies by writer: v1/Spark files use INT96,
+      // physical encoding varies by writer: Spark's (compaction) INT96,
       // the V2 writer INT64 micros — branch on the file's own type
       if (g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName == INT96)
         int96ToMicros(g.getInt96(idx, 0))

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{MessageType, Types}
@@ -30,8 +30,8 @@ import org.apache.spark.util.SerializableConfiguration
   * rename-free, abortable).
   *
   * Contract: the incoming rows are RAW log rows (key + values +
-  * `__version/__seq/__tombstone`) — `KvTable.writeV2` prepares them and
-  * passes the logical schema via the `kvschema` option.
+  * `__version/__seq/__tombstone`) — every `KvTable` mutation prepares
+  * them and passes the logical schema via the `kvschema` option.
   */
 class KvWriteBuilder(path: String, info: LogicalWriteInfo,
                      hadoopConf: Configuration)
@@ -83,8 +83,8 @@ class KvWriteBuilder(path: String, info: LogicalWriteInfo,
       // `df.write.format("kvtable")`) get them synthesized task-side:
       // one driver-assigned batch version for the whole job (the HBase
       // cell-timestamp analog KvTable.write computes), per-task monotone
-      // seq, tombstone=false. Prepared raw rows (KvTable.writeV2) carry
-      // explicit values and pass through untouched.
+      // seq, tombstone=false. Prepared raw rows (KvTable's mutations)
+      // carry explicit values and pass through untouched.
       val assignedVersion =
         KvV2Util.readMeta(path, hadoopConf)._1 + 1
       new KvBatchWrite(path, info.schema(), assignedVersion,
@@ -182,16 +182,16 @@ case class KvCommitMessage(files: Seq[String],
 
 /** Driver-side commit for the V2 sink.
   *
-  * CONCURRENCY CONTRACT — single writer per table: job commit
-  * read-modify-writes `_kvmeta.json` and the stats manifest with no
-  * cross-job coordination (exactly HBase's one-region-server-owns-a-
-  * region model, and the same contract Delta/Iceberg enforce with a
-  * log lock). Two concurrent appends could both compute `prevVer + 1`
-  * — the batches would then share one LWW version (ties decided by
-  * arbitrary seq) and the later manifest write would drop the earlier
-  * job's stats entries (correct but slow footer fallback on read).
-  * Serialize writes per table; concurrent READS are always safe
-  * (immutable files, atomic rename publish).
+  * CONCURRENCY CONTRACT — single writer per table (exactly HBase's
+  * one-region-server-owns-a-region model, and the same contract
+  * Delta/Iceberg enforce with a log lock): job commit read-modify-writes
+  * `_kvmeta.json` and the stats manifest under the table lock, but the
+  * LWW version is assigned at job start. `KvTable`'s mutations hold the
+  * lock across both; two plain SQL INSERTs or streaming queries
+  * appending at once could both compute `prevVer + 1` and share one
+  * version (ties decided by arbitrary seq). Serialize those per table;
+  * concurrent READS are always safe (immutable files, atomic rename
+  * publish).
   */
 class KvBatchWrite(path: String, schema: StructType,
                    assignedVersion: Long,
@@ -222,13 +222,14 @@ class KvBatchWrite(path: String, schema: StructType,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // Serialize the commit's meta + manifest read-modify-write against
-    // other committers (v1 writers hold the same lock across their whole
-    // job): a concurrent committer can no longer drop this job's
-    // manifest segment or race the counter bump. (The LWW version V2
-    // tasks stamp is still assigned at job START — concurrent V2
-    // appends serialize their metadata but may share a version; the
-    // single-writer contract below remains the guidance for strict
-    // cross-job LWW ordering.)
+    // other committers: a concurrent committer can no longer drop this
+    // job's manifest segment or race the counter bump. KvTable's
+    // mutations hold this lock from version allocation through this
+    // commit (which then runs inline), so their versions are distinct.
+    // Plain SQL INSERTs and streaming epochs take it only here — their
+    // version is assigned at job START, so two of them running at once
+    // may share a version; the single-writer contract below remains the
+    // guidance for strict cross-job LWW ordering there.
     graft.kv.TableLock.withLock(path, conf) {
     val fs = new HPath(path).getFileSystem(conf)
     // streaming epoch replay: if this (queryId, epochId) already
@@ -264,12 +265,13 @@ class KvBatchWrite(path: String, schema: StructType,
       val out = fs.create(new HPath(s"$path/_kvschema.json"), true)
       try out.write(json.getBytes("UTF-8")) finally out.close()
     }
-    // Publish task-extracted stats as ONE manifest segment: zero driver
-    // footer IO for the files THIS job wrote, O(new files) manifest
-    // bytes per commit. Pre-existing files missing from the manifest
-    // (legacy tables) are back-filled into the same segment, once. A
-    // truncating write rewrites the base whole (dropping segments) —
-    // the old entries describe deleted files.
+    // Publish task-extracted stats as ONE manifest segment (folded into
+    // the base every KvStats.foldThreshold segments): zero driver footer
+    // IO for the files THIS job wrote, O(new files) manifest bytes per
+    // commit. Pre-existing files missing from the manifest (legacy
+    // tables) are back-filled into the same segment, once. A truncating
+    // write rewrites the base whole (dropping segments) — the old
+    // entries describe deleted files.
     val newStats = messages.toSeq.flatMap {
       case KvCommitMessage(_, stats, _) => stats
       case _ => Seq.empty
@@ -280,20 +282,15 @@ class KvBatchWrite(path: String, schema: StructType,
     if (truncate)
       KvStats.write(path, KvStats.Manifest(schemaStr, newStats), conf)
     else {
+      val prior = KvStats.read(path, conf)
       val priorByRel: Map[String, KvStats.FileStat] =
-        KvStats.read(path, conf).map(_.files.map(f => f.path -> f).toMap)
-          .getOrElse(Map.empty)
+        prior.map(_.files.map(f => f.path -> f).toMap).getOrElse(Map.empty)
       val backfill = preExisting.flatMap { f =>
         val rel = KvStats.relativize(path, f.getPath, conf)
         if (priorByRel.get(rel).exists(_.len == f.getLen)) None
         else Some(KvStats.fromFooter(f.getPath, rel, f.getLen, conf))
       }
-      if (priorByRel.isEmpty)
-        KvStats.write(path,
-          KvStats.Manifest(schemaStr, backfill ++ newStats), conf)
-      else
-        KvStats.writeSegment(path,
-          KvStats.Manifest(schemaStr, backfill ++ newStats), conf)
+      KvStats.append(path, schemaStr, prior, backfill ++ newStats, conf)
     }
     // bump the batch counter; preserve an existing bucket layout marker
     // UNLESS this write truncated the table (a truncating write resets
@@ -331,7 +328,7 @@ class KvWriterFactory(path: String, schema: StructType,
 /** Per-task buffered writer. Rows carrying a `__bucket` column are
   * routed to per-bucket files under `data/__bucket=N/` (the column is a
   * DIRECTORY coordinate, excluded from the parquet schema — the same
-  * layout the v1 `partitionBy` writer produces), so appends to a
+  * layout compaction's `partitionBy` writer produces), so appends to a
   * bucket-compacted table stay bucket-aligned. Rows WITHOUT the column
   * are routed by hashing the rowkey when the table is bucket-compacted
   * (`routeBuckets` > 0, from the meta at job start) — so a plain SQL
@@ -455,8 +452,13 @@ class KvDataWriter(path: String, schema: StructType,
     val sub = if (bucket >= 0) s"${KvV2Util.BucketCol}=$bucket/" else ""
     val staged = s"$path/.staging/$sub$name"
     val file = s"$path/data/$sub$name"
+    // row-group and page sizes from the write's configuration, as
+    // Spark's own parquet writer takes them (same defaults)
     (staged, file, ExampleParquetWriter.builder(new HPath(staged))
-      .withConf(conf).withType(messageType).build())
+      .withConf(conf).withType(messageType)
+      .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
+      .withPageSize(ParquetOutputFormat.getPageSize(conf))
+      .build())
   })
 
   override def write(row: InternalRow): Unit = {

@@ -18,8 +18,8 @@ import org.apache.spark.sql.sources._
   * region metadata once from the master (`TableInputFormatWrap.java:46`);
   * here the stats are persisted AT WRITE TIME (V2 writer tasks extract
   * their own file's stats and ship them in the commit message — zero
-  * driver footer IO; the v1 parquet path back-fills incrementally,
-  * reading only footers of files not yet in the manifest) and planning
+  * driver footer IO; compaction back-fills incrementally, reading only
+  * footers of files not yet in the manifest) and planning
   * reads one small base JSON plus at most [[foldThreshold]] append
   * segments (see the segmented-layout note at the manifest IO section).
   *
@@ -49,8 +49,8 @@ object KvStats {
     * `bloom` is an optional base64 rowkey bloom filter (see [[KvBloom]])
     * computed task-side by the V2 writer while the file streamed through
     * it — the HBase per-store-file bloom: point gets skip whole files
-    * whose bloom excludes the key. Absent on v1/compaction-written
-    * files (footer extraction never sees row values); blooms matter
+    * whose bloom excludes the key. Absent on compaction-written files
+    * (footer extraction never sees row values); blooms matter
     * exactly for the many-small-append phase BEFORE compaction, which
     * is when point reads touch the most files. */
   /** `sorted` records that the file's rows are ascending in the rowkey
@@ -72,7 +72,7 @@ object KvStats {
   // ---- footer extraction (the only place stats are computed) ----
 
   /** Extract a [[FileStat]] from a file's parquet footer. Called by V2
-    * writer TASKS on their own output and by the v1 back-fill for new
+    * writer TASKS on their own output and by the back-fill for new
     * files only. */
   def fromFooter(file: HPath, relPath: String, len: Long,
                  conf: Configuration): FileStat = {
@@ -341,15 +341,32 @@ object KvStats {
     else full
   }
 
-  /** Incremental back-fill for files written OUTSIDE the V2 writer (the
-    * v1 parquet append path and compaction): reads footers ONLY for
-    * files not already present (or changed length) and persists them as
-    * ONE new segment — O(new files) footer IO and O(new files) manifest
-    * bytes per append, independent of table size. A high-frequency
-    * appender (streaming `foreachBatch`) therefore pays a small constant
-    * manifest cost per micro-batch. Every [[foldThreshold]] appends the
-    * segments fold into the base (which also drops entries for deleted
-    * files); a missing manifest writes the base directly. */
+  /** Record the stats of files just added to the log: ONE new segment
+    * holding `added`, or — when there is no manifest yet or the segment
+    * count has reached [[foldThreshold]] — a fold of everything into one
+    * base keyed to the CURRENT file listing, which also drops entries
+    * for deleted files. The one segment-or-fold decision, shared by the
+    * V2 commit (batch and streaming) and [[refresh]]. A listed file that
+    * neither `added` nor `prior` describes (at its current length) gets
+    * its entry from the footer. */
+  def append(path: String, schema: String, prior: Option[Manifest],
+             added: Seq[FileStat], conf: Configuration): Unit =
+    if (prior.isEmpty || segmentFiles(path, conf).size >= foldThreshold) {
+      val known = (prior.toSeq.flatMap(_.files) ++ added)
+        .map(f => f.path -> f).toMap
+      val entries = KvV2Util.dataFiles(path, conf).map { f =>
+        val rel = relativize(path, f.getPath, conf)
+        known.get(rel).filter(_.len == f.getLen)
+          .getOrElse(fromFooter(f.getPath, rel, f.getLen, conf))
+      }
+      write(path, Manifest(schema, entries), conf)
+    } else if (added.nonEmpty)
+      writeSegment(path, Manifest(schema, added), conf)
+
+  /** Incremental back-fill for files written OUTSIDE the V2 writer
+    * (compaction): reads footers ONLY for files not already present (or
+    * changed length) and records them through [[append]] — O(new files)
+    * footer IO and manifest bytes, independent of table size. */
   def refresh(path: String, conf: Configuration,
               keySorted: Boolean = false): Unit = {
     val files = KvV2Util.dataFiles(path, conf)
@@ -359,21 +376,12 @@ object KvStats {
     val schemaStr = prior.map(_.schema).filter(_.nonEmpty)
       .orElse(files.headOption.map(f => KvV2Util.footerSchema(f, conf).toString))
       .getOrElse("")
-    val fresh: Map[String, FileStat] = files.flatMap { f =>
+    val fresh = files.flatMap { f =>
       val rel = relativize(path, f.getPath, conf)
       if (existing.get(rel).exists(_.len == f.getLen)) None
-      else Some(rel ->
-        fromFooter(f.getPath, rel, f.getLen, conf).copy(sorted = keySorted))
-    }.toMap
-    if (prior.isEmpty || segmentFiles(path, conf).size >= foldThreshold) {
-      // fold: one whole manifest keyed to the CURRENT file listing
-      val entries = files.map { f =>
-        val rel = relativize(path, f.getPath, conf)
-        fresh.getOrElse(rel, existing(rel))
-      }
-      write(path, Manifest(schemaStr, entries), conf)
-    } else if (fresh.nonEmpty)
-      writeSegment(path, Manifest(schemaStr, fresh.values.toSeq), conf)
+      else Some(fromFooter(f.getPath, rel, f.getLen, conf).copy(sorted = keySorted))
+    }
+    append(path, schemaStr, prior, fresh, conf)
   }
 }
 

@@ -28,15 +28,17 @@ object SinkMode {
   * deletes, APPEND/REPLACE lifecycle.
   *
   * Storage model (log-structured, like HBase's MemStore+HFile flow):
-  * every write APPENDS immutable parquet files under `<path>/data/`
-  * carrying three engine columns — `__version` (writer-assigned batch
+  * every mutation APPENDS immutable parquet files under `<path>/data/`
+  * through the one `format("kvtable")` writer (graft.connector), with
+  * three engine columns — `__version` (writer-assigned batch
   * number or user-supplied column, e.g. an event time), `__seq`
   * (intra-batch tiebreak), `__tombstone` (delete marker). The read view
   * collapses to last-write-wins per key with a single partial-aggregating
   * shuffle: `groupBy(key).agg(max_by(struct(*), struct(version, seq)))`.
   *
   * Scale notes (100 TB): appends are pure file adds (no read-modify-write,
-  * no shuffle on the write path beyond what the producing query needs);
+  * no shuffle on the write path beyond what the producing query needs,
+  * except the one clustering shuffle into a bucketed table's buckets);
   * the LWW read is one hash aggregation with map-side partial combine —
   * Spark's partial `max_by` keeps only one row per key per input
   * partition before the shuffle, so shuffle volume is bounded by
@@ -118,42 +120,28 @@ object KvTable {
     // two concurrent appends can no longer both compute prevVer + 1
     // (which would collapse their LWW ordering to arbitrary seq ties).
     TableLock.withLock(path, KvHadoopConf(spark)) {
-      writeLocked(df, path, schema, mode, versionFrom)
+      mode match {
+        case SinkMode.Keep if exists(spark, path) =>
+          throw new IllegalStateException(s"KvTable $path exists and mode is Keep")
+        case SinkMode.Replace => drop(spark, path) // driver-only truncate
+        case _ => ()
+      }
+      val batch = readMetaVersion(spark, path) + 1
+      val version = versionFrom.getOrElse(lit(batch)).cast("long")
+      // Compute the version BEFORE projecting to the schema columns — it
+      // may reference input columns (e.g. an event-time) that the schema
+      // drops.
+      val out = df
+        .withColumn(VersionCol, version)
+        .select(schema.fieldNames.map(col) :+ col(VersionCol): _*)
+        // Intra-batch tiebreak: later rows win within one write, the HBase
+        // "last Put in the buffer wins" behavior. Partition-local ids are
+        // monotone in row order per partition; cross-partition ties are as
+        // undefined as they are in HBase.
+        .withColumn(SeqCol, monotonically_increasing_id())
+        .withColumn(TombstoneCol, lit(false))
+      append(out, path, schema, batch)
     }
-  }
-
-  /** [[write]]'s body without the lock, for compound mutations that hold
-    * the lock across a read-check-write span ([[checkAndPut]]). */
-  private def writeLocked(df: DataFrame, path: String, schema: KvSchema,
-                          mode: SinkMode,
-                          versionFrom: Option[Column]): Unit = {
-    val spark = df.sparkSession
-    mode match {
-      case SinkMode.Keep if exists(spark, path) =>
-        throw new IllegalStateException(s"KvTable $path exists and mode is Keep")
-      case SinkMode.Replace => drop(spark, path) // driver-only truncate
-      case _ => ()
-    }
-    if (exists(spark, path)) {
-      val existing = readSchema(spark, path)
-      require(existing == schema,
-        s"KvTable $path schema mismatch: $existing vs $schema")
-    }
-    val batch = readMetaVersion(spark, path) + 1
-    val version = versionFrom.getOrElse(lit(batch)).cast("long")
-    // Compute the version BEFORE projecting to the schema columns — it may
-    // reference input columns (e.g. an event-time) that the schema drops.
-    val cols = schema.fieldNames.map(col)
-    val out = df
-      .withColumn(VersionCol, version)
-      .select(cols :+ col(VersionCol): _*)
-      // Intra-batch tiebreak: later rows win within one write, the HBase
-      // "last Put in the buffer wins" behavior. Partition-local ids are
-      // monotone in row order per partition; cross-partition ties are as
-      // undefined as they are in HBase.
-      .withColumn(SeqCol, monotonically_increasing_id())
-      .withColumn(TombstoneCol, lit(false))
-    appendRaw(out, path, schema, batch)
   }
 
   /** Conditional mutation — HBase `checkAndPut` as a batch CAS. Each
@@ -200,8 +188,8 @@ object KvTable {
         .drop("__kv_cur", "__kv_expected")
         .localCheckpoint() // evaluate the check BEFORE the append lands
       val applied = survivors.count()
-      if (applied > 0) writeLocked(survivors, path, schema,
-        SinkMode.Append, versionFrom)
+      if (applied > 0) write(survivors, path, schema, SinkMode.Append,
+        versionFrom)
       applied
     }
   }
@@ -238,7 +226,7 @@ object KvTable {
     // bucket count from meta to plan its clustered+sorted distribution.
     writeString(spark, schemaFile(path), schema.toJson)
     writeMeta(spark, path, 0L, buckets)
-    writeV2(df, path, schema, SinkMode.Append, versionFrom)
+    write(df, path, schema, SinkMode.Append, versionFrom)
   }
 
   /** Delete by key: append tombstone markers (`Delete` mutations,
@@ -255,21 +243,18 @@ object KvTable {
              version: Option[Long] = None): Unit = {
     val spark = keys.sparkSession
     TableLock.withLock(path, KvHadoopConf(spark)) {
-    require(exists(spark, path), s"KvTable $path does not exist")
-    val batch = version.getOrElse(readMetaVersion(spark, path) + 1)
-    // Tombstone rows must carry the TABLE's value types: parquet reads
-    // resolve the schema from an arbitrary file footer, so a marker file
-    // with differently-typed null columns would poison the whole log.
-    val dataSchema = readRaw(spark, path).schema
-    var out = keys.select(col(schema.keyField))
-    schema.valueFields.foreach { f =>
-      out = out.withColumn(f.name, lit(null).cast(dataSchema(f.name).dataType))
-    }
-    out = out
-      .withColumn(VersionCol, lit(batch))
-      .withColumn(SeqCol, monotonically_increasing_id())
-      .withColumn(TombstoneCol, lit(true))
-    appendRaw(out, path, schema, batch)
+      require(exists(spark, path), s"KvTable $path does not exist")
+      val batch = version.getOrElse(readMetaVersion(spark, path) + 1)
+      // Tombstone rows must carry the TABLE's value types: parquet reads
+      // resolve the schema from an arbitrary file footer, so a marker
+      // file with differently-typed null columns would poison the log.
+      val dataSchema = readRaw(spark, path).schema
+      val out = keys.select(col(schema.keyField) +: schema.valueFields.map(f =>
+          lit(null).cast(dataSchema(f.name).dataType).as(f.name)): _*)
+        .withColumn(VersionCol, lit(batch))
+        .withColumn(SeqCol, monotonically_increasing_id())
+        .withColumn(TombstoneCol, lit(true))
+      append(out, path, schema, batch)
     }
   }
 
@@ -284,27 +269,33 @@ object KvTable {
       lit(s"kvtable: null rowkey in '$keyField' — HBase rejects " +
         "null/empty row keys; filter them out before writing")).isNull)
 
-  private def appendRaw(df0: DataFrame, path: String, schema: KvSchema,
-                        batch: Long): Unit = {
-    val df = requireKeys(df0, schema.keyField)
-    val spark = df.sparkSession
+  /** The one append: prepared raw log rows (key, values and the engine
+    * columns) commit through the kvtable connector's writer. The caller
+    * holds the table lock, so the commit's own lock runs inline and
+    * nothing commits between the caller's version allocation and this
+    * publish. Bucketed tables stay aligned through the writer's declared
+    * distribution.
+    *
+    * The counter afterwards is max(counter before, `batch`): a given
+    * delete version may neither regress it nor sit above it. The commit
+    * adds one to the counter it finds, so a `batch` further ahead is set
+    * before the commit and one at or below the old counter is restored
+    * after it; a crash in between leaves the counter higher, never lower. */
+  private def append(rows: DataFrame, path: String, schema: KvSchema,
+                     batch: Long): Unit = {
+    val spark = rows.sparkSession
+    if (exists(spark, path)) {
+      val existing = readSchema(spark, path)
+      require(existing == schema,
+        s"KvTable $path schema mismatch: $existing vs $schema")
+    }
     val (prevVer, buckets) = readMeta(spark, path)
-    if (buckets > 0)
-      // bucketed layout: appends stay aligned with the compacted buckets
-      df.withColumn(BucketCol, pmod(hash(col(schema.keyField)), lit(buckets)))
-        .write.mode("append").partitionBy(BucketCol).parquet(dataDir(path))
-    else
-      df.write.mode("append").parquet(dataDir(path))
-    writeString(spark, schemaFile(path), schema.toJson)
-    // The meta counter must never regress: a caller-supplied delete
-    // version BELOW the current counter would otherwise let a later
-    // auto-versioned write reuse a version equal to existing live cells,
-    // demoting LWW to arbitrary seq ties.
-    writeMeta(spark, path, math.max(prevVer, batch), buckets)
-    // back-fill the stats manifest for the files this write added (the
-    // V2 write path extracts stats task-side instead; see KvStats)
-    graft.connector.KvStats.refresh(path,
-      KvHadoopConf(spark))
+    if (batch > prevVer + 1) writeMeta(spark, path, batch - 1, buckets)
+    requireKeys(rows, schema.keyField).write.format("kvtable")
+      .option("kvschema", schema.toJson)
+      .mode("append")
+      .save(path)
+    if (batch <= prevVer) writeMeta(spark, path, prevVer, buckets)
   }
 
   /** Restore a data dir stranded aside by a crash between [[swapData]]'s
@@ -332,13 +323,16 @@ object KvTable {
     * data dir with zero parquet files (nothing survives the collapse),
     * so schema inference fails — the stats manifest still remembers the
     * file layout, and an empty frame with that schema is the correct
-    * read (found by the KvLifecycleProps random-op sequences). */
+    * read (found by the KvLifecycleProps random-op sequences). A table
+    * whose appends so far held zero rows has no data dir at all and
+    * reads the same way. */
   def readRaw(spark: SparkSession, path: String): DataFrame =
     try spark.read.parquet(dataDir(path))
     catch {
       case e: org.apache.spark.sql.AnalysisException =>
         if (restoreIfStranded(spark, path)) spark.read.parquet(dataDir(path))
-        else if (e.getCondition == "UNABLE_TO_INFER_SCHEMA" && exists(spark, path)) {
+        else if ((e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
+            e.getCondition == "PATH_NOT_FOUND") && exists(spark, path)) {
           val schema = graft.connector.KvV2Util.inferSchema(path,
             KvHadoopConf(spark))
           spark.createDataFrame(
@@ -353,82 +347,16 @@ object KvTable {
   def read(spark: SparkSession, path: String): DataFrame =
     readRange(spark, path, None, None)
 
-  /** Write through the V2 connector's BatchWrite path instead of the
-    * parquet writer: per-task buffered files, driver-side commit, V2
-    * truncate for REPLACE. Same log layout — readable by both read
-    * paths. */
+  /** Alias of [[write]]. */
   def writeV2(df: DataFrame, path: String, schema: KvSchema,
               mode: SinkMode = SinkMode.Append,
-              versionFrom: Option[Column] = None): Unit = {
-    val spark = df.sparkSession
-    mode match {
-      case SinkMode.Keep if exists(spark, path) =>
-        throw new IllegalStateException(s"KvTable $path exists and mode is Keep")
-      case _ => ()
-    }
-    // Replace drops the old table, so only Append must match its schema
-    // (same contract as the v1 write path).
-    if (mode != SinkMode.Replace && exists(spark, path)) {
-      val existing = readSchema(spark, path)
-      require(existing == schema,
-        s"KvTable $path schema mismatch: $existing vs $schema")
-    }
-    val batch = readMetaVersion(spark, path) + 1
-    val version = versionFrom.getOrElse(lit(batch)).cast("long")
-    val out = df
-      .withColumn(VersionCol, version)
-      .select(schema.fieldNames.map(col) :+ col(VersionCol): _*)
-      .withColumn(SeqCol, monotonically_increasing_id())
-      .withColumn(TombstoneCol, lit(false))
-    rawV2Write(out, path, schema, mode)
-  }
+              versionFrom: Option[Column] = None): Unit =
+    write(df, path, schema, mode, versionFrom)
 
-  /** Delete by key through the V2 connector: the same writer dispatches
-    * Put-rows and Delete-tombstones (`TableOutputFormatWrap.java:79-84`'s
-    * single-writer mutation dispatch). Version-domain contract matches
-    * [[delete]]. */
+  /** Alias of [[delete]]. */
   def deleteV2(keys: DataFrame, path: String, schema: KvSchema,
-               version: Option[Long] = None): Unit = {
-    val spark = keys.sparkSession
-    require(exists(spark, path), s"KvTable $path does not exist")
-    val batch = version.getOrElse(readMetaVersion(spark, path) + 1)
-    val dataSchema = readRaw(spark, path).schema
-    var out = keys.select(col(schema.keyField))
-    schema.valueFields.foreach { f =>
-      out = out.withColumn(f.name, lit(null).cast(dataSchema(f.name).dataType))
-    }
-    out = out
-      .withColumn(VersionCol, lit(batch))
-      .withColumn(SeqCol, monotonically_increasing_id())
-      .withColumn(TombstoneCol, lit(true))
-    rawV2Write(out, path, schema, SinkMode.Append)
-  }
-
-  /** Shared V2 sink tail: bucket-compacted tables get the `__bucket`
-    * routing column (same murmur3 bucketing as the v1 path — the writer
-    * turns it into `__bucket=N/` directories), then the connector's
-    * BatchWrite stages, publishes and commits.
-    *
-    * Bucketed appends REPARTITION by `__bucket` first (mirroring
-    * `compactBucketed`): each task then writes few buckets instead of
-    * holding one open ParquetWriter — a full row-group buffer each —
-    * per bucket it happens to see, which for a large bucket count would
-    * multiply task memory by the bucket fan-out. */
-  private def rawV2Write(out1: DataFrame, path: String, schema: KvSchema,
-                         mode: SinkMode): Unit = {
-    val out0 = requireKeys(out1, schema.keyField)
-    // Bucket alignment needs no explicit repartition here: the V2 Write
-    // declares its distribution (RequiresDistributionAndOrdering —
-    // clustered by rowkey into exactly `buckets` partitions, key-sorted),
-    // so Spark plans the single aligned shuffle and each task writes one
-    // bucket directory via KeyBucketer. Declaring it once in the
-    // connector covers every append path (this one, SQL INSERT, delta
-    // mutations, streaming epochs) instead of only this API call.
-    out0.write.format("kvtable")
-      .option("kvschema", schema.toJson)
-      .mode(if (mode == SinkMode.Replace) "overwrite" else "append")
-      .save(path)
-  }
+               version: Option[Long] = None): Unit =
+    delete(keys, path, schema, version)
 
   /** LWW view over the custom V2 connector (`format("kvtable")`,
     * graft.connector) instead of the built-in parquet source: same
@@ -644,14 +572,9 @@ object KvTable {
                                  schema: KvSchema, counterTo: Long): Unit = {
     val spark = raw.sparkSession
     TableLock.withLock(path, KvHadoopConf(spark)) {
-      if (exists(spark, path)) {
-        val existing = readSchema(spark, path)
-        require(existing == schema,
-          s"KvTable $path schema mismatch: $existing vs $schema")
-      }
       val cols = schema.fieldNames.map(col) :+
         col(VersionCol) :+ col(SeqCol) :+ col(TombstoneCol)
-      appendRaw(raw.select(cols: _*), path, schema, counterTo)
+      append(raw.select(cols: _*), path, schema, counterTo)
     }
   }
 
@@ -1036,7 +959,9 @@ object KvTable {
     if (f.exists(new HPath(old)))
       require(f.delete(new HPath(old), true),
         s"KvTable $path: could not clean stale $old")
-    if (!f.rename(new HPath(dataDir(path)), new HPath(old)))
+    // a table whose appends all held zero rows has no data dir to move
+    if (f.exists(new HPath(dataDir(path))) &&
+        !f.rename(new HPath(dataDir(path)), new HPath(old)))
       throw new java.io.IOException(
         s"KvTable $path: compaction could not move data aside")
     if (!f.rename(new HPath(tmp), new HPath(dataDir(path)))) {

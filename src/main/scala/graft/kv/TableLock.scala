@@ -21,6 +21,11 @@ import org.apache.hadoop.fs.{Path => HPath}
   * reads are safe under concurrent writes (immutable files published by
   * atomic rename).
   *
+  * Re-entrant per thread: a `withLock` on a table whose lock the
+  * calling thread already holds runs its body inline. `KvTable`'s
+  * mutations hold the lock from version allocation through the
+  * connector's commit, and that commit takes the same lock.
+  *
   * Cost: two filesystem metadata ops per mutation — invisible next to
   * the write job itself, including per-micro-batch streaming upserts.
   */
@@ -37,12 +42,19 @@ object TableLock {
   private val monitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  // qualified lock-file paths the current thread holds
+  private val held = new ThreadLocal[java.util.Set[String]] {
+    override def initialValue() = new java.util.HashSet[String]()
+  }
+
   def withLock[T](path: String, conf: Configuration,
                   waitMs: Long = 60000, staleMs: Long = 600000)(body: => T): T = {
     val lock = lockPath(path)
     val fs = lock.getFileSystem(conf)
+    val key = fs.makeQualified(lock).toString
+    if (held.get.contains(key)) return body
     if (lock.getParent != null) fs.mkdirs(lock.getParent)
-    val monitor = monitors.computeIfAbsent(path, _ => new Object)
+    val monitor = monitors.computeIfAbsent(key, _ => new Object)
     val deadline = System.currentTimeMillis() + waitMs
     var acquired = false
     while (!acquired) {
@@ -65,6 +77,7 @@ object TableLock {
           else Thread.sleep(50)
       }
     }
-    try body finally fs.delete(lock, false)
+    held.get.add(key)
+    try body finally { held.get.remove(key); fs.delete(lock, false) }
   }
 }

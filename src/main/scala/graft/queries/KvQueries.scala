@@ -338,11 +338,11 @@ object KvQueries {
       // bucket-compact, bucket-aligned upsert append, tombstone delete —
       // all through the V2 connector's single Put/Delete writer
       // (TableOutputFormatWrap.java:79-84).
-      KvTable.writeV2(c, path, schema, SinkMode.Replace)
+      KvTable.write(c, path, schema, SinkMode.Replace)
       KvTable.compactBucketed(s, path, buckets = 4)
-      KvTable.writeV2(c.filter(col("mktsegment") === "MACHINERY")
+      KvTable.write(c.filter(col("mktsegment") === "MACHINERY")
         .withColumn("name", upper(col("name"))), path, schema)
-      KvTable.deleteV2(c.filter(col("mktsegment") === "BUILDING")
+      KvTable.delete(c.filter(col("mktsegment") === "BUILDING")
         .select(col("rowkey")), path, schema)
     }
     path

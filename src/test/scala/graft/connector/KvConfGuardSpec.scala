@@ -76,4 +76,19 @@ class KvConfGuardSpec extends AnyFunSuite {
     assert(offenses.isEmpty, offenses.mkString("\n"))
     assert(files.exists(_.getFileName.toString == helper))
   }
+
+  test("KvTable appends only through the kvtable connector: no Spark " +
+    "parquet write into a table's data dir") {
+    val p = Paths.get("src/main/scala/graft/kv/KvTable.scala")
+    // comments blanked line for line, so the reported numbers are the file's
+    val lines = "(?s)/\\*.*?\\*/".r
+      .replaceAllIn(new String(Files.readAllBytes(p), "UTF-8"),
+        m => "\n" * m.matched.count(_ == '\n'))
+      .split("\n").toSeq.map(_.replaceAll("//.*", ""))
+    val writes = lines.zipWithIndex.collect {
+      case (line, i) if "(?<!read)\\.parquet\\(dataDir\\(".r
+          .findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+    }
+    assert(writes.isEmpty, writes.mkString("\n"))
+  }
 }

@@ -381,42 +381,60 @@ class KvTableSourceSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
-    val path = TestSpark.scratch("v2-seg-manifest")
     val schema = KvSchema.of("k", "n" -> ("f", "n"))
-    def segSizes: Seq[Long] = {
-      val d = Paths.get(KvStats.segDir(path))
-      if (!Files.isDirectory(d)) Seq.empty
-      else Files.list(d).iterator().asScala.toSeq
-        .filter(_.getFileName.toString.endsWith(".json")) // skip .crc files
-        .sortBy(_.getFileName.toString).map(Files.size(_))
+    // the same lifecycle for each appender: a batch write per append,
+    // and the streaming sink with one epoch commit per append
+    def check(label: String)(open: String => Seq[(String, Long)] => Unit): Unit = {
+      val path = TestSpark.scratch(s"v2-seg-manifest-$label")
+      def segSizes: Seq[Long] = {
+        val d = Paths.get(KvStats.segDir(path))
+        if (!Files.isDirectory(d)) Seq.empty
+        else Files.list(d).iterator().asScala.toSeq
+          .filter(_.getFileName.toString.endsWith(".json")) // skip .crc files
+          .sortBy(_.getFileName.toString).map(Files.size(_))
+      }
+      KvTable.write(Seq(("a", 1L)).toDF("k", "n").coalesce(1),
+        path, schema, SinkMode.Replace) // first write -> base manifest
+      val append = open(path)
+      val appends = 6
+      (1 to appends).foreach(i => append(Seq((s"k$i", i.toLong))))
+      val sizes = segSizes
+      assert(sizes.length === appends, s"$label: one segment per append, got $sizes")
+      // each append's manifest write covers ONLY its own (single) new
+      // file: segment sizes must stay flat, not grow with accumulated
+      // file count
+      assert(sizes.max <= sizes.min * 2,
+        s"$label: segment sizes should be ~constant, got $sizes")
+      // merged view == full per-file coverage (every file has stats entries)
+      val merged = KvStats.read(path, conf).get
+      assert(merged.files.length === KvV2Util.dataFiles(path, conf).length)
+      // fold: lowering the threshold makes the next append compact segments
+      System.setProperty("graft.kvstats.foldSegments", "2")
+      try {
+        append(Seq(("zz", 99L)))
+        assert(segSizes.isEmpty, s"$label: fold must absorb all segments into the base")
+        val folded = KvStats.read(path, conf).get
+        assert(folded.files.length === KvV2Util.dataFiles(path, conf).length)
+      } finally System.clearProperty("graft.kvstats.foldSegments")
+      // the LWW view is intact through segment + fold lifecycles
+      assert(KvTable.read(spark, path).count() === appends + 2)
     }
-    KvTable.write(Seq(("a", 1L)).toDF("k", "n").coalesce(1),
-      path, schema, SinkMode.Replace) // first write -> base manifest
-    val appends = 6
-    (1 to appends).foreach { i =>
-      KvTable.write(Seq((s"k$i", i.toLong)).toDF("k", "n").coalesce(1),
-        path, schema, SinkMode.Append)
+    check("write") { path => rows =>
+      KvTable.write(rows.toDF("k", "n").coalesce(1), path, schema,
+        SinkMode.Append)
     }
-    val sizes = segSizes
-    assert(sizes.length === appends, s"one segment per append, got $sizes")
-    // each append's manifest write covers ONLY its own (single) new file:
-    // segment sizes must stay flat, not grow with accumulated file count
-    assert(sizes.max <= sizes.min * 2,
-      s"segment sizes should be ~constant, got $sizes")
-    // merged view == full per-file coverage (every file has stats entries)
-    val merged = KvStats.read(path, conf).get
-    assert(merged.files.length === KvV2Util.dataFiles(path, conf).length)
-    // fold: lowering the threshold makes the next append compact segments
-    System.setProperty("graft.kvstats.foldSegments", "2")
-    try {
-      KvTable.write(Seq(("zz", 99L)).toDF("k", "n").coalesce(1),
-        path, schema, SinkMode.Append)
-      assert(segSizes.isEmpty, "fold must absorb all segments into the base")
-      val folded = KvStats.read(path, conf).get
-      assert(folded.files.length === KvV2Util.dataFiles(path, conf).length)
-    } finally System.clearProperty("graft.kvstats.foldSegments")
-    // the LWW view is intact through segment + fold lifecycles
-    assert(KvTable.read(spark, path).count() === appends + 2)
+    implicit val sqlCtx = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(String, Long)]
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    try check("stream") { path =>
+      q = input.toDF().toDF("k", "n").writeStream.format("kvtable")
+        .option("kvschema", schema.toJson)
+        .option("checkpointLocation", s"$path-ckpt")
+        .outputMode("append")
+        .start(path)
+      rows => { input.addData(rows); q.processAllAvailable() }
+    } finally if (q != null) q.stop()
   }
 
   test("IN-list point lookup on a bucketed table prunes to the keys' " +
@@ -533,11 +551,25 @@ class KvTableSourceSpec extends SparkSpec {
   test("V2 scan decodes INT96 timestamps from v1-written (Spark-default) files") {
     val path = TestSpark.scratch("v2-int96")
     val schema = KvSchema.of("k", "t" -> ("f", "t"))
-    // v1 write path -> Spark parquet writer -> INT96 timestamp encoding
     KvTable.write(
       Seq(("a", "2021-03-15 12:34:56.789"), ("b", "1969-12-31 23:59:59.5"))
         .toDF("k", "ts").select($"k", $"ts".cast("timestamp").as("t")),
       path, schema, SinkMode.Replace)
+    // compaction rewrites through Spark's parquet writer, whose default
+    // timestamp encoding is INT96 — checked in the footer, so the test
+    // cannot silently read the connector's INT64 micros instead
+    KvTable.compact(spark, path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = KvV2Util.dataFiles(path, conf)
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val r = KvV2Util.openFooter(f.getPath, conf)
+      val fileSchema = r.getFooter.getFileMetaData.getSchema
+      try assert(fileSchema.getType(fileSchema.getFieldIndex("t"))
+        .asPrimitiveType().getPrimitiveTypeName ===
+        org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96)
+      finally r.close()
+    }
     val v1 = KvTable.read(spark, path).orderBy("k")
       .as[(String, java.sql.Timestamp)].collect()
     val v2 = KvTable.readV2(spark, path).orderBy("k")
@@ -609,9 +641,17 @@ class KvTableSourceSpec extends SparkSpec {
       .as[String].collect() === Array("odd33"))
     // IN-list over keys from both files keeps both
     assert(df.filter(col("k").isin("k0033", "k0034")).count() === 2)
-    // a v1-written file has NO bloom and must never be skipped
+    // a compaction-written file has NO bloom and must never be skipped,
+    // also next to a bloomed append that excludes the probed key
+    KvTable.compact(spark, path)
     KvTable.write(Seq(("k0501", "late")).toDF("k", "v"), path, schema)
+    val blooms = KvStats.read(path, spark.sparkContext.hadoopConfiguration)
+      .get.files.map(_.bloom.isDefined)
+    assert(blooms.contains(false) && blooms.contains(true),
+      s"bloom presence per file: $blooms")
     val df2 = spark.read.format("kvtable").load(path)
+    assert(df2.filter(col("k") === "k0034").select("v")
+      .as[String].collect() === Array("even34"))
     assert(df2.filter(col("k") === "k0501").select("v")
       .as[String].collect() === Array("late"))
     // tombstone safety: the delete's file bloom CONTAINS the key, so
@@ -654,9 +694,13 @@ class KvTableSourceSpec extends SparkSpec {
     val schema = KvSchema.of("k", "d" -> ("f", "d"))
     val rows = Seq(("k1", java.sql.Date.valueOf("2024-02-29")),
       ("k2", java.sql.Date.valueOf("1969-12-31")))
+    // the connector's writer, and Spark's parquet writer via compaction
     for (write <- Seq[(org.apache.spark.sql.DataFrame, String) => Unit](
       (df, p) => KvTable.write(df, p, schema, SinkMode.Replace),
-      (df, p) => KvTable.writeV2(df, p, schema, SinkMode.Replace))) {
+      (df, p) => {
+        KvTable.write(df, p, schema, SinkMode.Replace)
+        KvTable.compact(spark, p)
+      })) {
       write(rows.toDF("k", "d"), path)
       val got = graft.kv.KvTable.lwwView(
           spark.read.format("kvtable").load(path),
@@ -682,9 +726,13 @@ class KvTableSourceSpec extends SparkSpec {
     val schema = KvSchema.of("k", "small" -> ("f", "s"),
       "mid" -> ("f", "m"), "big" -> ("f", "b"))
 
+    // the connector's writer, and Spark's parquet writer via compaction
     for ((label, write) <- Seq[(String, (org.apache.spark.sql.DataFrame, String) => Unit)](
-      "v1" -> ((d, p) => KvTable.write(d, p, schema, SinkMode.Replace)),
-      "v2" -> ((d, p) => KvTable.writeV2(d, p, schema, SinkMode.Replace)))) {
+      "connector" -> ((d, p) => KvTable.write(d, p, schema, SinkMode.Replace)),
+      "compacted" -> ((d, p) => {
+        KvTable.write(d, p, schema, SinkMode.Replace)
+        KvTable.compact(spark, p)
+      }))) {
       val path = TestSpark.scratch(s"decimal-$label")
       write(df, path)
       val expect = rows.map { case (k, s, m, b) =>

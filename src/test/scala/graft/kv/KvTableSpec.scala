@@ -310,6 +310,46 @@ class KvTableSpec extends SparkSpec {
     assert(rows === Array(("1", "b", 2L)))
   }
 
+  test("a delete versioned ABOVE the meta counter raises it (later " +
+    "auto-versioned writes still dominate the tombstone)") {
+    for ((label, del, put) <- Seq[(String,
+        (DataFrame, String, Option[Long]) => Unit, (DataFrame, String) => Unit)](
+      ("delete", (k, p, v) => KvTable.delete(k, p, schema, v),
+        (d, p) => KvTable.write(d, p, schema)),
+      ("deleteV2", (k, p, v) => KvTable.deleteV2(k, p, schema, v),
+        (d, p) => KvTable.writeV2(d, p, schema)))) {
+      val path = TestSpark.scratch(s"kv-ver-ahead-$label")
+      KvTable.write(Seq(("a", "x", "X")).toDF("num", "lower", "upper"),
+        path, schema, SinkMode.Replace)
+      del(Seq("a").toDF("num"), path, Some(100L))
+      assert(KvTable.read(spark, path).count() === 0, label)
+      put(Seq(("a", "y", "Y")).toDF("num", "lower", "upper"), path)
+      val rows = KvTable.readVersions(spark, path, 1)
+        .select("num", "lower", "version").as[(String, String, Long)].collect()
+      assert(rows === Array(("a", "y", 101L)), label)
+    }
+  }
+
+  test("a zero-row append to a new table leaves it readable, " +
+    "compactable and deletable") {
+    for ((label, put) <- Seq[(String, (DataFrame, String, SinkMode) => Unit)](
+      "write" -> ((d, p, m) => KvTable.write(d, p, schema, m)),
+      "writeV2" -> ((d, p, m) => KvTable.writeV2(d, p, schema, m)))) {
+      val path = TestSpark.scratch(s"kv-empty-append-$label")
+      put(Seq.empty[(String, String, String)].toDF("num", "lower", "upper"),
+        path, SinkMode.Replace)
+      assert(KvTable.exists(spark, path), label)
+      assert(KvTable.read(spark, path).count() === 0, label)
+      KvTable.compact(spark, path)
+      assert(KvTable.read(spark, path).count() === 0, label)
+      KvTable.delete(Seq("1").toDF("num"), path, schema)
+      put(Seq(("2", "b", "B")).toDF("num", "lower", "upper"), path,
+        SinkMode.Append)
+      assert(KvTable.read(spark, path).select("num", "lower")
+        .as[(String, String)].collect() === Array(("2", "b")), label)
+    }
+  }
+
   test("minor compaction merges small files losslessly: raw log " +
     "identical, version history intact, large files untouched") {
     val path = TestSpark.scratch("kv-minor")
