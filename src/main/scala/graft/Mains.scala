@@ -22,9 +22,18 @@ object Mains {
     * SPARK_GRAFT_ONLY when it is set (fast local iteration; gate runs
     * leave it unset and get every query). */
   def selectedQueries: Map[String, (SparkSession, String) => DataFrame] =
-    sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
+    select(sys.env.get("SPARK_GRAFT_ONLY"), SparkEntry.queries)
+
+  /** `all`, narrowed to the comma-separated names in `only`. A name that
+    * is not in `all` fails, naming every unknown entry: a typo must not
+    * select nothing and report an empty run as a clean one. */
+  def select[Q](only: Option[String], all: Map[String, Q]): Map[String, Q] =
+    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
+      case Some(names) =>
+        val unknown = names.filterNot(all.contains)
+        require(unknown.isEmpty,
+          s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+        all.filter { case (n, _) => names(n) }
+      case None => all
     }
 }

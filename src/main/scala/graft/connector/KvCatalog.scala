@@ -9,6 +9,8 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -245,8 +247,8 @@ class KvCatalog extends TableCatalog with SupportsNamespaces
       throw new IllegalStateException(s"kvtable($path): no stats manifest"))
     val msg = org.apache.parquet.schema.MessageTypeParser
       .parseMessageType(manifest.schema)
-    val added = KvWriteUtil.toParquetSchema(
-      new StructType().add(name, dt)).getFields.get(0)
+    val added = new SparkToParquetSchemaConverter(SQLConf.get)
+      .convert(new StructType().add(name, dt)).getFields.get(0)
     val engine = Set(graft.kv.KvTable.VersionCol, graft.kv.KvTable.SeqCol,
       graft.kv.KvTable.TombstoneCol)
     val (front, back) = msg.getFields.asScala.toSeq
@@ -653,10 +655,10 @@ object KvDdl {
     val out = f.create(new HPath(s"$path/_kvschema.json"), true)
     try out.write(kv.toJson.getBytes("UTF-8")) finally out.close()
     KvV2Util.writeMeta(path, conf, version = 0L, buckets = 0)
-    val fileSchema = KvWriteUtil.fileSchema(logical, synth = true)
-    KvStats.write(path,
-      KvStats.Manifest(KvWriteUtil.toParquetSchema(fileSchema).toString,
-        Seq.empty), conf)
+    val fileSchema = KvWriteUtil.fileSchema(logical)
+    KvStats.write(path, KvStats.Manifest(
+      new SparkToParquetSchemaConverter(SQLConf.get).convert(fileSchema).toString,
+      Seq.empty), conf)
     fileSchema
   }
 }

@@ -14,8 +14,9 @@ import org.apache.spark.util.SerializableConfiguration
   * Building one is a copy of already-parsed properties; a bare
   * `new Configuration()` instead re-reads and re-parses Hadoop's XML
   * defaults. Callers build one per table, scan or write on the driver
-  * and reuse it. Tasks get it through [[broadcast]] (the way Spark's
-  * `ParquetScan` ships its configuration) and build none; code that
+  * and reuse it. Tasks get it as a broadcast — writes through
+  * [[broadcast]], reads through the one Spark's parquet reader makes —
+  * and build none; code that
   * must set a key takes a [[copy]] first, so the shared instance is
   * never mutated.
   */

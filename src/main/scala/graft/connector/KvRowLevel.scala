@@ -1,11 +1,8 @@
 package graft.connector
 
-import java.util
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -137,96 +134,71 @@ class KvLiveScan(path: String, fullSchema: StructType, required: StructType,
     require(!byBucket.contains(-1),
       s"kvtable($path): unbucketed files in a bucket-compacted table")
     byBucket.toArray.map { case (b, files) =>
-      KvBucketPartition(b, files.map(_.getPath.toString).toArray): InputPartition
+      KvBucketPartition(b, files.map(f => (f.getPath.toString, f.getLen)).toArray)
+        : InputPartition
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new KvLiveReaderFactory(path, fullSchema, required,
-      KvHadoopConf.broadcast(conf))
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val keyField = KvV2Util.readKeyField(path, conf).getOrElse(
+      throw new IllegalStateException(s"kvtable($path): no rowkey declared"))
+    // columns the collapse needs beyond the projection
+    val readFields = Seq(keyField, VersionCol, SeqCol, TombstoneCol)
+      .filterNot(required.fieldNames.contains)
+      .foldLeft(required) { (s, n) =>
+        s.add(fullSchema.fields.find(_.name == n).getOrElse(
+          StructField(n, if (n == TombstoneCol) BooleanType else LongType)))
+      }
+    new KvLiveReaderFactory(required, keyField, KvRowReader(readFields, conf))
+  }
 }
 
-case class KvBucketPartition(bucket: Int, files: Array[String])
+/** One bucket directory's files, as (path, length). */
+case class KvBucketPartition(bucket: Int, files: Array[(String, Long)])
     extends InputPartition
 
-class KvLiveReaderFactory(path: String, fullSchema: StructType,
-                          required: StructType,
-                          conf: Broadcast[SerializableConfiguration])
+class KvLiveReaderFactory(required: StructType, keyField: String,
+                          reader: KvRowReader)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new KvBucketLiveReader(path, partition.asInstanceOf[KvBucketPartition],
-      fullSchema, required, conf.value.value)
+    new KvBucketLiveReader(partition.asInstanceOf[KvBucketPartition],
+      required, keyField, reader)
 }
 
 /** Region-style bucket read: merge every file of the bucket, keep the
   * max-(version, seq) cell per key, drop tombstones, emit live rows
   * projected to `required`. */
-class KvBucketLiveReader(path: String, part: KvBucketPartition,
-                         fullSchema: StructType, required: StructType,
-                         conf: Configuration)
+class KvBucketLiveReader(part: KvBucketPartition, required: StructType,
+                         keyField: String, reader: KvRowReader)
     extends PartitionReader[InternalRow] {
 
-  private val keyField: String =
-    KvV2Util.readKeyField(path, conf).getOrElse(
-      throw new IllegalStateException(s"kvtable($path): no rowkey declared"))
+  private def idx(name: String) = reader.names.indexOf(name)
+  private val keyIdx = idx(keyField)
+  private val keyType = reader.fields(keyField).dataType
+  private val (verIdx, seqIdx, tombIdx) = (idx(VersionCol), idx(SeqCol), idx(TombstoneCol))
 
-  // columns the collapse needs beyond the projection
-  private val readFields: StructType = {
-    val names = required.fieldNames.toSet
-    var s = required
-    Seq(keyField, VersionCol, SeqCol, TombstoneCol).foreach { n =>
-      if (!names.contains(n))
-        s = s.add(fullSchema.fields.find(_.name == n).getOrElse(
-          StructField(n, if (n == TombstoneCol) BooleanType else LongType)))
-    }
-    s
-  }
-
-  private def fieldValue(g: org.apache.parquet.example.data.Group,
-                         name: String, dt: DataType): Any = {
-    if (!g.getType.containsField(name)) return null
-    val idx = g.getType.getFieldIndex(name)
-    if (g.getFieldRepetitionCount(idx) == 0) null
-    else KvV2Util.readValue(g, idx, dt)
-  }
+  private def long(r: InternalRow, i: Int): Long =
+    if (r.isNullAt(i)) 0L else r.getLong(i)
 
   private val live: Iterator[InternalRow] = {
-    // key -> (version, seq, values-in-readFields-order)
-    val best = new java.util.HashMap[Any, (Long, Long, Array[Any])]()
-    part.files.foreach { file =>
-      val reader = KvV2Util.groupReader(new HPath(file), conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          val vals = new Array[Any](readFields.length)
-          var i = 0
-          while (i < readFields.length) {
-            val f = readFields(i)
-            vals(i) =
-              if (f.name == KvV2Util.BucketCol) part.bucket
-              else fieldValue(g, f.name, f.dataType)
-            i += 1
-          }
-          val key = vals(readFields.fieldIndex(keyField))
-          val ver = vals(readFields.fieldIndex(VersionCol)) match {
-            case l: java.lang.Long => l.longValue(); case _ => 0L
-          }
-          val seq = vals(readFields.fieldIndex(SeqCol)) match {
-            case l: java.lang.Long => l.longValue(); case _ => 0L
-          }
-          val prev = best.get(key)
-          if (prev == null || ver > prev._1 ||
-              (ver == prev._1 && seq >= prev._2))
-            best.put(key, (ver, seq, vals))
-          g = reader.read()
+    // key -> (version, seq, row); the reader reuses its row buffers, so a
+    // row is copied when it is kept, and the raw key serves only lookups
+    val best = new java.util.HashMap[Any, (Long, Long, InternalRow)]()
+    part.files.foreach { case (file, len) =>
+      reader.open(file, 0L, len, len, part.bucket).foreach { r =>
+        val ver = long(r, verIdx)
+        val seq = long(r, seqIdx)
+        val prev = best.get(r.get(keyIdx, keyType))
+        if (prev == null || ver > prev._1 || (ver == prev._1 && seq >= prev._2)) {
+          val kept = r.copy()
+          best.put(kept.get(keyIdx, keyType), (ver, seq, kept))
         }
-      } finally reader.close()
+      }
     }
-    val tombIdx = readFields.fieldIndex(TombstoneCol)
-    val outIdx = required.fieldNames.map(readFields.fieldIndex)
-    best.values().iterator().asScala
-      .filter(e => e._3(tombIdx) != java.lang.Boolean.TRUE)
-      .map(e => new GenericInternalRow(outIdx.map(e._3)): InternalRow)
+    val out = reader.project(required)
+    best.values().iterator().asScala.map(_._3)
+      .filter(r => r.isNullAt(tombIdx) || !r.getBoolean(tombIdx))
+      .map { r => out.project(r); out: InternalRow }
   }
 
   private var current: InternalRow = _
@@ -262,9 +234,27 @@ class KvDeltaBatchWrite(path: String, tableSchema: StructType,
     StructType(tableSchema.fields.filterNot(_.name == KvV2Util.BucketCol)),
     assignedVersion, kvSchemaJson = None, truncate = false, conf)
 
+  private val keyField: String =
+    KvV2Util.readKeyField(path, conf).getOrElse(
+      throw new IllegalStateException(s"kvtable($path): no rowkey declared"))
+
+  // sink layout: key + data columns + engine columns; the sink writer
+  // routes each row to its key's bucket directory (KeyBucketer)
+  private val sinkSchema: StructType = {
+    val engineNames = Set(VersionCol, SeqCol, TombstoneCol, KvV2Util.BucketCol)
+    val incoming = writeSchema.fields.filterNot(f => engineNames(f.name))
+    val keyType = tableSchema.fields.find(_.name == keyField)
+      .map(_.dataType).getOrElse(StringType)
+    StructType(
+      if (incoming.exists(_.name == keyField)) incoming
+      else StructField(keyField, keyType, nullable = false) +: incoming)
+      .add(VersionCol, LongType).add(SeqCol, LongType)
+      .add(TombstoneCol, BooleanType)
+  }
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-    new KvDeltaWriterFactory(path, tableSchema, buckets, writeSchema,
-      assignedVersion, KvHadoopConf.broadcast(conf))
+    new KvDeltaWriterFactory(path, buckets, writeSchema, keyField, sinkSchema,
+      assignedVersion, KvWriteUtil.writeConf(conf, sinkSchema))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     inner.commit(messages)
@@ -272,41 +262,25 @@ class KvDeltaBatchWrite(path: String, tableSchema: StructType,
     inner.abort(messages)
 }
 
-class KvDeltaWriterFactory(path: String, tableSchema: StructType,
-                           buckets: Int, writeSchema: StructType,
+class KvDeltaWriterFactory(path: String, buckets: Int, writeSchema: StructType,
+                           keyField: String, sinkSchema: StructType,
                            assignedVersion: Long,
                            conf: Broadcast[SerializableConfiguration])
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new KvDeltaWriter(path, tableSchema, buckets, writeSchema,
+    new KvDeltaWriter(path, buckets, writeSchema, keyField, sinkSchema,
       assignedVersion, partitionId, taskId, conf.value.value)
 }
 
-class KvDeltaWriter(path: String, tableSchema: StructType, buckets: Int,
-                    writeSchema: StructType, assignedVersion: Long,
-                    partitionId: Int, taskId: Long, conf: Configuration)
+class KvDeltaWriter(path: String, buckets: Int, writeSchema: StructType,
+                    keyField: String, sinkSchema: StructType,
+                    assignedVersion: Long, partitionId: Int, taskId: Long,
+                    conf: Configuration)
     extends DeltaWriter[InternalRow] {
 
-  private val keyField: String =
-    KvV2Util.readKeyField(path, conf).getOrElse(
-      throw new IllegalStateException(s"kvtable($path): no rowkey declared"))
-  private val keyType: DataType =
-    tableSchema.fields.find(_.name == keyField)
-      .map(_.dataType).getOrElse(StringType)
-
-  private val engineNames =
-    Set(VersionCol, SeqCol, TombstoneCol, KvV2Util.BucketCol)
-
-  // sink layout: key + data columns + engine columns; the sink writer
-  // routes each row to its key's bucket directory (KeyBucketer)
-  private val dataFields: Array[StructField] = {
-    val incoming = writeSchema.fields.filterNot(f => engineNames(f.name))
-    if (incoming.exists(_.name == keyField)) incoming
-    else StructField(keyField, keyType, nullable = false) +: incoming
-  }
-  private val sinkSchema: StructType = StructType(dataFields)
-    .add(VersionCol, LongType).add(SeqCol, LongType)
-    .add(TombstoneCol, BooleanType)
+  private val keyType: DataType = sinkSchema(keyField).dataType
+  // the sink's key + data columns (the engine columns are its last three)
+  private val dataFields: Array[StructField] = sinkSchema.fields.dropRight(3)
   private val keyPos = dataFields.indexWhere(_.name == keyField)
   // incoming index per sink data field (-1 when the write schema lacks
   // it — only possible for DELETE-only plans, which never call put)

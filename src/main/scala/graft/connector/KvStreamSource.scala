@@ -58,11 +58,11 @@ class KvMicroBatchStream(path: String, required: StructType,
     }
   }
 
-  // one broadcast for the stream's life, not one per micro-batch
-  private lazy val sharedConf = KvHadoopConf.broadcast(conf)
+  // one reader (and its broadcast) for the stream's life, not one per
+  // micro-batch
+  private lazy val readerFactory = KvReaderFactory(required, conf)
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new KvReaderFactory(required, sharedConf)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   override def commit(end: Offset): Unit = ()
 

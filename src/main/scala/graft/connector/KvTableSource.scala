@@ -7,28 +7,22 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path => HPath}
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.conf.HadoopParquetConfiguration
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{MessageType, PrimitiveType}
-import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, DecimalLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimestampLogicalTypeAnnotation}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 provider for the KV table log: `format("kvtable")`.
   *
@@ -59,11 +53,10 @@ import org.apache.spark.util.SerializableConfiguration
   * restart-and-skip-one-row scanner heuristic, which can drop or
   * duplicate a row, is deliberately NOT reproduced).
   *
-  * Supported column types: string, binary, boolean, int, long, double,
-  * float, and timestamps in BOTH physical parquet encodings — INT64
-  * micros (the V2 writer's output) and INT96 nanos+julian-day (what
-  * Spark's own parquet writer emits by default, i.e. every file a
-  * compaction wrote) — decoded per file.
+  * Rows are decoded by Spark's own parquet reader and written by its
+  * parquet writer (the codec compaction uses), so every parquet type
+  * Spark reads is supported, including files of the earlier
+  * hand-written encoder (INT64-micros timestamps, all-optional columns).
   */
 class KvTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "kvtable"
@@ -568,16 +561,18 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new KvReaderFactory(required, KvHadoopConf.broadcast(hadoopConf), asOf)
+    KvReaderFactory(required, hadoopConf, asOf)
 }
 
-/** One parquet row group: `[start, start+length)` byte range. `bucket`
-  * is the `__bucket=N` partition-directory value (-1 when unbucketed);
+/** One parquet row group: `[start, start+length)` byte range of a file
+  * `fileSize` bytes long. `bucket` is the `__bucket=N`
+  * partition-directory value (-1 when unbucketed);
   * `rows` is the group's manifest row count and `keyStat` its rowkey
   * column stats (limit / top-N planning — carried from the SAME
   * manifest-or-footer source planning trusted, so truncation can never
   * consult staler stats than the plan itself). */
 case class KvInputPartition(file: String, start: Long, length: Long,
+                            fileSize: Long,
                             hostnames: Array[String], bucket: Int,
                             rows: Long = 0L,
                             keyStat: Option[KvStats.ColStat] = None,
@@ -588,112 +583,108 @@ case class KvInputPartition(file: String, start: Long, length: Long,
     new GenericInternalRow(Array[Any](bucket))
 }
 
-class KvReaderFactory(required: StructType,
-                      conf: Broadcast[SerializableConfiguration],
-                      asOf: Option[Long] = None)
-    extends PartitionReaderFactory {
-  // Per-executor projection cache keyed by file: a file with G row
-  // groups yields G partitions that all need the IDENTICAL projection —
-  // without the cache each would re-open and parse the footer.
-  @transient private lazy val projectionCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+/** Spark's parquet row reader over a kvtable's files, built once on the
+  * driver (Spark broadcasts `conf` with it). A read yields the data
+  * columns of `fields` in order, then `__bucket` — the file's partition
+  * value — when `fields` holds it. Spark clips each file's schema to
+  * the request, so a column a file lacks reads as null whatever wrote
+  * the file. Rows are the reader's reused buffers: copy one to keep it. */
+case class KvRowReader(fields: StructType,
+                       read: PartitionedFile => Iterator[InternalRow]) {
+  private val bucketed = fields.fieldNames.contains(KvV2Util.BucketCol)
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new KvPartitionReader(partition.asInstanceOf[KvInputPartition], required,
-      projectionCache, conf.value.value, asOf)
+  /** Output column names, in row order. */
+  val names: IndexedSeq[String] =
+    fields.fieldNames.filterNot(_ == KvV2Util.BucketCol).toIndexedSeq ++
+      (if (bucketed) Seq(KvV2Util.BucketCol) else Nil)
+
+  /** The row groups of `file` whose midpoints fall in
+    * `[start, start+length)` — parquet's split rule. */
+  def open(file: String, start: Long, length: Long, fileSize: Long,
+           bucket: Int): Iterator[InternalRow] =
+    read(PartitionedFile(
+      if (bucketed) InternalRow(if (bucket >= 0) bucket else null)
+      else InternalRow.empty,
+      SparkPath.fromPathString(file), start, length, fileSize = fileSize))
+
+  /** A reusable view of a read row as the columns of `out`. */
+  def project(out: StructType): ProjectingInternalRow =
+    ProjectingInternalRow(out, out.fieldNames.toIndexedSeq.map(n => names.indexOf(n)))
 }
 
-/** `sharedConf` is the scan's broadcast configuration: read, never set. */
+object KvRowReader {
+  def apply(fields: StructType, conf: Configuration): KvRowReader = {
+    val (bucket, data) = fields.fields.map(_.copy(nullable = true))
+      .partition(_.name == KvV2Util.BucketCol)
+    KvRowReader(fields, new ParquetFileFormat().buildReaderWithPartitionValues(
+      SparkSession.active, StructType(data), StructType(bucket),
+      StructType(data), Nil,
+      // Spark sets its read keys on the conf it is given: a copy
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), KvHadoopConf.copy(conf)))
+  }
+}
+
+class KvReaderFactory(required: StructType, reader: KvRowReader,
+                      asOf: Option[Long])
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new KvPartitionReader(partition.asInstanceOf[KvInputPartition], required,
+      reader, asOf)
+}
+
+object KvReaderFactory {
+  /** Time-travel reads need `__version` to evaluate the snapshot bound
+    * even when the query projects it away: the FILE projection is
+    * widened (output rows still carry only `required`). */
+  def apply(required: StructType, conf: Configuration,
+            asOf: Option[Long] = None): KvReaderFactory = {
+    val readFields =
+      if (asOf.isEmpty ||
+          required.fieldNames.contains(graft.kv.KvTable.VersionCol)) required
+      else required.add(graft.kv.KvTable.VersionCol, LongType)
+    new KvReaderFactory(required, KvRowReader(readFields, conf), asOf)
+  }
+}
+
+/** Reads one planned row group through Spark's parquet reader and drops
+  * the rows above the `VERSION AS OF` ceiling. */
 class KvPartitionReader(part: KvInputPartition, required: StructType,
-                        projectionCache: java.util.concurrent.ConcurrentHashMap[String, String],
-                        sharedConf: Configuration,
-                        asOf: Option[Long] = None)
+                        reader: KvRowReader, asOf: Option[Long] = None)
     extends PartitionReader[InternalRow] {
 
-  // Time-travel reads need `__version` to evaluate the snapshot bound
-  // even when the query projects it away: widen the FILE projection
-  // (output rows still carry only `required`).
-  private val readFields: StructType =
-    if (asOf.isEmpty ||
-        required.fieldNames.contains(graft.kv.KvTable.VersionCol)) required
-    else required.add(graft.kv.KvTable.VersionCol, LongType)
+  private val rows = reader.open(part.file, part.start, part.length,
+    part.fileSize, part.bucket)
+  private val versionIdx = reader.names.indexOf(graft.kv.KvTable.VersionCol)
+  // the reader puts `__bucket` last and may carry the widened `__version`
+  private val projected: Option[ProjectingInternalRow] =
+    if (required.fieldNames.toSeq == reader.names) None
+    else Some(reader.project(required))
 
-  // Cut the column projection from THIS file's own schema, task-side:
-  // parquet requires the requested repetition to match the file exactly,
-  // and the log legitimately mixes provenance (Spark-written files mark
-  // non-null columns `required`; the V2 writer marks everything
-  // `optional`), so no single driver-computed projection fits all files.
-  // Cached per (executor, file): the other row-group partitions of this
-  // file reuse it instead of re-parsing the footer.
-  private val projection: String =
-    projectionCache.computeIfAbsent(part.file, { file =>
-      val r = KvV2Util.openFooter(new HPath(file), sharedConf)
-      val full = try r.getFooter.getFileMetaData.getSchema finally r.close()
-      val kept: Seq[org.apache.parquet.schema.Type] =
-        readFields.fieldNames.toSeq.flatMap { n =>
-          if (full.containsField(n)) Some(full.getType(Seq(n): _*)) else None
-        }
-      if (kept.isEmpty) ""
-      else new MessageType("spark_schema",
-        new util.ArrayList[org.apache.parquet.schema.Type](kept.asJava)).toString
-    })
-
-  // withFileRange selects exactly the row groups whose midpoint falls in
-  // [start, start+length) — this partition's single group.
-  private val reader: ParquetReader[Group] = {
-    val conf =
-      if (projection.isEmpty) sharedConf
-      else {
-        val own = KvHadoopConf.copy(sharedConf)
-        own.set(ReadSupport.PARQUET_READ_SCHEMA, projection)
-        own
-      }
-    KvV2Util.groupReader(new HPath(part.file), conf)
-      .withFileRange(part.start, part.start + part.length)
-      .build()
-  }
-
-  private var current: Group = _
+  private var current: InternalRow = _
 
   /** Snapshot-bound check (trivially true for non-time-travel reads):
     * rows versioned after the bound are invisible. */
-  private def visible(g: Group): Boolean = asOf.forall { v =>
-    !g.getType.containsField(graft.kv.KvTable.VersionCol) || {
-      val idx = g.getType.getFieldIndex(graft.kv.KvTable.VersionCol)
-      g.getFieldRepetitionCount(idx) == 0 || g.getLong(idx, 0) <= v
-    }
+  private def visible(r: InternalRow): Boolean = asOf.forall { v =>
+    r.isNullAt(versionIdx) || r.getLong(versionIdx) <= v
   }
 
   override def next(): Boolean = {
-    current = reader.read()
-    while (current != null && !visible(current)) current = reader.read()
-    current != null
-  }
-
-  override def get(): InternalRow = {
-    val row = new GenericInternalRow(required.length)
-    var i = 0
-    while (i < required.length) {
-      val name = required(i).name
-      // __bucket lives in the directory name, not the file — synthesize
-      // it from the partition (same as Spark's parquet partition columns)
-      if (name == KvV2Util.BucketCol) {
-        row.update(i, if (part.bucket >= 0) part.bucket else null)
-      } else if (!current.getType.containsField(name)) {
-        // the log legitimately mixes file schemas (delta tombstones
-        // carry only the key + engine columns): absent column = null
-        row.update(i, null)
-      } else {
-        val gIdx = current.getType.getFieldIndex(name)
-        if (current.getFieldRepetitionCount(gIdx) == 0) row.update(i, null)
-        else row.update(i, KvV2Util.readValue(current, gIdx, required(i).dataType))
-      }
-      i += 1
+    while (rows.hasNext) {
+      current = rows.next()
+      if (visible(current)) return true
     }
-    row
+    false
   }
 
-  override def close(): Unit = reader.close()
+  override def get(): InternalRow = projected match {
+    case Some(p) => p.project(current); p
+    case None => current
+  }
+
+  override def close(): Unit = rows match {
+    case c: java.io.Closeable => c.close()
+    case _ => ()
+  }
 }
 
 object KvV2Util {
@@ -806,10 +797,8 @@ object KvV2Util {
         require(files.nonEmpty, s"kvtable at $path has no data files")
         footerSchema(files.head, conf)
     }
-    val base = StructType(msg.getFields.asScala.map { f =>
-      val p = f.asPrimitiveType()
-      StructField(f.getName, sparkType(p), nullable = true)
-    }.toSeq)
+    val base = StructType(new ParquetToSparkSchemaConverter(SQLConf.get)
+      .convert(msg).fields.map(_.copy(nullable = true)))
     if (readBuckets(path, conf) > 0)
       base.add(StructField(BucketCol, IntegerType, nullable = true))
     else base
@@ -827,82 +816,6 @@ object KvV2Util {
   def openFooter(file: HPath, conf: Configuration): ParquetFileReader =
     ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
       HadoopReadOptions.builder(conf, file).build())
-
-  /** Row reader over one parquet file on `conf`. parquet-mr's path-based
-    * `ParquetReader.builder` parses a default `Configuration` of its own
-    * even when `.withConf` follows; this constructor takes ours. */
-  def groupReader(file: HPath, conf: Configuration): ParquetReader.Builder[Group] =
-    new ParquetReader.Builder[Group](HadoopInputFile.fromPath(file, conf),
-        new HadoopParquetConfiguration(conf)) {
-      override protected def getReadSupport(): ReadSupport[Group] =
-        new GroupReadSupport()
-    }
-
-  def sparkType(p: PrimitiveType): DataType = p.getLogicalTypeAnnotation match {
-    // DECIMAL first, whatever its physical encoding (INT32/INT64 for
-    // precision <= 9/18 — Spark's writer default — or FIXED/BINARY
-    // beyond): mapping the physical type alone would silently surface
-    // the UNSCALED value (a 100x error at scale 2)
-    case d: DecimalLogicalTypeAnnotation =>
-      DecimalType(d.getPrecision, d.getScale)
-    case _ => p.getPrimitiveTypeName match {
-      case BINARY if p.getLogicalTypeAnnotation.isInstanceOf[StringLogicalTypeAnnotation] =>
-        StringType
-      case BINARY => BinaryType
-      case BOOLEAN => BooleanType
-      case INT32 if p.getLogicalTypeAnnotation
-          .isInstanceOf[DateLogicalTypeAnnotation] =>
-        DateType // days-since-epoch payload; surfacing int would
-                 // silently change the column's semantics
-      case INT32 => IntegerType
-      case INT64 if p.getLogicalTypeAnnotation.isInstanceOf[TimestampLogicalTypeAnnotation] =>
-        TimestampType
-      case INT64 => LongType
-      case INT96 => TimestampType // Spark's default parquet timestamp encoding
-      case DOUBLE => DoubleType
-      case FLOAT => FloatType
-      case other =>
-        throw new IllegalArgumentException(s"kvtable: unsupported parquet type $other")
-    }
-  }
-
-  /** Decode a parquet INT96 timestamp (12 bytes little-endian: 8-byte
-    * nanos-of-day + 4-byte Julian day) to catalyst micros — the encoding
-    * Spark's own parquet writer emits by default
-    * (`spark.sql.parquet.outputTimestampType=INT96`). */
-  def int96ToMicros(b: Binary): Long = {
-    val buf = java.nio.ByteBuffer.wrap(b.getBytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong(0)
-    val julianDay = buf.getInt(8)
-    (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-  }
-
-  def readValue(g: Group, idx: Int, dt: DataType): Any = dt match {
-    case StringType => UTF8String.fromBytes(g.getBinary(idx, 0).getBytes)
-    case BinaryType => g.getBinary(idx, 0).getBytes
-    case BooleanType => g.getBoolean(idx, 0)
-    case IntegerType | DateType => g.getInteger(idx, 0) // date = int days
-    case LongType => g.getLong(idx, 0)
-    case TimestampType =>
-      // physical encoding varies by writer: Spark's (compaction) INT96,
-      // the V2 writer INT64 micros — branch on the file's own type
-      if (g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName == INT96)
-        int96ToMicros(g.getInt96(idx, 0))
-      else g.getLong(idx, 0) // parquet micros == catalyst micros
-    case DoubleType => g.getDouble(idx, 0)
-    case FloatType => g.getFloat(idx, 0)
-    case dt: DecimalType =>
-      g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-        case INT32 => Decimal(g.getInteger(idx, 0).toLong, dt.precision, dt.scale)
-        case INT64 => Decimal(g.getLong(idx, 0), dt.precision, dt.scale)
-        case _ => // FIXED_LEN_BYTE_ARRAY / BINARY: big-endian unscaled
-          Decimal(BigDecimal(BigInt(g.getBinary(idx, 0).getBytes), dt.scale),
-            dt.precision, dt.scale)
-      }
-    case other =>
-      throw new IllegalArgumentException(s"kvtable: unsupported read type $other")
-  }
 
   /** Filters usable for manifest min/max pruning: comparisons and
     * IN-lists against string/long columns, null-presence checks, and
@@ -993,8 +906,8 @@ object KvV2Util {
         }
         groups.collect {
           case g if KvStats.groupPasses(g.stats, pushed) =>
-            KvInputPartition(f.getPath.toString, g.start, g.len, hosts,
-              bucket, g.rows, keyName.flatMap(k => g.stats.get(k)),
+            KvInputPartition(f.getPath.toString, g.start, g.len, f.getLen,
+              hosts, bucket, g.rows, keyName.flatMap(k => g.stats.get(k)),
               sorted = fileSorted)
         }
       }

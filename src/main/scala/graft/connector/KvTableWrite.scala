@@ -2,20 +2,17 @@ package graft.connector
 
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{MessageType, Types}
-import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOutputWriter, SparkToParquetSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -128,8 +125,9 @@ class KvStreamingWrite(path: String, schema: StructType,
                        hadoopConf: Configuration = KvHadoopConf.active())
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
-  // one broadcast for the query's life, not one per epoch
-  private lazy val sharedConf = KvHadoopConf.broadcast(hadoopConf)
+  // one prepared writer configuration for the query's life, not one per
+  // epoch
+  private lazy val sharedConf = KvWriteUtil.writeConf(hadoopConf, schema)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
@@ -217,7 +215,7 @@ class KvBatchWrite(path: String, schema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new KvWriterFactory(path, schema, assignedVersion,
-      KvHadoopConf.broadcast(conf), routeBuckets, routeKey,
+      KvWriteUtil.writeConf(conf, schema), routeBuckets, routeKey,
       deferPublish = epochTag.isDefined)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -276,9 +274,8 @@ class KvBatchWrite(path: String, schema: StructType,
       case KvCommitMessage(_, stats, _) => stats
       case _ => Seq.empty
     }
-    val schemaStr = KvWriteUtil.toParquetSchema(
-      KvWriteUtil.fileSchema(schema,
-        synth = !schema.fieldNames.contains(graft.kv.KvTable.VersionCol))).toString
+    val schemaStr = new SparkToParquetSchemaConverter(SQLConf.get)
+      .convert(KvWriteUtil.fileSchema(schema)).toString
     if (truncate)
       KvStats.write(path, KvStats.Manifest(schemaStr, newStats), conf)
     else {
@@ -325,7 +322,11 @@ class KvWriterFactory(path: String, schema: StructType,
       conf.value.value, routeBuckets, keyField, deferPublish)
 }
 
-/** Per-task buffered writer. Rows carrying a `__bucket` column are
+/** Per-task buffered writer: each row goes through Spark's
+  * `ParquetOutputWriter`, on the write's configuration as Spark's
+  * `prepareWrite` set it up on the driver ([[KvWriteUtil.writeConf]]),
+  * so appends encode exactly as compaction's files do. Rows carrying a
+  * `__bucket` column are
   * routed to per-bucket files under `data/__bucket=N/` (the column is a
   * DIRECTORY coordinate, excluded from the parquet schema — the same
   * layout compaction's `partitionBy` writer produces), so appends to a
@@ -359,14 +360,12 @@ class KvDataWriter(path: String, schema: StructType,
     if (routeBuckets > 0 && routeKeyIdx >= 0)
       new KeyBucketer(schema(routeKeyIdx).dataType, routeBuckets)
     else null
-  // engine columns missing from the incoming rows entirely get APPENDED
-  // to the file schema and synthesized per row
-  private val appendEngine: Boolean =
-    !schema.fieldNames.contains(VersionCol)
-  private val fileSchema: StructType =
-    KvWriteUtil.fileSchema(schema, appendEngine)
-  private val messageType: MessageType = KvWriteUtil.toParquetSchema(fileSchema)
-  private val factory = new SimpleGroupFactory(messageType)
+  // each row is projected into the file schema: `__bucket` dropped,
+  // engine columns the rows lack (-1) or hold null synthesized
+  private val fileSchema: StructType = KvWriteUtil.fileSchema(schema)
+  private val srcIdx: Array[Int] = fileSchema.fieldNames.map(n => schema.fieldNames.indexOf(n))
+  private val fileRow = new GenericInternalRow(fileSchema.length)
+  private lazy val context = new TaskAttemptContextImpl(conf, new TaskAttemptID())
 
   // Per-task seq for synthesized engine columns: partition-prefixed,
   // row-order monotone — the same shape monotonically_increasing_id
@@ -374,7 +373,8 @@ class KvDataWriter(path: String, schema: StructType,
   private var seq: Long = partitionId.toLong << 33
 
   /** Synthesized value for an engine column arriving NULL (a SQL INSERT
-    * naming only the logical columns null-fills the rest), or absent. */
+    * naming only the logical columns null-fills the rest), or absent;
+    * null for any other column. */
   private def synthValue(name: String): Any = name match {
     case VersionCol => assignedVersion
     case SeqCol => seq
@@ -390,7 +390,7 @@ class KvDataWriter(path: String, schema: StructType,
 
   /** bucket (-1 = unbucketed) -> (staged path, published path, writer) */
   private val writers = scala.collection.mutable.LinkedHashMap
-    .empty[Int, (String, String, ParquetWriter[org.apache.parquet.example.data.Group])]
+    .empty[Int, (String, String, ParquetOutputWriter)]
 
   // per-FILE rowkey bloom (HBase per-store-file bloom), built while the
   // rows stream through this writer. Disabled for a file if any row's
@@ -452,13 +452,7 @@ class KvDataWriter(path: String, schema: StructType,
     val sub = if (bucket >= 0) s"${KvV2Util.BucketCol}=$bucket/" else ""
     val staged = s"$path/.staging/$sub$name"
     val file = s"$path/data/$sub$name"
-    // row-group and page sizes from the write's configuration, as
-    // Spark's own parquet writer takes them (same defaults)
-    (staged, file, ExampleParquetWriter.builder(new HPath(staged))
-      .withConf(conf).withType(messageType)
-      .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
-      .withPageSize(ParquetOutputFormat.getPageSize(conf))
-      .build())
+    (staged, file, new ParquetOutputWriter(staged, context))
   })
 
   override def write(row: InternalRow): Unit = {
@@ -467,53 +461,20 @@ class KvDataWriter(path: String, schema: StructType,
       else if (bucketer != null && !row.isNullAt(routeKeyIdx))
         bucketer.bucketOf(row.get(routeKeyIdx, schema(routeKeyIdx).dataType))
       else -1
-    val g = factory.newGroup()
-    var i = 0
-    var out = 0
-    while (i < schema.length) {
-      if (i != bucketIdx) {
-        val name = fileSchema(out).name
-        if (!row.isNullAt(i)) {
-          fileSchema(out).dataType match {
-            case StringType => g.add(name, row.getUTF8String(i).toString)
-            case BinaryType => g.add(name, Binary.fromConstantByteArray(row.getBinary(i)))
-            case BooleanType => g.add(name, row.getBoolean(i))
-            case IntegerType | DateType => g.add(name, row.getInt(i))
-            case LongType | TimestampType => g.add(name, row.getLong(i))
-            case DoubleType => g.add(name, row.getDouble(i))
-            case FloatType => g.add(name, row.getFloat(i))
-            case d: DecimalType =>
-              val dec = row.getDecimal(i, d.precision, d.scale)
-              if (d.precision <= 9) g.add(name, dec.toUnscaledLong.toInt)
-              else if (d.precision <= 18) g.add(name, dec.toUnscaledLong)
-              else g.add(name, Binary.fromConstantByteArray(
-                KvWriteUtil.decimalFixedBytes(dec,
-                  KvWriteUtil.minBytesForPrecision(d.precision))))
-            case other =>
-              throw new IllegalArgumentException(s"kvtable write: unsupported $other")
-          }
-        } else synthValue(name) match {
-          // engine column present in the schema but null-filled (SQL
-          // INSERT with a logical column list): synthesize the value
-          case v: Long => g.add(name, v)
-          case v: Boolean => g.add(name, v)
-          case _ => () // ordinary null value: omitted (optional field)
-        }
-        out += 1
-      }
-      i += 1
-    }
-    if (appendEngine) {
-      g.add(VersionCol, assignedVersion)
-      g.add(SeqCol, seq)
-      g.add(TombstoneCol, false)
+    var j = 0
+    while (j < srcIdx.length) {
+      val i = srcIdx(j)
+      fileRow.update(j,
+        if (i >= 0 && !row.isNullAt(i)) row.get(i, fileSchema(j).dataType)
+        else synthValue(fileSchema(j).name))
+      j += 1
     }
     seq += 1
     val (bits, valid) = bloomFor(bucket)
     val kr = keyRendering(row)
     if (kr == null) valid(0) = false else KvBloom.add(bits, kr)
     observeKey(bucket, kr, keyFaithful(row))
-    writerFor(bucket)._3.write(g)
+    writerFor(bucket)._3.write(fileRow)
   }
 
   override def commit(): WriterCommitMessage = {
@@ -565,80 +526,31 @@ class KvDataWriter(path: String, schema: StructType,
 }
 
 object KvWriteUtil {
-  /** On-disk schema of a data file: the incoming columns minus the
-    * `__bucket` directory coordinate, plus the engine columns when the
-    * writer synthesizes them (rows arriving without `__version`). */
-  def fileSchema(incoming: StructType, synth: Boolean): StructType = {
-    val base = StructType(
-      incoming.fields.filterNot(_.name == KvV2Util.BucketCol))
-    if (!synth) base
+  /** On-disk schema of a data file, every column nullable: the incoming
+    * columns minus the `__bucket` directory coordinate, plus the engine
+    * columns when the rows arrive without `__version` (the writer
+    * synthesizes them). */
+  def fileSchema(incoming: StructType): StructType = {
+    val base = StructType(incoming.fields
+      .filterNot(_.name == KvV2Util.BucketCol).map(_.copy(nullable = true)))
+    if (incoming.fieldNames.contains(graft.kv.KvTable.VersionCol)) base
     else base
-      .add(StructField(graft.kv.KvTable.VersionCol, LongType, nullable = true))
-      .add(StructField(graft.kv.KvTable.SeqCol, LongType, nullable = true))
-      .add(StructField(graft.kv.KvTable.TombstoneCol, BooleanType,
-        nullable = true))
+      .add(graft.kv.KvTable.VersionCol, LongType)
+      .add(graft.kv.KvTable.SeqCol, LongType)
+      .add(graft.kv.KvTable.TombstoneCol, BooleanType)
   }
 
-  /** StructType -> parquet MessageType for the KvTable value domain. */
-  def toParquetSchema(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val prim = f.dataType match {
-        case StringType =>
-          Types.optional(PrimitiveTypeName.BINARY)
-            .as(LogicalTypeAnnotation.stringType())
-        case BinaryType => Types.optional(PrimitiveTypeName.BINARY)
-        case BooleanType => Types.optional(PrimitiveTypeName.BOOLEAN)
-        case IntegerType => Types.optional(PrimitiveTypeName.INT32)
-        case LongType => Types.optional(PrimitiveTypeName.INT64)
-        case TimestampType =>
-          Types.optional(PrimitiveTypeName.INT64)
-            .as(LogicalTypeAnnotation.timestampType(true,
-              LogicalTypeAnnotation.TimeUnit.MICROS))
-        case DoubleType => Types.optional(PrimitiveTypeName.DOUBLE)
-        case FloatType => Types.optional(PrimitiveTypeName.FLOAT)
-        case DateType =>
-          Types.optional(PrimitiveTypeName.INT32)
-            .as(LogicalTypeAnnotation.dateType())
-        case d: DecimalType =>
-          // Spark's own physical mapping: unscaled INT32/INT64 up to
-          // precision 9/18, fixed-length big-endian bytes beyond
-          val ann = LogicalTypeAnnotation.decimalType(d.scale, d.precision)
-          if (d.precision <= 9)
-            Types.optional(PrimitiveTypeName.INT32).as(ann)
-          else if (d.precision <= 18)
-            Types.optional(PrimitiveTypeName.INT64).as(ann)
-          else
-            Types.optional(PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY)
-              .length(minBytesForPrecision(d.precision)).as(ann)
-        case other =>
-          throw new IllegalArgumentException(s"kvtable write: unsupported $other")
-      }
-      b.addField(prim.named(f.name))
-    }
-    b.named("spark_schema")
-  }
-
-  /** Smallest byte count whose signed range covers 10^precision — the
-    * parquet fixed-length decimal sizing rule. */
-  def minBytesForPrecision(precision: Int): Int = {
-    var n = 1
-    while (BigInt(2).pow(8 * n - 1) - 1 < BigInt(10).pow(precision)) n += 1
-    n
-  }
-
-  /** Fixed-length big-endian two's-complement rendering of a decimal's
-    * unscaled value (sign-extended padding). */
-  def decimalFixedBytes(d: org.apache.spark.sql.types.Decimal,
-                        len: Int): Array[Byte] = {
-    val unscaled = d.toJavaBigDecimal.unscaledValue()
-    val raw = unscaled.toByteArray
-    require(raw.length <= len,
-      s"decimal unscaled value needs ${raw.length} bytes > field length $len")
-    val out = new Array[Byte](len)
-    if (unscaled.signum() < 0) java.util.Arrays.fill(out, -1.toByte)
-    System.arraycopy(raw, 0, out, len - raw.length, raw.length)
-    out
+  /** The configuration a write's tasks hand Spark's parquet writer, for
+    * rows of `incoming`: Spark's `prepareWrite` sets it up once on the
+    * driver from the session's SQL conf — timestamp encoding,
+    * compression, row-group and page sizes follow the same settings as
+    * compaction's writes — and it is broadcast to the tasks. */
+  def writeConf(conf: Configuration, incoming: StructType)
+      : Broadcast[SerializableConfiguration] = {
+    val job = Job.getInstance(conf) // a copy: `conf` itself is not set
+    new ParquetFileFormat().prepareWrite(SparkSession.active, job, Map.empty,
+      fileSchema(incoming))
+    KvHadoopConf.broadcast(job.getConfiguration)
   }
 }
 

@@ -40,8 +40,8 @@ object KvStats {
                            nulls: Long = -1L)
 
   /** One parquet row group: `[start, start+len)` is the byte range whose
-    * midpoint selects exactly this group via `ParquetReader.withFileRange`
-    * (parquet filters blocks by `startingPos + compressedSize/2`). */
+    * midpoint selects exactly this group as a file split (parquet
+    * filters blocks by `startingPos + compressedSize/2`). */
   final case class GroupStat(start: Long, len: Long, rows: Long,
                              stats: Map[String, ColStat])
 

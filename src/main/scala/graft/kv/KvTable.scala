@@ -248,7 +248,9 @@ object KvTable {
       // Tombstone rows must carry the TABLE's value types: parquet reads
       // resolve the schema from an arbitrary file footer, so a marker
       // file with differently-typed null columns would poison the log.
-      val dataSchema = readRaw(spark, path).schema
+      // The manifest holds them (footer fallback), so no job runs here.
+      val dataSchema = graft.connector.KvV2Util.inferSchema(path,
+        KvHadoopConf(spark))
       val out = keys.select(col(schema.keyField) +: schema.valueFields.map(f =>
           lit(null).cast(dataSchema(f.name).dataType).as(f.name)): _*)
         .withColumn(VersionCol, lit(batch))

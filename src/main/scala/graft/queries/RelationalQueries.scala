@@ -1198,8 +1198,10 @@ object RelationalQueries {
             col("lowerKey") === col("higherKey"), col("lowerKey"))
             .otherwise((col("hi") - col("pos")) * col("lowerKey") +
               (col("pos") - col("lo")) * col("higherKey")).as("ep99"))
-      sketch.join(qtyEq, Seq("l_returnflag"))
-        .join(priceEp, Seq("l_returnflag"))
+      // left joins: a group whose qty (or price) is entirely NULL has no
+      // frequency rows, and keeps its row with a NULL percentile
+      sketch.join(qtyEq, Seq("l_returnflag"), "left")
+        .join(priceEp, Seq("l_returnflag"), "left")
         .select(col("l_returnflag"),
           element_at(col("eq"), 1).as("p25_qty"),
           element_at(col("eq"), 2).as("med_qty"),

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * of the parquet-mr entry points that parse a default one internally
   * (the path-based `ParquetReader.builder`, the one-argument
   * `ParquetFileReader.open`). Each such call re-reads Hadoop's XML
-  * defaults and ignores the session's Hadoop settings. */
+  * defaults and ignores the session's Hadoop settings. Parquet is
+  * encoded and decoded by Spark's own reader and writer only, so no
+  * second codec can drift from what compaction writes. */
 class KvConfGuardSpec extends AnyFunSuite {
 
   private val roots = Seq("src/main/scala/graft/connector", "src/main/scala/graft/kv")
@@ -75,6 +77,19 @@ class KvConfGuardSpec extends AnyFunSuite {
     }
     assert(offenses.isEmpty, offenses.mkString("\n"))
     assert(files.exists(_.getFileName.toString == helper))
+  }
+
+  test("connector and KV code encode and decode parquet only through " +
+    "Spark's parquet reader and writer: no parquet-mr example codec, no " +
+    "ParquetReader/ParquetWriter builder") {
+    val codec = "org\\.apache\\.parquet\\.(hadoop\\.)?example\\b".r
+    val builder =
+      "\\b(Example)?Parquet(Reader|Writer)\\s*\\.\\s*[Bb]uilder\\b".r
+    val offenses = sources.flatMap { p =>
+      val src = code(p)
+      (codec.findAllIn(src) ++ builder.findAllIn(src)).map(o => s"$p: $o")
+    }
+    assert(offenses.isEmpty, offenses.mkString("\n"))
   }
 
   test("KvTable appends only through the kvtable connector: no Spark " +

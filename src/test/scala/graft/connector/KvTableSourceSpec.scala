@@ -557,7 +557,7 @@ class KvTableSourceSpec extends SparkSpec {
       path, schema, SinkMode.Replace)
     // compaction rewrites through Spark's parquet writer, whose default
     // timestamp encoding is INT96 — checked in the footer, so the test
-    // cannot silently read the connector's INT64 micros instead
+    // cannot silently read some other timestamp encoding instead
     KvTable.compact(spark, path)
     val conf = spark.sparkContext.hadoopConfiguration
     val files = KvV2Util.dataFiles(path, conf)
@@ -755,5 +755,102 @@ class KvTableSourceSpec extends SparkSpec {
           s"$label write / $reader read: ($gs,$gm,$gb) != ($es,$em,$eb)")
       }
     }
+  }
+
+  private type LegacyRow = (String, java.sql.Timestamp, java.sql.Date,
+    java.math.BigDecimal, Option[Long])
+
+  test("tables holding files of the earlier Group-codec writer stay " +
+    "readable: readV2, get, read and a row-level UPDATE agree") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.MessageTypeParser
+    // the shapes that writer gave a file: every column optional, INT64
+    // micros timestamps, DATE, fixed-length decimal(27,3), engine columns
+    val legacy = MessageTypeParser.parseMessageType(
+      """message spark_schema {
+        |  optional binary k (STRING);
+        |  optional int64 t (TIMESTAMP(MICROS,true));
+        |  optional int32 d (DATE);
+        |  optional fixed_len_byte_array(12) big (DECIMAL(27,3));
+        |  optional int64 n;
+        |  optional int64 __version;
+        |  optional int64 __seq;
+        |  optional boolean __tombstone;
+        |}""".stripMargin)
+    def fixed12(d: java.math.BigDecimal): Binary = {
+      val raw = d.unscaledValue().toByteArray
+      val out = Array.fill[Byte](12)(if (d.signum() < 0) -1 else 0)
+      System.arraycopy(raw, 0, out, 12 - raw.length, raw.length)
+      Binary.fromConstantByteArray(out)
+    }
+    def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+    def dec(s: String) = new java.math.BigDecimal(s)
+    val fresh: Seq[LegacyRow] = Seq(
+      ("k1", ts("2021-03-15T12:34:56.789Z"), java.sql.Date.valueOf("2024-02-29"),
+        dec("123456789012345678901234.567"), Some(1L)),
+      ("k2", ts("1969-12-31T23:59:59.500Z"), java.sql.Date.valueOf("1969-12-31"),
+        dec("-0.001"), Some(2L)))
+    // k2 is an OLDER version here (superseded by the fresh file); k3 and
+    // k4 exist only here, k4 with a null `n`
+    val old: Seq[(LegacyRow, Long)] = Seq(
+      (("k2", ts("2000-01-01T00:00:00Z"), java.sql.Date.valueOf("2000-01-01"),
+        dec("1.000"), Some(-2L)), 0L),
+      (("k3", ts("2038-01-19T03:14:07.999999Z"), java.sql.Date.valueOf("1900-06-01"),
+        dec("-123456789012345678901234.567"), Some(3L)), 1L),
+      (("k4", ts("1970-01-01T00:00:00.000001Z"), java.sql.Date.valueOf("1970-01-01"),
+        dec("0.000"), None), 1L))
+    val expected: Seq[LegacyRow] = fresh ++ old.map(_._1).filter(_._1 != "k2")
+    val schema = KvSchema.of("k", "t" -> ("f", "t"), "d" -> ("f", "d"),
+      "big" -> ("f", "b"), "n" -> ("f", "n"))
+    // decimal(27,3) does not fit the encoder's default decimal(38,18)
+    val df = fresh.map { case (k, t, d, big, n) => (k, t, d, big.toPlainString, n) }
+      .toDF("k", "t", "d", "big", "n")
+      .withColumn("big", $"big".cast("decimal(27,3)")).coalesce(1)
+    def writeLegacy(dir: String): Unit = {
+      val factory = new SimpleGroupFactory(legacy)
+      val w = ExampleParquetWriter.builder(new Path(s"$dir/part-legacy.parquet"))
+        .withType(legacy).build()
+      try old.zipWithIndex.foreach { case (((k, t, d, big, n), ver), i) =>
+        val g = factory.newGroup()
+          .append("k", k)
+          .append("t", t.toInstant.getEpochSecond * 1000000L +
+            t.toInstant.getNano / 1000)
+          .append("d", d.toLocalDate.toEpochDay.toInt)
+          .append("big", fixed12(big))
+        n.foreach(v => g.append("n", v))
+        g.append("__version", ver).append("__seq", i.toLong)
+          .append("__tombstone", false)
+        w.write(g)
+      } finally w.close()
+    }
+    def rows(d: org.apache.spark.sql.DataFrame): Seq[LegacyRow] =
+      d.select("k", "t", "d", "big", "n").as[LegacyRow].collect().toSeq.sortBy(_._1)
+
+    // an unbucketed table: one file of the current writer, one legacy file
+    val path = TestSpark.scratch("v2-legacy-codec")
+    KvTable.write(df, path, schema, SinkMode.Replace)
+    writeLegacy(s"$path/data")
+    assert(KvV2Util.dataFiles(path, spark.sparkContext.hadoopConfiguration)
+      .size === 2)
+    assert(rows(KvTable.readV2(spark, path)) === expected)
+    assert(rows(KvTable.read(spark, path)) === expected)
+    for (e <- expected)
+      assert(rows(KvTable.get(spark, path, e._1)) === Seq(e))
+
+    // a bucket-compacted copy, the legacy file inside its bucket
+    // directory, read and rewritten by a row-level UPDATE
+    spark.conf.set("spark.sql.catalog.cat_legacy", "graft.connector.KvCatalog")
+    val warehouse = TestSpark.scratch("v2-legacy-wh")
+    spark.conf.set("spark.sql.catalog.cat_legacy.warehouse", warehouse)
+    val bucketed = s"$warehouse/t"
+    KvTable.bulkLoad(df, bucketed, schema, buckets = 1, SinkMode.Replace)
+    writeLegacy(s"$bucketed/data/${KvV2Util.BucketCol}=0")
+    assert(rows(KvTable.readV2(spark, bucketed)) === expected)
+    spark.sql("UPDATE cat_legacy.t SET n = coalesce(n, 0) + 10")
+    assert(rows(KvTable.readV2(spark, bucketed)) ===
+      expected.map(e => e.copy(_5 = Some(e._5.getOrElse(0L) + 10))))
   }
 }

@@ -444,6 +444,34 @@ class KvTableSpec extends SparkSpec {
     assert(after === before)
     assert(KvTable.readRaw(spark, path).count() === before.length)
   }
+
+  test("a delete launches no more Spark jobs than a write of the same keys " +
+    "(the tombstones' value types come from the manifest, not a job)") {
+    val path = TestSpark.scratch("kv-delete-jobs")
+    val s = KvSchema.of("k", "v" -> ("f", "v"), "n" -> ("f", "n"))
+    val keys = (1 to 50).map(i => f"k$i%03d")
+    KvTable.write(keys.map(k => (k, "x", 1L)).toDF("k", "v", "n"), path, s,
+      SinkMode.Replace)
+    val sc = spark.sparkContext
+    def jobs(body: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.graftbridge.ListenerFlush(sc)
+      sc.addSparkListener(listener)
+      try { body; org.apache.spark.graftbridge.ListenerFlush(sc) }
+      finally sc.removeSparkListener(listener)
+      n.get
+    }
+    val writeJobs = jobs(KvTable.write(
+      keys.map(k => (k, "y", 2L)).toDF("k", "v", "n"), path, s))
+    val deleteJobs = jobs(KvTable.delete(keys.toDF("k"), path, s))
+    assert(deleteJobs <= writeJobs, s"delete $deleteJobs jobs, write $writeJobs")
+    assert(KvTable.read(spark, path).count() === 0)
+  }
 }
 
 class KvSchemaSpec extends SparkSpec {

@@ -17,8 +17,7 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 SPARK_GRAFT_SPLIT_MB=1 java $ADD_OPENS -Xmx4g \
-  -Dspark.memory.fraction=0.2 -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
+  -Dspark.memory.fraction=0.2 \
   -cp "$C:/opt/spark/jars/*" graft.Verify /root/sfbig/sf2 "$OUT" \
   > evidence/verify_sf2_lowmem_r06.log 2>&1
 python3 tools/check.py /root/sfbig/sf2 "$OUT" 2>/dev/null \
