@@ -1,13 +1,11 @@
 package graft.connector
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -28,19 +26,18 @@ import graft.kv.KvTable.{SeqCol, TombstoneCol, VersionCol}
   * stale values), and a leaf scan cannot shuffle — so row-level ops
   * require a BUCKET-COMPACTED table: every version of a key lives in
   * one `__bucket=N` directory (compaction + bucket-aligned appends),
-  * and the scan plans ONE partition per bucket whose reader collapses
-  * the bucket's rows to last-write-wins in memory. That is the HBase
+  * and the scan is the connector's LWW merge scan ([[KvScan]] with
+  * `lww`): ONE partition per bucket whose reader merges the bucket's
+  * runs to last-write-wins ([[KvMergeReader]]). That is the HBase
   * region read: region-local merge of store files, live cells out.
-  * Memory is bounded by one bucket's live set — the bucket count
-  * chosen at compaction is the knob, exactly like region sizing.
   */
 class KvRowLevelOperationBuilder(path: String, tableSchema: StructType,
                                  info: RowLevelOperationInfo,
                                  conf: Configuration)
     extends RowLevelOperationBuilder {
   // NOTE: the bucket-layout requirement is checked at SCAN PLANNING
-  // (KvLiveScan), not here — Spark builds the row-level plan during
-  // analysis even for DELETEs it will then optimize into the cheaper
+  // (KvScan.planInputPartitions), not here — Spark builds the row-level
+  // plan during analysis even for DELETEs it will then optimize into the cheaper
   // SupportsDelete metadata path, so failing here would break
   // key-equality DELETE on unbucketed tables.
   override def build(): RowLevelOperation =
@@ -62,7 +59,7 @@ class KvRowLevelOperation(path: String, tableSchema: StructType,
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new KvLiveScanBuilder(path, tableSchema, conf)
+    new KvScanBuilder(path, tableSchema, hadoopConf = conf, lww = true)
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
@@ -101,112 +98,6 @@ class KvRowLevelOperation(path: String, tableSchema: StructType,
             distBuckets, info.schema(), conf)
       }
     }
-}
-
-/** Scan of the LIVE view: column pruning only (predicates stay Spark-
-  * side residuals — the rewrite plans them above the scan anyway). */
-class KvLiveScanBuilder(path: String, fullSchema: StructType,
-                        conf: Configuration)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = fullSchema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = new KvLiveScan(path, fullSchema, required, conf)
-}
-
-class KvLiveScan(path: String, fullSchema: StructType, required: StructType,
-                 conf: Configuration)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"kvtable-live($path) ReadSchema: ${required.simpleString}"
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    require(KvV2Util.readBuckets(path, conf) > 0,
-      s"kvtable($path): row-level UPDATE/MERGE and non-key DELETE need a " +
-        "bucket-compacted table so the live view scans region-locally — " +
-        "run CALL <cat>.system.compact(table, buckets) first; DELETE by " +
-        "rowkey equality/IN works on any table")
-    val byBucket = KvV2Util.dataFiles(path, conf).groupBy { f =>
-      KvV2Util.bucketOf(KvStats.relativize(path, f.getPath, conf))
-    }
-    require(!byBucket.contains(-1),
-      s"kvtable($path): unbucketed files in a bucket-compacted table")
-    byBucket.toArray.map { case (b, files) =>
-      KvBucketPartition(b, files.map(f => (f.getPath.toString, f.getLen)).toArray)
-        : InputPartition
-    }
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val keyField = KvV2Util.readKeyField(path, conf).getOrElse(
-      throw new IllegalStateException(s"kvtable($path): no rowkey declared"))
-    // columns the collapse needs beyond the projection
-    val readFields = Seq(keyField, VersionCol, SeqCol, TombstoneCol)
-      .filterNot(required.fieldNames.contains)
-      .foldLeft(required) { (s, n) =>
-        s.add(fullSchema.fields.find(_.name == n).getOrElse(
-          StructField(n, if (n == TombstoneCol) BooleanType else LongType)))
-      }
-    new KvLiveReaderFactory(required, keyField, KvRowReader(readFields, conf))
-  }
-}
-
-/** One bucket directory's files, as (path, length). */
-case class KvBucketPartition(bucket: Int, files: Array[(String, Long)])
-    extends InputPartition
-
-class KvLiveReaderFactory(required: StructType, keyField: String,
-                          reader: KvRowReader)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new KvBucketLiveReader(partition.asInstanceOf[KvBucketPartition],
-      required, keyField, reader)
-}
-
-/** Region-style bucket read: merge every file of the bucket, keep the
-  * max-(version, seq) cell per key, drop tombstones, emit live rows
-  * projected to `required`. */
-class KvBucketLiveReader(part: KvBucketPartition, required: StructType,
-                         keyField: String, reader: KvRowReader)
-    extends PartitionReader[InternalRow] {
-
-  private def idx(name: String) = reader.names.indexOf(name)
-  private val keyIdx = idx(keyField)
-  private val keyType = reader.fields(keyField).dataType
-  private val (verIdx, seqIdx, tombIdx) = (idx(VersionCol), idx(SeqCol), idx(TombstoneCol))
-
-  private def long(r: InternalRow, i: Int): Long =
-    if (r.isNullAt(i)) 0L else r.getLong(i)
-
-  private val live: Iterator[InternalRow] = {
-    // key -> (version, seq, row); the reader reuses its row buffers, so a
-    // row is copied when it is kept, and the raw key serves only lookups
-    val best = new java.util.HashMap[Any, (Long, Long, InternalRow)]()
-    part.files.foreach { case (file, len) =>
-      reader.open(file, 0L, len, len, part.bucket).foreach { r =>
-        val ver = long(r, verIdx)
-        val seq = long(r, seqIdx)
-        val prev = best.get(r.get(keyIdx, keyType))
-        if (prev == null || ver > prev._1 || (ver == prev._1 && seq >= prev._2)) {
-          val kept = r.copy()
-          best.put(kept.get(keyIdx, keyType), (ver, seq, kept))
-        }
-      }
-    }
-    val out = reader.project(required)
-    best.values().iterator().asScala.map(_._3)
-      .filter(r => r.isNullAt(tombIdx) || !r.getBoolean(tombIdx))
-      .map { r => out.project(r); out: InternalRow }
-  }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    if (live.hasNext) { current = live.next(); true } else false
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }
 
 /** Delta write: every mutation is an append. `insert`/`update` become

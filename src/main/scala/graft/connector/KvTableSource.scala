@@ -46,9 +46,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - key filters are used for pruning and ALSO returned to Spark as
   *    residuals, so correctness never depends on reader-side filtering.
   *
-  * The relation exposes the RAW log (engine columns included) — the
-  * last-write-wins collapse is an aggregation, which V2 scans cannot
-  * express; `KvTable.read` applies it on top. Fault tolerance comes
+  * The relation exposes the RAW log (engine columns included).
+  * [[KvBatchTable.lwwView]] is the LWW view of a bucket-compacted table
+  * instead: each live key's newest raw row, merged per bucket by the
+  * scan ([[KvMergeReader]]); `KvTable` selects that view when every file
+  * is recorded key-sorted and applies the aggregate otherwise. Fault tolerance comes
   * from Spark task retry over immutable files (the reference's
   * restart-and-skip-one-row scanner heuristic, which can drop or
   * duplicate a row, is deliberately NOT reproduced).
@@ -86,10 +88,12 @@ class KvTableProvider extends TableProvider with DataSourceRegister {
   * row-group pruning from the manifest's `__version` min/max). The
   * snapshot is read-only. SQL: `SELECT ... FROM t VERSION AS OF <v>`
   * via [[KvCatalog.loadTable(ident, version)]]. `hadoopConf` is the
-  * session configuration every scan and write of this table uses. */
+  * session configuration every scan and write of this table uses.
+  * `lww`: the table is the read-only LWW view ([[KvBatchTable.lwwView]]). */
 class KvBatchTable(path: String, tableSchema0: StructType,
                    asOf: Option[Long] = None,
-                   hadoopConf: Configuration)
+                   hadoopConf: Configuration,
+                   lww: Boolean = false)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -105,18 +109,19 @@ class KvBatchTable(path: String, tableSchema0: StructType,
       .getOrElse(tableSchema0)
 
   override def name(): String =
-    s"kvtable($path${asOf.map(v => s" VERSION AS OF $v").getOrElse("")})"
+    s"kvtable($path${asOf.map(v => s" VERSION AS OF $v").getOrElse("")}" +
+      s"${if (lww) " LWW" else ""})"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
-    if (asOf.isDefined) util.EnumSet.of(TableCapability.BATCH_READ)
+    if (asOf.isDefined || lww) util.EnumSet.of(TableCapability.BATCH_READ)
     else util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ,
       TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new KvScanBuilder(path, tableSchema, asOf, hadoopConf)
+    new KvScanBuilder(path, tableSchema, asOf, hadoopConf, lww)
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(asOf.isEmpty, s"kvtable snapshot $name is read-only")
+    require(asOf.isEmpty && !lww, s"kvtable view $name is read-only")
     new KvWriteBuilder(path, info, hadoopConf)
   }
 
@@ -138,7 +143,7 @@ class KvBatchTable(path: String, tableSchema0: StructType,
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-    require(asOf.isEmpty, s"kvtable snapshot $name is read-only")
+    require(asOf.isEmpty && !lww, s"kvtable view $name is read-only")
     new KvRowLevelOperationBuilder(path, tableSchema, info, hadoopConf)
   }
 
@@ -165,9 +170,27 @@ class KvBatchTable(path: String, tableSchema0: StructType,
   }
 }
 
+/** `lww`: build the merge-on-read scan of the LWW view (see [[KvScan]]).
+  * Its output rows are merged, so it declines LIMIT, top-N and
+  * aggregate pushdown, and only filters that cannot change a key's
+  * winner prune row groups ([[KvV2Util.mergeSafe]]). */
+object KvBatchTable {
+  /** The LWW view of the bucket-compacted table at `path`: each live
+    * key's newest raw row (engine columns included), served by the
+    * merge scan. `KvTable` builds it — only for a table
+    * [[KvV2Util.mergeable]] admits, so the merge keeps its order. */
+  def lwwView(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
+    val conf = KvHadoopConf(spark)
+    org.apache.spark.sql.graftbridge.V2Frame(spark,
+      new KvBatchTable(path, KvV2Util.inferSchema(path, conf), hadoopConf = conf,
+        lww = true))
+  }
+}
+
 class KvScanBuilder(path: String, fullSchema: StructType,
                     asOf: Option[Long] = None,
-                    hadoopConf: Configuration = KvHadoopConf.active())
+                    hadoopConf: Configuration = KvHadoopConf.active(),
+                    lww: Boolean = false)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates
@@ -188,7 +211,7 @@ class KvScanBuilder(path: String, fullSchema: StructType,
     * residuals, so a filtered scan never truncates wrongly (the
     * planning guard repeats the check defensively). */
   override def pushLimit(n: Int): Boolean = {
-    limit = Some(n)
+    if (!lww) limit = Some(n)
     false
   }
 
@@ -208,7 +231,7 @@ class KvScanBuilder(path: String, fullSchema: StructType,
       n: Int): Boolean = {
     import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection}
     val keyName = KvV2Util.readKeyField(path, hadoopConf)
-    val ok = orders.length == 1 && keyName.nonEmpty &&
+    val ok = !lww && orders.length == 1 && keyName.nonEmpty &&
       (orders(0).expression() match {
         case nr: NamedReference =>
           nr.fieldNames().length == 1 && nr.fieldNames()(0) == keyName.get
@@ -227,7 +250,9 @@ class KvScanBuilder(path: String, fullSchema: StructType,
   /** Keep every filter as a Spark-side residual (return value) while
     * remembering the ones usable for file pruning (pushedFilters). */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(KvV2Util.prunable)
+    lazy val key = KvV2Util.readKeyField(path, hadoopConf)
+    pushed = filters.filter(f => KvV2Util.prunable(f) &&
+      (!lww || KvV2Util.mergeSafe(f, key)))
     filters
   }
 
@@ -254,7 +279,8 @@ class KvScanBuilder(path: String, fullSchema: StructType,
       : Option[(StructType, Array[Any])] = {
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    if (agg.groupByExpressions.nonEmpty || pushed.nonEmpty || asOf.nonEmpty)
+    if (lww || agg.groupByExpressions.nonEmpty || pushed.nonEmpty ||
+        asOf.nonEmpty)
       return None
     def named(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
@@ -345,7 +371,7 @@ class KvScanBuilder(path: String, fullSchema: StructType,
     case Some((schema, values)) => new KvAggScan(path, schema, values)
     case None =>
       new KvScan(path, fullSchema, required, pushed, asOf, limit, topN,
-        hadoopConf)
+        hadoopConf, lww)
   }
 }
 
@@ -394,19 +420,30 @@ case class KvAggPartition(values: Array[Any]) extends InputPartition
   *    shuffle — the engine's region-local scan
   *    (`TableInputFormatWrap.java:74-78`). Requires
   *    `spark.sql.sources.v2.bucketing.enabled=true`.
+  *
+  * With `lww` the scan serves the LWW view by merge-on-read, the way an
+  * LSM store merges its key-sorted runs: ONE partition per bucket,
+  * whose reader ([[KvMergeReader]]) k-way merges the bucket's planned
+  * row groups by rowkey and emits each live key's newest row, key
+  * ordered. The merge needs every version of a key in one partition,
+  * so it requires a bucket-compacted table. It replaces the Sort,
+  * SortAggregate and Exchange a `groupBy(key).agg(max_by(...))`
+  * collapse costs.
   */
 class KvScan(path: String, fullSchema: StructType, required: StructType,
              pushed: Array[Filter], asOf: Option[Long] = None,
              limit: Option[Int] = None,
              topN: Option[(Boolean, Int)] = None,
-             hadoopConf: Configuration)
+             hadoopConf: Configuration,
+             lww: Boolean = false)
     extends Scan with Batch with SupportsReportPartitioning
     with SupportsReportOrdering
     with SupportsRuntimeFiltering {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"kvtable($path) PushedFilters: [${pushed.mkString(", ")}], " +
+    s"kvtable($path)${if (lww) " LwwMerge" else ""} " +
+      s"PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.simpleString}" +
       asOf.map(v => s", VersionAsOf: $v").getOrElse("") +
       limit.map(n => s", PushedLimit: $n").getOrElse("") +
@@ -499,30 +536,56 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
   // longer carry their stats), so this is pure partition pruning.
   @volatile private var runtimeBuckets: Option[Set[Int]] = None
 
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    val conf = hadoopConf
-    val cols = Seq.newBuilder[org.apache.spark.sql.connector.expressions.NamedReference]
-    if (KvV2Util.readBuckets(path, conf) > 0) {
-      cols += org.apache.spark.sql.connector.expressions.Expressions
-        .column(KvV2Util.BucketCol)
-      KvV2Util.readKeyField(path, conf).foreach(k =>
-        cols += org.apache.spark.sql.connector.expressions.Expressions.column(k))
-    }
-    cols.result().toArray
-  }
+  // only columns the scan outputs: Spark resolves them against it
+  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+    if (KvV2Util.readBuckets(path, hadoopConf) <= 0) Array.empty
+    else (KvV2Util.BucketCol +: KvV2Util.readKeyField(path, hadoopConf).toSeq)
+      .filter(required.fieldNames.contains)
+      .map(org.apache.spark.sql.connector.expressions.Expressions.column).toArray
 
   override def filter(filters: Array[Filter]): Unit = {
     runtimeBuckets =
       KvV2Util.bucketSetFor(path, hadoopConf, filters, fullSchema)
   }
 
-  override def planInputPartitions(): Array[InputPartition] =
-    runtimeBuckets match {
-      case Some(bs) =>
-        planned.filter(p => p.bucket < 0 || bs.contains(p.bucket))
-          .map(p => p: InputPartition)
-      case None => planned.map(p => p: InputPartition)
+  /** The merge scan's partitions: one per bucket, its row groups
+    * grouped into one run per file. */
+  private lazy val merged: Array[KvMergePartition] =
+    planned.groupBy(_.bucket).toArray.sortBy(_._1).map { case (b, groups) =>
+      KvMergePartition(b, KvRun.of(groups), groups.flatMap(_.hostnames).distinct,
+        groups.length)
     }
+
+  // row groups the last planInputPartitions handed to tasks
+  @volatile private var groupsPlanned = 0L
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    def kept(bucket: Int) = runtimeBuckets.forall(bs => bucket < 0 || bs.contains(bucket))
+    val parts: Array[InputPartition] =
+      if (lww) {
+        require(KvV2Util.readBuckets(path, hadoopConf) > 0,
+          s"kvtable($path): the LWW view (row-level UPDATE/MERGE, non-key " +
+            "DELETE) needs a bucket-compacted table so it merges " +
+            "region-locally — run CALL <cat>.system.compact(table, buckets) " +
+            "first; DELETE by rowkey equality/IN works on any table")
+        require(planned.forall(_.bucket >= 0),
+          s"kvtable($path): unbucketed files in a bucket-compacted table")
+        merged.filter(p => kept(p.bucket)).map(p => p: InputPartition)
+      } else planned.filter(p => kept(p.bucket)).map(p => p: InputPartition)
+    groupsPlanned = parts.map {
+      case m: KvMergePartition => m.groups.toLong
+      case _ => 1L
+    }.sum
+    parts
+  }
+
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    KvScanMetrics.supported
+
+  override def reportDriverMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(KvScanMetrics.value(KvScanMetrics.RowGroupsPlanned, groupsPlanned))
 
   /** Per-bucket grouped partitioning for bucket-compacted tables. Only
     * reported when the query keeps `__bucket` in the read schema (the
@@ -531,37 +594,73 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
   override def outputPartitioning(): partitioning.Partitioning = {
     val bucketed = required.fieldNames.contains(KvV2Util.BucketCol) &&
       planned.nonEmpty && planned.forall(_.bucket >= 0)
+    val n = if (lww) merged.length else planned.length
     if (bucketed) {
       val distinct = planned.map(_.bucket).distinct.length
       new partitioning.KeyGroupedPartitioning(
         Array(org.apache.spark.sql.connector.expressions.Expressions
           .identity(KvV2Util.BucketCol)), distinct)
-    } else new partitioning.UnknownPartitioning(planned.length)
+    } else new partitioning.UnknownPartitioning(n)
   }
 
   /** Per-partition rowkey ordering, reported when EVERY planned
     * partition's file is recorded key-sorted in the manifest (V2
     * writers observe the order as rows stream through; compaction
     * records the sort it just performed) and the key survives into the
-    * read schema. A partition is one row group of a sorted file, so
-    * its rows are ascending in the key; Spark then drops the local
-    * Sort under windows / merge joins / sortWithinPartitions on
-    * compacted layouts. False on any unknown file — never wrong. */
+    * read schema. A partition is one row group of a sorted file, or
+    * one bucket's merge of sorted runs, so its rows are ascending in
+    * the key; Spark then drops the local Sort under windows / merge
+    * joins / sortWithinPartitions on compacted layouts. A merge
+    * partition is one bucket, so when `__bucket` is read the order is
+    * (`__bucket`, key): a bucket-partitioned write or a join on
+    * (`__bucket`, key) then needs no Sort either. False on any unknown
+    * file — never wrong. */
   override def outputOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
+    import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
     val key = KvV2Util.readKeyField(path, hadoopConf)
     val ok = key.exists(k => required.fieldNames.contains(k)) &&
       planned.nonEmpty && planned.forall(_.sorted)
+    val bucketFirst = lww && required.fieldNames.contains(KvV2Util.BucketCol)
     if (ok)
-      Array(org.apache.spark.sql.connector.expressions.Expressions.sort(
-        org.apache.spark.sql.connector.expressions.Expressions
-          .identity(key.get),
-        org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
+      ((if (bucketFirst) Seq(KvV2Util.BucketCol) else Nil) :+ key.get).map(c =>
+        Expressions.sort(Expressions.identity(c), SortDirection.ASCENDING)).toArray
     else Array.empty
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    KvReaderFactory(required, hadoopConf, asOf)
+    if (lww) KvMergeReaderFactory(required, fullSchema,
+      KvV2Util.readKeyField(path, hadoopConf).getOrElse(
+        throw new IllegalStateException(s"kvtable($path): no rowkey declared")),
+      hadoopConf, asOf)
+    else KvReaderFactory(required, hadoopConf, asOf)
+}
+
+/** One bucket of a merge scan: its runs, the bucket's preferred hosts and
+  * the number of row groups the runs cover. */
+case class KvMergePartition(bucket: Int, runs: Array[KvRun],
+                            hostnames: Array[String], groups: Int)
+    extends InputPartition with HasPartitionKey {
+  override def preferredLocations(): Array[String] = hostnames
+  override def partitionKey(): InternalRow =
+    new GenericInternalRow(Array[Any](bucket))
+}
+
+/** The planned row groups of one file, as byte-range splits in file
+  * order (adjacent groups joined into one split). `sorted`: the manifest
+  * records the file key-sorted. */
+case class KvRun(file: String, fileSize: Long, splits: Array[(Long, Long)],
+                 sorted: Boolean)
+
+object KvRun {
+  def of(groups: Array[KvInputPartition]): Array[KvRun] =
+    groups.groupBy(_.file).toArray.sortBy(_._1).map { case (file, gs) =>
+      val splits = gs.sortBy(_.start).foldLeft(List.empty[(Long, Long)]) {
+        case ((s, l) :: rest, g) if s + l == g.start => (s, l + g.length) :: rest
+        case (acc, g) => (g.start, g.length) :: acc
+      }.reverse.toArray
+      KvRun(file, gs.head.fileSize, splits, gs.forall(_.sorted))
+    }
 }
 
 /** One parquet row group: `[start, start+length)` byte range of a file
@@ -650,7 +749,7 @@ object KvReaderFactory {
   * the rows above the `VERSION AS OF` ceiling. */
 class KvPartitionReader(part: KvInputPartition, required: StructType,
                         reader: KvRowReader, asOf: Option[Long] = None)
-    extends PartitionReader[InternalRow] {
+    extends PartitionReader[InternalRow] with KvRowCounts {
 
   private val rows = reader.open(part.file, part.start, part.length,
     part.fileSize, part.bucket)
@@ -671,10 +770,12 @@ class KvPartitionReader(part: KvInputPartition, required: StructType,
   override def next(): Boolean = {
     while (rows.hasNext) {
       current = rows.next()
-      if (visible(current)) return true
+      decoded += 1
+      if (visible(current)) { emitted += 1; return true }
     }
     false
   }
+
 
   override def get(): InternalRow = projected match {
     case Some(p) => p.project(current); p
@@ -687,9 +788,241 @@ class KvPartitionReader(part: KvInputPartition, required: StructType,
   }
 }
 
+/** Merge-on-read of one bucket (the HBase region read): each key's
+  * newest (`__version`, `__seq`) row, tombstones dropped; rows above the
+  * `VERSION AS OF` ceiling are dropped BEFORE the merge, so they can
+  * neither win nor mask. Runs the manifest records key-sorted are k-way
+  * merged by rowkey and stream out in key order, holding one row per
+  * run. A bucket with any run not recorded sorted (a file written
+  * between the view's choice and planning) is collapsed in a hash map
+  * instead: correct, unordered, memory bounded by the bucket's keys. */
+class KvMergeReader(part: KvMergePartition, required: StructType,
+                    keyField: String, reader: KvRowReader,
+                    asOf: Option[Long])
+    extends PartitionReader[InternalRow] with KvRowCounts {
+  import graft.kv.KvTable.{SeqCol, TombstoneCol, VersionCol}
+
+  private def idx(name: String) = reader.names.indexOf(name)
+  private val keyIdx = idx(keyField)
+  private val keyType = reader.fields(keyField).dataType
+  private val (verIdx, seqIdx, tombIdx) = (idx(VersionCol), idx(SeqCol), idx(TombstoneCol))
+  // Spark's ascending order of the key type: the order sorted files hold
+  private val keyOrd = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(keyType)
+  private val out = reader.project(required)
+  private val opened = scala.collection.mutable.ArrayBuffer.empty[Iterator[InternalRow]]
+
+  private def long(r: InternalRow, i: Int): Long =
+    if (r.isNullAt(i)) 0L else r.getLong(i)
+  private def visible(r: InternalRow): Boolean = asOf.forall { v =>
+    r.isNullAt(verIdx) || r.getLong(verIdx) <= v
+  }
+  private def live(r: InternalRow): Boolean =
+    r.isNullAt(tombIdx) || !r.getBoolean(tombIdx)
+  // null keys first, as Spark sorts ascending
+  private def cmpKeys(a: Any, b: Any): Int =
+    if (a == null) { if (b == null) 0 else -1 }
+    else if (b == null) 1
+    else keyOrd.compare(a, b)
+
+  /** A run's visible rows. The reader reuses its row buffers: a row is
+    * valid only until its run advances. */
+  private def rows(run: KvRun): Iterator[InternalRow] =
+    run.splits.iterator.flatMap { case (start, len) =>
+      val it = reader.open(run.file, start, len, run.fileSize, part.bucket)
+      opened += it
+      it
+    }.filter { r => decoded += 1; visible(r) }
+
+  private def merged: Iterator[InternalRow] = new Iterator[InternalRow] {
+    private val its = part.runs.map(rows)
+    private val heads = new Array[InternalRow](its.length)
+    private val keys = new Array[Any](its.length)
+    private val heap = new java.util.PriorityQueue[Integer](
+      math.max(1, its.length), (a: Integer, b: Integer) => cmpKeys(keys(a), keys(b)))
+    private def step(r: Int): Unit =
+      if (its(r).hasNext) {
+        heads(r) = its(r).next()
+        keys(r) = heads(r).get(keyIdx, keyType)
+      } else heads(r) = null
+    its.indices.foreach { r => step(r); if (heads(r) != null) heap.add(r) }
+
+    private var pending: InternalRow = _
+
+    /** The next key's winner, or null when every run is drained. */
+    private def winner(): InternalRow = {
+      val key = InternalRow.copyValue(keys(heap.peek()))
+      var best: InternalRow = null
+      var (bv, bs) = (0L, 0L)
+      while (!heap.isEmpty && cmpKeys(keys(heap.peek()), key) == 0) {
+        val r: Int = heap.poll()
+        while (heads(r) != null && cmpKeys(keys(r), key) == 0) {
+          val row = heads(r)
+          val (v, s) = (long(row, verIdx), long(row, seqIdx))
+          if (best == null || v > bv || (v == bv && s >= bs)) {
+            best = row.copy(); bv = v; bs = s
+          }
+          step(r)
+        }
+        if (heads(r) != null) heap.add(r)
+      }
+      best
+    }
+
+    override def hasNext: Boolean = {
+      while (pending == null && !heap.isEmpty) {
+        val w = winner()
+        if (live(w)) pending = w
+      }
+      pending != null
+    }
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException
+      val r = pending
+      pending = null
+      r
+    }
+  }
+
+  private def hashed: Iterator[InternalRow] = {
+    // key -> (version, seq, row); a kept row is copied, the raw key
+    // serves only lookups
+    val best = new java.util.HashMap[Any, (Long, Long, InternalRow)]()
+    part.runs.foreach(run => rows(run).foreach { r =>
+      val (ver, seq) = (long(r, verIdx), long(r, seqIdx))
+      val prev = best.get(r.get(keyIdx, keyType))
+      if (prev == null || ver > prev._1 || (ver == prev._1 && seq >= prev._2)) {
+        val kept = r.copy()
+        best.put(kept.get(keyIdx, keyType), (ver, seq, kept))
+      }
+    })
+    best.values().iterator().asScala.map(_._3).filter(live)
+  }
+
+  private val winners: Iterator[InternalRow] =
+    if (part.runs.forall(_.sorted)) merged else hashed
+
+  override def next(): Boolean =
+    if (winners.hasNext) { out.project(winners.next()); emitted += 1; true }
+    else false
+
+  override def get(): InternalRow = out
+
+
+  override def close(): Unit = opened.foreach {
+    case c: java.io.Closeable => c.close()
+    case _ => ()
+  }
+}
+
+class KvMergeReaderFactory(required: StructType, keyField: String,
+                           reader: KvRowReader, asOf: Option[Long])
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new KvMergeReader(partition.asInstanceOf[KvMergePartition], required,
+      keyField, reader, asOf)
+}
+
+object KvMergeReaderFactory {
+  /** The merge reads the key and engine columns whatever the query
+    * projects: the read projection is widened, output rows carry only
+    * `required`. */
+  def apply(required: StructType, fullSchema: StructType, keyField: String,
+            conf: Configuration, asOf: Option[Long]): KvMergeReaderFactory = {
+    import graft.kv.KvTable.{SeqCol, TombstoneCol, VersionCol}
+    val readFields = Seq(keyField, VersionCol, SeqCol, TombstoneCol)
+      .filterNot(required.fieldNames.contains)
+      .foldLeft(required) { (s, n) =>
+        s.add(fullSchema.fields.find(_.name == n).getOrElse(
+          StructField(n, if (n == TombstoneCol) BooleanType else LongType)))
+      }
+    new KvMergeReaderFactory(required, keyField, KvRowReader(readFields, conf), asOf)
+  }
+}
+
+/** A reader's [[KvScanMetrics]] row counts. A grouped partition (several
+  * row groups of one bucket in one task) reads through several readers;
+  * each starts from the counts of the one before. */
+trait KvRowCounts extends PartitionReader[InternalRow] {
+  protected var decoded, emitted = 0L
+
+  override def initMetricsValues(
+      metrics: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric]): Unit =
+    metrics.foreach { m =>
+      if (m.name == KvScanMetrics.RowsDecoded) decoded += m.value
+      else if (m.name == KvScanMetrics.RowsEmitted) emitted += m.value
+    }
+
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    KvScanMetrics.rows(decoded, emitted)
+}
+
+/** The scan's Spark SQL metrics: rows the parquet reader decoded and
+  * rows the scan emitted (per task, summed), and row groups planned
+  * (driver side). On a merge scan decoded / emitted is the read
+  * amplification the merge absorbs. */
+object KvScanMetrics {
+  val RowsDecoded = "rowsDecoded"
+  val RowsEmitted = "rowsEmitted"
+  val RowGroupsPlanned = "rowGroupsPlanned"
+
+  def supported: Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new KvRowsDecodedMetric, new KvRowsEmittedMetric, new KvRowGroupsPlannedMetric)
+
+  def value(n: String, v: Long): org.apache.spark.sql.connector.metric.CustomTaskMetric =
+    new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+      override def name(): String = n
+      override def value(): Long = v
+    }
+
+  def rows(decoded: Long, emitted: Long)
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(value(RowsDecoded, decoded), value(RowsEmitted, emitted))
+}
+
+class KvRowsDecodedMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = KvScanMetrics.RowsDecoded
+  override def description(): String = "rows decoded"
+}
+
+class KvRowsEmittedMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = KvScanMetrics.RowsEmitted
+  override def description(): String = "rows emitted"
+}
+
+class KvRowGroupsPlannedMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = KvScanMetrics.RowGroupsPlanned
+  override def description(): String = "row groups planned"
+}
+
 object KvV2Util {
 
   val BucketCol = "__bucket"
+
+  /** Whether the table at `path` serves its LWW view by merge-on-read:
+    * it is bucket-compacted and the manifest records every data file,
+    * at its current length, as key-sorted. */
+  def mergeable(path: String, conf: Configuration): Boolean =
+    readBuckets(path, conf) > 0 && {
+      val byRel = KvStats.read(path, conf)
+        .map(_.files.map(f => f.path -> f).toMap).getOrElse(Map.empty)
+      dataFiles(path, conf).forall { f =>
+        val rel = KvStats.relativize(path, f.getPath, conf)
+        bucketOf(rel) >= 0 && byRel.get(rel).exists(s => s.len == f.getLen && s.sorted)
+      }
+    }
+
+  /** Whether a filter may prune row groups under the merge: one on the
+    * rowkey or `__bucket` (every version of a key shares both), or a
+    * lower bound on `__version` (a group wholly below it holds no
+    * winner the bound keeps). Any other predicate on a superseded
+    * version could drop the newer row that shadows an older match, so
+    * it stays a residual after the merge only. */
+  def mergeSafe(f: Filter, keyField: Option[String]): Boolean = f match {
+    case GreaterThan(graft.kv.KvTable.VersionCol, _) |
+         GreaterThanOrEqual(graft.kv.KvTable.VersionCol, _) => true
+    case _ => f.references.forall(c => c == BucketCol || keyField.contains(c))
+  }
 
   /** Driver-side parquet footer opens — observable so tests can assert
     * the manifest-planned path does ZERO of them. */

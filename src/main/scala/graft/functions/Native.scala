@@ -3,6 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -57,12 +58,16 @@ object Native {
     "graft_bloom_might_contain" -> (es => BloomMightContain(es(0), es(1))))
 
   /** Idempotent per-session registration; call before analysis of any
-    * plan using these columns. */
-  def register(spark: SparkSession): Unit =
+    * plan using these columns. Names the session already binds are
+    * left alone, so repeated calls neither re-register nor log Spark's
+    * "replaced a previously registered function" warning. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     fns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+  }
 
   def tokenHashes(toks: Column): Column =
     call_function("graft_token_hashes", toks)

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
@@ -102,9 +103,11 @@ object TableFns {
 
   /** Idempotent per-session registration (the [[Native.register]]
     * pattern for the table-function registry). */
-  def register(spark: SparkSession): Unit =
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.tableFunctionRegistry
     fns.foreach { case (name, builder) =>
-      spark.sessionState.tableFunctionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+  }
 }

@@ -33,18 +33,22 @@ object SinkMode {
   * three engine columns — `__version` (writer-assigned batch
   * number or user-supplied column, e.g. an event time), `__seq`
   * (intra-batch tiebreak), `__tombstone` (delete marker). The read view
-  * collapses to last-write-wins per key with a single partial-aggregating
-  * shuffle: `groupBy(key).agg(max_by(struct(*), struct(version, seq)))`.
+  * is last-write-wins per key. On a bucket-compacted table whose files
+  * are all recorded key-sorted, the connector's scan merges each
+  * bucket's sorted runs and emits only the newest row per key
+  * (merge-on-read, the LSM read; see [[graft.connector.KvScan]]). Any
+  * other table collapses with one aggregation:
+  * `groupBy(key).agg(max_by(struct(*), struct(version, seq)))`.
   *
   * Scale notes (100 TB): appends are pure file adds (no read-modify-write,
   * no shuffle on the write path beyond what the producing query needs,
   * except the one clustering shuffle into a bucketed table's buckets);
-  * the LWW read is one hash aggregation with map-side partial combine —
-  * Spark's partial `max_by` keeps only one row per key per input
-  * partition before the shuffle, so shuffle volume is bounded by
-  * |distinct keys touched per partition|, not by table size. Key-range
+  * the merge read has no shuffle, no sort and no aggregation, and holds
+  * one row per run; the aggregate LWW read partial-combines map-side,
+  * so its shuffle volume is bounded by |distinct keys touched per
+  * partition|, not by table size. Key-range
   * scans push a parquet min/max filter on the key column before the
-  * aggregation. Compaction (`compact`) rewrites the log to a single
+  * merge or aggregation. Compaction (`compact`) rewrites the log to a single
   * current version per key, which also restores pushdown-friendly
   * parquet statistics after many small appends.
   *
@@ -317,30 +321,30 @@ object KvTable {
   }
 
   /** Raw log scan (all versions + tombstones), for debugging/compaction.
-    * Self-heals a crash-stranded `.data-old` generation before resolving
-    * the data dir (the failure-path check costs nothing when the table
-    * is healthy — it only runs after the read fails to resolve).
+    * The schema is declared — the manifest's, footer fallback
+    * ([[graft.connector.KvV2Util.inferSchema]], `__bucket` last) — so
+    * building the read runs no Spark job. Self-heals a crash-stranded
+    * `.data-old` generation before resolving the data dir (the
+    * failure-path check costs nothing when the table is healthy — it
+    * only runs after the read fails to resolve).
     *
-    * A table whose every key was tombstoned and then COMPACTED has a
-    * data dir with zero parquet files (nothing survives the collapse),
-    * so schema inference fails — the stats manifest still remembers the
-    * file layout, and an empty frame with that schema is the correct
-    * read (found by the KvLifecycleProps random-op sequences). A table
-    * whose appends so far held zero rows has no data dir at all and
-    * reads the same way. */
-  def readRaw(spark: SparkSession, path: String): DataFrame =
-    try spark.read.parquet(dataDir(path))
+    * A table whose appends so far held zero rows has no data dir at all
+    * and reads as an empty frame of that schema. */
+  def readRaw(spark: SparkSession, path: String): DataFrame = {
+    val schema = graft.connector.KvV2Util.inferSchema(path, KvHadoopConf(spark))
+    val dir = dataDir(path)
+    def load() = spark.read.schema(schema).parquet(dir)
+    try load()
     catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        if (restoreIfStranded(spark, path)) spark.read.parquet(dataDir(path))
-        else if ((e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-            e.getCondition == "PATH_NOT_FOUND") && exists(spark, path)) {
-          val schema = graft.connector.KvV2Util.inferSchema(path,
-            KvHadoopConf(spark))
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getCondition == "PATH_NOT_FOUND" =>
+        if (restoreIfStranded(spark, path)) load()
+        else if (exists(spark, path))
           spark.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-        } else throw e
+        else throw e
     }
+  }
 
   /** The last-write-wins read view: one row per live key, newest
     * (version, seq) wins, tombstones filtered out. Value columns carry
@@ -365,28 +369,50 @@ object KvTable {
     * result, but split planning, manifest-stats pruning and locality go
     * through the engine's own region-scan analog.
     *
-    * On a bucket-compacted table the collapse groups by (`__bucket`,
-    * key): the bucket is a pure function of the key so the result is
-    * identical, but the scan's reported per-bucket KeyGroupedPartitioning
-    * then satisfies the aggregation's distribution and the plan runs
-    * with NO shuffle (with `spark.sql.sources.v2.bucketing.enabled`) —
-    * the region-local scan of `TableInputFormatWrap.java:74-78`. */
+    * On a bucket-compacted table whose files are all recorded key-sorted
+    * the connector's scan merges each bucket's runs and returns live
+    * rows only ([[mergeView]]): no aggregation, no sort, no shuffle.
+    * Otherwise it is [[lwwView]] over the raw log. */
   def readV2(spark: SparkSession, path: String): DataFrame = {
     val schema = readSchema(spark, path)
-    lwwView(spark.read.format("kvtable").load(path), schema)
+    mergeView(spark, path).fold(
+      lwwView(spark.read.format("kvtable").load(path), schema))(live(_, schema))
   }
+
+  /** The merge-on-read LWW view of the table — each live key's newest
+    * raw row, engine columns included — when the table qualifies
+    * ([[graft.connector.KvV2Util.mergeable]]: bucket-compacted, every
+    * file recorded key-sorted); None keeps the aggregate. */
+  private def mergeView(spark: SparkSession, path: String): Option[DataFrame] =
+    if (graft.connector.KvV2Util.mergeable(path, KvHadoopConf(spark)))
+      Some(graft.connector.KvBatchTable.lwwView(spark, path))
+    else None
+
+  /** The key and value columns (with their (family, qualifier)
+    * metadata) of a merge view, then `extra`. */
+  private def live(view: DataFrame, schema: KvSchema,
+                   extra: Column*): DataFrame =
+    view.select((col(schema.keyField) +: schema.valueFields.map(f =>
+      col(f.name).as(f.name, f.metadata))) ++ extra: _*)
 
   /** LWW collapse over an externally-obtained raw log DataFrame — e.g. a
     * catalog SQL read (`spark.table("graft_kv.ns.t")`, see
-    * [[graft.connector.KvCatalog]]), which exposes the raw log because a
-    * V2 scan cannot express the collapse aggregation. Bucketed reads
-    * group by (`__bucket`, key) so the scan's KeyGroupedPartitioning
-    * keeps the plan shuffle-free, same as [[readV2]]. */
+    * [[graft.connector.KvCatalog]]), which exposes the raw log. This is
+    * the aggregate path, for tables the merge scan does not serve.
+    * Bucketed reads group by (`__bucket`, key): the bucket is a pure
+    * function of the key so the result is identical, but the scan's
+    * reported per-bucket KeyGroupedPartitioning then satisfies the
+    * aggregation's distribution and the plan runs with NO shuffle (with
+    * `spark.sql.sources.v2.bucketing.enabled`). */
   def lwwView(raw: DataFrame, schema: KvSchema): DataFrame =
     if (raw.columns.contains(BucketCol))
       collapse(raw, schema, groupExtra = Seq(col(BucketCol)))
     else collapse(raw, schema)
 
+  /** The aggregate LWW collapse: Spark plans it as Sort + SortAggregate
+    * (a struct aggregation buffer rules out hash aggregation), after an
+    * Exchange unless the scan's partitioning satisfies the grouping.
+    * Reads the merge scan serves ([[mergeView]]) skip it. */
   private def collapse(raw: DataFrame, schema: KvSchema,
                        groupExtra: Seq[Column] = Nil,
                        keepExtra: Boolean = false): DataFrame = {
@@ -403,9 +429,12 @@ object KvTable {
   /** Co-located (storage-partitioned) join of two BUCKET-COMPACTED
     * tables on their rowkeys — the bucketing payoff: both sides scan
     * region-locally (`KeyGroupedPartitioning(__bucket)`), each side's
-    * LWW collapse runs partition-local, and the join matches bucket
-    * partitions directly, so the WHOLE plan — two scans, two
-    * collapses, one join — has ZERO Exchange (spec-asserted). The
+    * LWW view is its merge scan (or a partition-local collapse when the
+    * table does not qualify, see [[readV2]]), and the join matches
+    * bucket partitions directly, so the WHOLE plan — two scans, two
+    * LWW views, one join — has ZERO Exchange (spec-asserted); merge
+    * scans report (`__bucket`, key) order, so a sort-merge join sorts
+    * nothing either. The
     * bucket equality in the join condition is semantically redundant
     * (bucket is a pure function of the key and both tables must share
     * a bucket count — enforced) but is what lets Spark prove
@@ -437,15 +466,18 @@ object KvTable {
       s"column collision between the two tables: " +
         s"${(overlap -- allowed).mkString(", ")}")
     def side(path: String, s: KvSchema, suffix: String) =
-      collapse(spark.read.format("kvtable").load(path), s,
-        groupExtra = Seq(col(BucketCol)), keepExtra = true)
+      mergeView(spark, path).fold(
+        collapse(spark.read.format("kvtable").load(path), s,
+          groupExtra = Seq(col(BucketCol)), keepExtra = true))(
+        live(_, s, col(BucketCol)))
         .withColumnRenamed(BucketCol, s"${BucketCol}$suffix")
         .withColumnRenamed(s.keyField, s"${s.keyField}$suffix")
     val a = side(pathA, sa, "__a")
     val b = side(pathB, sb, "__b")
+    // bucket first: the join keys then follow the merge scans' order
     a.join(b,
-        col(s"${sa.keyField}__a") === col(s"${sb.keyField}__b") &&
-          col(s"${BucketCol}__a") === col(s"${BucketCol}__b"),
+        col(s"${BucketCol}__a") === col(s"${BucketCol}__b") &&
+          col(s"${sa.keyField}__a") === col(s"${sb.keyField}__b"),
         joinType)
       .withColumn(sa.keyField,
         coalesce(col(s"${sa.keyField}__a"), col(s"${sb.keyField}__b")))
@@ -459,16 +491,19 @@ object KvTable {
   /** Rowkey-range scan (`Scan(startRow, stopRow)` analog,
     * `HBaseScheme.java:61-71`): closed-open `[lower, upper)` — fixing the
     * reference's two boundary bugs (SURVEY.md §2b). The predicate lands on
-    * the raw parquet scan (min/max pruning) BEFORE the LWW aggregation.
+    * the scan (min/max pruning) BEFORE the merge ([[readV2]]) or, on
+    * tables the merge does not serve, the LWW aggregation over [[readRaw]].
     */
   def readRange(spark: SparkSession, path: String,
                 lower: Option[Any], upper: Option[Any]): DataFrame = {
     val schema = readSchema(spark, path)
     val key = schema.keyField
-    var raw = readRaw(spark, path)
-    lower.foreach(l => raw = raw.filter(col(key) >= lit(l)))
-    upper.foreach(u => raw = raw.filter(col(key) < lit(u)))
-    collapse(raw, schema)
+    def bounded(df: DataFrame): DataFrame = {
+      val lo = lower.fold(df)(l => df.filter(col(key) >= lit(l)))
+      upper.fold(lo)(u => lo.filter(col(key) < lit(u)))
+    }
+    mergeView(spark, path).fold(collapse(bounded(readRaw(spark, path)), schema))(
+      v => live(bounded(v), schema))
   }
 
   /** Multi-version read: the newest `n` live versions per key, newest
@@ -664,9 +699,11 @@ object KvTable {
     * (O(table) IO per run — HBase's MAJOR compaction, correct but a
     * scheduled rarity at 100 TB); an append-heavy table instead
     * accumulates many small files (micro-batches, per-task appends)
-    * whose per-file overhead dominates scans. This op concatenates,
-    * per bucket directory (per region), every data file smaller than
-    * `smallFileBytes` into one merged file and deletes the originals —
+    * whose per-file overhead dominates scans. This op merges, per
+    * bucket directory (per region), every data file smaller than
+    * `smallFileBytes` into one key-sorted file (recorded sorted, so the
+    * merge-on-read scan keeps serving the table and its fan-in — one
+    * reader per run — drops) and deletes the originals —
     * large files are never read or touched, so the cost is
     * O(small-file bytes), independent of table size.
     *
@@ -702,6 +739,7 @@ object KvTable {
       // Lazy: an empty table (no data dir) must no-op before any read.
       lazy val dataSchema = org.apache.spark.sql.types.StructType(
         readRaw(spark, path).schema.fields.filterNot(_.name == BucketCol))
+      lazy val keyField = readSchema(spark, path).keyField
       val root = new HPath(dataDir(path))
       val groups: Seq[HPath] =
         if (!f.exists(root)) Seq.empty // created-but-never-written table
@@ -722,9 +760,12 @@ object KvTable {
         if (smalls.length >= minFiles) {
           val tmp = s"$path/.minor-tmp"
           f.delete(new HPath(tmp), true)
+          // key-sorted, so the merged file stays a sorted run for the
+          // merge-on-read scan
           spark.read.schema(dataSchema)
             .parquet(smalls.map(_.getPath.toString).toIndexedSeq: _*)
             .coalesce(1)
+            .sortWithinPartitions(col(keyField))
             .write.parquet(tmp)
           val produced = f.listStatus(new HPath(tmp))
             .filter(e => e.isFile && e.getPath.getName.endsWith(".parquet"))
@@ -753,6 +794,7 @@ object KvTable {
             val kept = m.files.filterNot(fs0 => dropped.contains(fs0.path))
             val added = KvStats.fromFooter(target,
               KvStats.relativize(path, target, conf), tgtLen, conf)
+              .copy(sorted = true)
             KvStats.clear(path, conf)
             KvStats.write(path, KvStats.Manifest(m.schema, kept :+ added), conf)
           }
@@ -809,6 +851,15 @@ object KvTable {
     * bucketing. Point lookups (`get`) and any key-equality scan then
     * touch exactly one bucket directory via ordinary partition pruning —
     * the HBase region-addressing analog for read-mostly tables.
+    *
+    * Into the table's own bucket count, on a table the merge scan
+    * serves ([[mergeView]]), the rewrite reads through that merge: each
+    * bucket's winners arrive key-sorted in their own partition and are
+    * written as they come — no aggregation, repartition or sort. The
+    * `expireBelow` bound prunes row groups before the merge and drops
+    * expired winners after it, which keeps exactly the cells expiring
+    * before the merge keeps (an expired winner's older versions are
+    * expired too).
     */
   def compactBucketed(spark: SparkSession, path: String, buckets: Int,
                       expireBelow: Option[Long] = None): Unit =
@@ -817,18 +868,27 @@ object KvTable {
     recoverMinor(spark, path) // BEFORE the read plan lists files
     val schema = readSchema(spark, path)
     val lastVer = readMetaVersion(spark, path)
-    val current = collapseKeepVersion(expireRaw(spark, path, expireBelow), schema)
-      .withColumn(SeqCol, lit(0L))
-      .withColumn(TombstoneCol, lit(false))
-      .withColumn(BucketCol, pmod(hash(col(schema.keyField)), lit(buckets)))
-      .repartition(buckets, col(BucketCol))
-      // key-sorted regions: tight, non-overlapping row-group key
-      // min/max inside each bucket file, so range scans and gets prune
-      // at ROW-GROUP granularity, not just to the bucket — and the
-      // sorted layout matches what the V2 write distribution produces
-      // for later appends (HBase stores are key-sorted for the same
-      // reason)
-      .sortWithinPartitions(col(schema.keyField))
+    val merge =
+      if (buckets == numBuckets(spark, path)) mergeView(spark, path) else None
+    val current = merge match {
+      case Some(view) =>
+        live(expireBelow.fold(view)(v => view.filter(col(VersionCol) >= v)),
+          schema, col(VersionCol), lit(0L).as(SeqCol), lit(false).as(TombstoneCol),
+          col(BucketCol))
+      case None =>
+        collapseKeepVersion(expireRaw(spark, path, expireBelow), schema)
+          .withColumn(SeqCol, lit(0L))
+          .withColumn(TombstoneCol, lit(false))
+          .withColumn(BucketCol, pmod(hash(col(schema.keyField)), lit(buckets)))
+          .repartition(buckets, col(BucketCol))
+          // key-sorted regions: tight, non-overlapping row-group key
+          // min/max inside each bucket file, so range scans and gets
+          // prune at ROW-GROUP granularity, not just to the bucket — and
+          // the sorted layout matches what the V2 write distribution
+          // produces for later appends (HBase stores are key-sorted for
+          // the same reason)
+          .sortWithinPartitions(col(schema.keyField))
+    }
     swapData(spark, path, current, buckets, lastVersion = lastVer,
       keySorted = true)
     }
@@ -1009,11 +1069,12 @@ object KvTable {
     */
   def get(spark: SparkSession, path: String, key: Any): DataFrame = {
     val schema = readSchema(spark, path)
-    val raw = spark.read.format("kvtable").load(path)
+    val merge = mergeView(spark, path)
+    val rows = merge.getOrElse(spark.read.format("kvtable").load(path))
     // Cast the lookup value to the STORED key type — a Scala Int probed
     // against a LongType key would Murmur3-hash to the wrong bucket.
-    val keyType = raw.schema(schema.keyField).dataType
-    collapse(raw.filter(col(schema.keyField) === lit(key).cast(keyType)),
-      schema)
+    val keyType = rows.schema(schema.keyField).dataType
+    val probe = rows.filter(col(schema.keyField) === lit(key).cast(keyType))
+    if (merge.isDefined) live(probe, schema) else collapse(probe, schema)
   }
 }

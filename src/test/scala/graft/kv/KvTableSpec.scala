@@ -472,6 +472,30 @@ class KvTableSpec extends SparkSpec {
     assert(deleteJobs <= writeJobs, s"delete $deleteJobs jobs, write $writeJobs")
     assert(KvTable.read(spark, path).count() === 0)
   }
+
+  test("building readRaw and readAsOf launches no Spark job, and compactMinor " +
+    "runs only its merge write (the schema is declared, not inferred)") {
+    import graft.connector.KvMergeFixtures.jobs
+    import org.apache.spark.sql.types.{IntegerType, StructField}
+    val path = TestSpark.scratch("kv-raw-jobs")
+    val s = KvSchema.of("k", "v" -> ("f", "v"), "n" -> ("f", "n"))
+    KvTable.write(Seq(("a", "x", 1L)).toDF("k", "v", "n"), path, s, SinkMode.Replace)
+    KvTable.write(Seq(("b", "y", 2L)).toDF("k", "v", "n").coalesce(1), path, s)
+    assert(jobs(spark)(KvTable.readRaw(spark, path)) === 0)
+    assert(jobs(spark)(KvTable.readAsOf(spark, path, 1L)) === 0)
+    assert(jobs(spark)(KvTable.compactMinor(spark, path,
+      smallFileBytes = Long.MaxValue)) === 1)
+    KvTable.compactBucketed(spark, path, 2)
+    KvTable.write(Seq(("c", "z", 3L)).toDF("k", "v", "n"), path, s)
+    assert(jobs(spark)(KvTable.readRaw(spark, path)) === 0)
+    val raw = KvTable.readRaw(spark, path)
+    // the bucket directory coordinate keeps its type and last position
+    assert(raw.schema.last === StructField("__bucket", IntegerType, nullable = true))
+    assert(raw.select("k", "__bucket").as[(String, Int)].collect().map(_._1).sorted ===
+      Array("a", "b", "c"))
+    assert(KvTable.readAsOf(spark, path, 2L).as[(String, String, Long)].collect()
+      .sortBy(_._1) === Array(("a", "x", 1L), ("b", "y", 2L)))
+  }
 }
 
 class KvSchemaSpec extends SparkSpec {
