@@ -17,7 +17,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
@@ -29,9 +29,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * This is the engine's analog of the reference's table-scan input
   * format (`TableInputFormatWrap.java`), re-expressed V2-style:
   *
-  *  - one `InputPartition` per parquet ROW GROUP = one split per region
+  *  - one split per parquet ROW GROUP = one split per region
   *    (`getSplits`, `TableInputFormatWrap.java:40-82`), planned from the
   *    persisted stats manifest ([[KvStats]]) with no driver footer IO;
+  *    an unbucketed scan packs small splits into tasks the way Spark's
+  *    file source packs small files (see [[KvScan]]);
   *  - rowkey-range row-group pruning from manifest min/max statistics =
   *    region pruning against `[startRow, stopRow)`
   *    (`TableInputFormatWrap.java:55-65`) — with CORRECT closed-open
@@ -46,7 +48,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - key filters are used for pruning and ALSO returned to Spark as
   *    residuals, so correctness never depends on reader-side filtering.
   *
-  * The relation exposes the RAW log (engine columns included).
+  * The relation exposes the RAW log (engine columns included); every
+  * `KvTable` read is built on it (`KvTable.readRaw`).
   * [[KvBatchTable.lwwView]] is the LWW view of a bucket-compacted table
   * instead: each live key's newest raw row, merged per bucket by the
   * scan ([[KvMergeReader]]); `KvTable` selects that view when every file
@@ -177,12 +180,14 @@ class KvBatchTable(path: String, tableSchema0: StructType,
 object KvBatchTable {
   /** The LWW view of the bucket-compacted table at `path`: each live
     * key's newest raw row (engine columns included), served by the
-    * merge scan. `KvTable` builds it — only for a table
-    * [[KvV2Util.mergeable]] admits, so the merge keeps its order. */
-  def lwwView(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
+    * merge scan, `VERSION AS OF` `asOf` when given. `KvTable` builds it
+    * — only for a table [[KvV2Util.mergeable]] admits, so the merge
+    * keeps its order. */
+  def lwwView(spark: SparkSession, path: String,
+              asOf: Option[Long] = None): org.apache.spark.sql.DataFrame = {
     val conf = KvHadoopConf(spark)
     org.apache.spark.sql.graftbridge.V2Frame(spark,
-      new KvBatchTable(path, KvV2Util.inferSchema(path, conf), hadoopConf = conf,
+      new KvBatchTable(path, KvV2Util.inferSchema(path, conf), asOf, conf,
         lww = true))
   }
 }
@@ -410,9 +415,13 @@ case class KvAggPartition(values: Array[Any]) extends InputPartition
   *  - planning reads the persisted stats manifest ([[KvStats]]) — no
   *    per-file driver footer IO (footer fallback only for files missing
   *    from the manifest, e.g. hand-placed ones);
-  *  - one `InputPartition` per parquet ROW GROUP (not per file), so one
-  *    giant file still parallelizes — the analog of the reference's one
-  *    split per region (`TableInputFormatWrap.java:40-82`);
+  *  - one split per parquet ROW GROUP (not per file), so one giant
+  *    file still parallelizes — the analog of the reference's one split
+  *    per region (`TableInputFormatWrap.java:40-82`); an unbucketed scan
+  *    packs the splits into tasks with Spark's file-source rule, so many
+  *    small appends do not each cost a task;
+  *  - the listing restores a data dir a crashed compaction left aside
+  *    ([[KvV2Util.restoreIfStranded]]);
   *  - row groups are pruned by manifest min/max before tasks launch;
   *  - bucket-compacted tables report `KeyGroupedPartitioning(__bucket)`
   *    ([[org.apache.spark.sql.connector.read.SupportsReportPartitioning]])
@@ -441,6 +450,10 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
     with SupportsRuntimeFiltering {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  // every reader is row-based: planning need not build the reader
+  // factory (it broadcasts the Hadoop configuration) just to ask
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.UNSUPPORTED
   override def description(): String =
     s"kvtable($path)${if (lww) " LwwMerge" else ""} " +
       s"PushedFilters: [${pushed.mkString(", ")}], " +
@@ -550,18 +563,47 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
 
   /** The merge scan's partitions: one per bucket, its row groups
     * grouped into one run per file. */
-  private lazy val merged: Array[KvMergePartition] =
+  private lazy val merged: Array[KvRunsPartition] =
     planned.groupBy(_.bucket).toArray.sortBy(_._1).map { case (b, groups) =>
-      KvMergePartition(b, KvRun.of(groups), groups.flatMap(_.hostnames).distinct,
+      KvRunsPartition(b, KvRun.of(groups), groups.flatMap(_.hostnames).distinct,
         groups.length)
+    }
+
+  /** The raw scan's tasks. An unbucketed scan packs its planned row
+    * groups the way Spark's file source packs files — each group one
+    * split, `FilePartition.maxSplitBytes` and `getFilePartitions` on the
+    * session's `spark.sql.files.maxPartitionBytes` and `openCostInBytes`
+    * — so many small appends read in a few tasks, not one task each. A
+    * bucketed scan keeps one task per group (each reports its bucket),
+    * and so does a layout whose every group is recorded key-sorted
+    * (each task then reports key order, see [[outputOrdering]]). */
+  private lazy val tasks: Array[KvPartition] =
+    if (planned.exists(_.bucket >= 0) || planned.forall(_.sorted))
+      planned.map(p => p: KvPartition)
+    else {
+      val spark = SparkSession.active
+      val openCost = spark.sessionState.conf.filesOpenCostInBytes
+      val maxSplit = FilePartition.maxSplitBytes(spark,
+        planned.map(_.length + openCost).sum)
+      // largest first, as the file source orders its splits
+      val splits = planned.sortBy(-_.length).toSeq.map(g => PartitionedFile(
+        InternalRow.empty, SparkPath.fromPathString(g.file), g.start, g.length,
+        g.hostnames, fileSize = g.fileSize) -> g)
+      val byStart = splits.map { case (f, g) => (f.filePath, f.start) -> g }.toMap
+      FilePartition.getFilePartitions(spark, splits.map(_._1), maxSplit).toArray.map { fp =>
+        fp.files.map(f => byStart((f.filePath, f.start))) match {
+          case Array(one) => one
+          case groups =>
+            KvRunsPartition(-1, KvRun.of(groups), fp.preferredLocations(), groups.length)
+        }
+      }
     }
 
   // row groups the last planInputPartitions handed to tasks
   @volatile private var groupsPlanned = 0L
 
   override def planInputPartitions(): Array[InputPartition] = {
-    def kept(bucket: Int) = runtimeBuckets.forall(bs => bucket < 0 || bs.contains(bucket))
-    val parts: Array[InputPartition] =
+    val parts: Array[KvPartition] =
       if (lww) {
         require(KvV2Util.readBuckets(path, hadoopConf) > 0,
           s"kvtable($path): the LWW view (row-level UPDATE/MERGE, non-key " +
@@ -570,13 +612,12 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
             "first; DELETE by rowkey equality/IN works on any table")
         require(planned.forall(_.bucket >= 0),
           s"kvtable($path): unbucketed files in a bucket-compacted table")
-        merged.filter(p => kept(p.bucket)).map(p => p: InputPartition)
-      } else planned.filter(p => kept(p.bucket)).map(p => p: InputPartition)
-    groupsPlanned = parts.map {
-      case m: KvMergePartition => m.groups.toLong
-      case _ => 1L
-    }.sum
-    parts
+        merged.map(p => p: KvPartition)
+      } else tasks
+    val kept = parts.filter(p =>
+      p.bucket < 0 || runtimeBuckets.forall(_.contains(p.bucket)))
+    groupsPlanned = kept.map(_.groups.toLong).sum
+    kept.map(p => p: InputPartition)
   }
 
   override def supportedCustomMetrics()
@@ -594,13 +635,12 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
   override def outputPartitioning(): partitioning.Partitioning = {
     val bucketed = required.fieldNames.contains(KvV2Util.BucketCol) &&
       planned.nonEmpty && planned.forall(_.bucket >= 0)
-    val n = if (lww) merged.length else planned.length
     if (bucketed) {
       val distinct = planned.map(_.bucket).distinct.length
       new partitioning.KeyGroupedPartitioning(
         Array(org.apache.spark.sql.connector.expressions.Expressions
           .identity(KvV2Util.BucketCol)), distinct)
-    } else new partitioning.UnknownPartitioning(n)
+    } else new partitioning.UnknownPartitioning(if (lww) merged.length else tasks.length)
   }
 
   /** Per-partition rowkey ordering, reported when EVERY planned
@@ -636,14 +676,22 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
     else KvReaderFactory(required, hadoopConf, asOf)
 }
 
-/** One bucket of a merge scan: its runs, the bucket's preferred hosts and
-  * the number of row groups the runs cover. */
-case class KvMergePartition(bucket: Int, runs: Array[KvRun],
-                            hostnames: Array[String], groups: Int)
-    extends InputPartition with HasPartitionKey {
-  override def preferredLocations(): Array[String] = hostnames
+/** What one task of a kvtable scan reads: `groups` planned row groups,
+  * as per-file [[KvRun]]s, of `bucket` (-1 when unbucketed). */
+sealed trait KvPartition extends InputPartition with HasPartitionKey {
+  def bucket: Int
+  def runs: Array[KvRun]
+  def groups: Int
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucket))
+}
+
+/** Several planned row groups in one task: one bucket of a merge scan,
+  * or a pack of an unbucketed raw scan (see [[KvScan]]). */
+case class KvRunsPartition(bucket: Int, runs: Array[KvRun],
+                           hostnames: Array[String], groups: Int)
+    extends KvPartition {
+  override def preferredLocations(): Array[String] = hostnames
 }
 
 /** The planned row groups of one file, as byte-range splits in file
@@ -664,7 +712,9 @@ object KvRun {
 }
 
 /** One parquet row group: `[start, start+length)` byte range of a file
-  * `fileSize` bytes long. `bucket` is the `__bucket=N`
+  * `fileSize` bytes long — the group's bytes, widened to the file's
+  * start for its first group and to its end for the last (parquet reads
+  * the groups whose midpoints fall in a split). `bucket` is the `__bucket=N`
   * partition-directory value (-1 when unbucketed);
   * `rows` is the group's manifest row count and `keyStat` its rowkey
   * column stats (limit / top-N planning — carried from the SAME
@@ -676,10 +726,10 @@ case class KvInputPartition(file: String, start: Long, length: Long,
                             rows: Long = 0L,
                             keyStat: Option[KvStats.ColStat] = None,
                             sorted: Boolean = false)
-    extends InputPartition with HasPartitionKey {
+    extends KvPartition {
   override def preferredLocations(): Array[String] = hostnames
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(Array[Any](bucket))
+  override def runs: Array[KvRun] = KvRun.of(Array(this))
+  override def groups: Int = 1
 }
 
 /** Spark's parquet row reader over a kvtable's files, built once on the
@@ -727,7 +777,7 @@ class KvReaderFactory(required: StructType, reader: KvRowReader,
                       asOf: Option[Long])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new KvPartitionReader(partition.asInstanceOf[KvInputPartition], required,
+    new KvPartitionReader(partition.asInstanceOf[KvPartition], required,
       reader, asOf)
 }
 
@@ -745,15 +795,63 @@ object KvReaderFactory {
   }
 }
 
-/** Reads one planned row group through Spark's parquet reader and drops
-  * the rows above the `VERSION AS OF` ceiling. */
-class KvPartitionReader(part: KvInputPartition, required: StructType,
-                        reader: KvRowReader, asOf: Option[Long] = None)
-    extends PartitionReader[InternalRow] with KvRowCounts {
+/** Reads a partition's runs through Spark's parquet reader, one split
+  * at a time, dropping the rows above the `VERSION AS OF` ceiling, and
+  * reports its [[KvScanMetrics]] row counts. A grouped partition
+  * (several row groups of one bucket in one task) reads through several
+  * readers; each starts from the counts of the one before. */
+abstract class KvRunsReader(part: KvPartition, reader: KvRowReader,
+                            asOf: Option[Long])
+    extends PartitionReader[InternalRow] {
+  protected var decoded, emitted = 0L
+  private val verIdx = reader.names.indexOf(graft.kv.KvTable.VersionCol)
+  private val ceiling = asOf.getOrElse(Long.MaxValue)
+  private val opened = scala.collection.mutable.ArrayBuffer.empty[Iterator[InternalRow]]
 
-  private val rows = reader.open(part.file, part.start, part.length,
-    part.fileSize, part.bucket)
-  private val versionIdx = reader.names.indexOf(graft.kv.KvTable.VersionCol)
+  override def initMetricsValues(
+      metrics: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric]): Unit =
+    metrics.foreach { m =>
+      if (m.name == KvScanMetrics.RowsDecoded) decoded += m.value
+      else if (m.name == KvScanMetrics.RowsEmitted) emitted += m.value
+    }
+
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    KvScanMetrics.rows(decoded, emitted)
+
+  /** The rows of one split of `run`, closed by [[close]]. The reader
+    * reuses its row buffers: a row is valid only until its split
+    * advances. */
+  protected def open(run: KvRun, split: (Long, Long)): Iterator[InternalRow] = {
+    val it = reader.open(run.file, split._1, split._2, run.fileSize, part.bucket)
+    opened += it
+    it
+  }
+
+  /** Counts `r` as decoded; whether it is at or below the `VERSION AS
+    * OF` ceiling. */
+  protected def visible(r: InternalRow): Boolean = {
+    decoded += 1
+    asOf.isEmpty || r.isNullAt(verIdx) || r.getLong(verIdx) <= ceiling
+  }
+
+  /** A run's visible rows, valid until the run advances. */
+  protected def rows(run: KvRun): Iterator[InternalRow] =
+    run.splits.iterator.flatMap(open(run, _)).filter(visible)
+
+  override def close(): Unit = opened.foreach {
+    case c: java.io.Closeable => c.close()
+    case _ => ()
+  }
+}
+
+/** The raw log rows of a partition's row groups. */
+class KvPartitionReader(part: KvPartition, required: StructType,
+                        reader: KvRowReader, asOf: Option[Long] = None)
+    extends KvRunsReader(part, reader, asOf) {
+
+  private val splits = part.runs.iterator.flatMap(run => run.splits.iterator.map((run, _)))
+  private var split: Iterator[InternalRow] = Iterator.empty
   // the reader puts `__bucket` last and may carry the widened `__version`
   private val projected: Option[ProjectingInternalRow] =
     if (required.fieldNames.toSeq == reader.names) None
@@ -761,30 +859,23 @@ class KvPartitionReader(part: KvInputPartition, required: StructType,
 
   private var current: InternalRow = _
 
-  /** Snapshot-bound check (trivially true for non-time-travel reads):
-    * rows versioned after the bound are invisible. */
-  private def visible(r: InternalRow): Boolean = asOf.forall { v =>
-    r.isNullAt(versionIdx) || r.getLong(versionIdx) <= v
-  }
-
+  // a loop, not an iterator chain over the splits: it runs once per row
   override def next(): Boolean = {
-    while (rows.hasNext) {
-      current = rows.next()
-      decoded += 1
-      if (visible(current)) { emitted += 1; return true }
+    while (true) {
+      while (split.hasNext) {
+        current = split.next()
+        if (visible(current)) { emitted += 1; return true }
+      }
+      if (!splits.hasNext) return false
+      val (run, range) = splits.next()
+      split = open(run, range)
     }
     false
   }
 
-
   override def get(): InternalRow = projected match {
     case Some(p) => p.project(current); p
     case None => current
-  }
-
-  override def close(): Unit = rows match {
-    case c: java.io.Closeable => c.close()
-    case _ => ()
   }
 }
 
@@ -796,10 +887,10 @@ class KvPartitionReader(part: KvInputPartition, required: StructType,
   * run. A bucket with any run not recorded sorted (a file written
   * between the view's choice and planning) is collapsed in a hash map
   * instead: correct, unordered, memory bounded by the bucket's keys. */
-class KvMergeReader(part: KvMergePartition, required: StructType,
+class KvMergeReader(part: KvRunsPartition, required: StructType,
                     keyField: String, reader: KvRowReader,
                     asOf: Option[Long])
-    extends PartitionReader[InternalRow] with KvRowCounts {
+    extends KvRunsReader(part, reader, asOf) {
   import graft.kv.KvTable.{SeqCol, TombstoneCol, VersionCol}
 
   private def idx(name: String) = reader.names.indexOf(name)
@@ -809,13 +900,9 @@ class KvMergeReader(part: KvMergePartition, required: StructType,
   // Spark's ascending order of the key type: the order sorted files hold
   private val keyOrd = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(keyType)
   private val out = reader.project(required)
-  private val opened = scala.collection.mutable.ArrayBuffer.empty[Iterator[InternalRow]]
 
   private def long(r: InternalRow, i: Int): Long =
     if (r.isNullAt(i)) 0L else r.getLong(i)
-  private def visible(r: InternalRow): Boolean = asOf.forall { v =>
-    r.isNullAt(verIdx) || r.getLong(verIdx) <= v
-  }
   private def live(r: InternalRow): Boolean =
     r.isNullAt(tombIdx) || !r.getBoolean(tombIdx)
   // null keys first, as Spark sorts ascending
@@ -823,15 +910,6 @@ class KvMergeReader(part: KvMergePartition, required: StructType,
     if (a == null) { if (b == null) 0 else -1 }
     else if (b == null) 1
     else keyOrd.compare(a, b)
-
-  /** A run's visible rows. The reader reuses its row buffers: a row is
-    * valid only until its run advances. */
-  private def rows(run: KvRun): Iterator[InternalRow] =
-    run.splits.iterator.flatMap { case (start, len) =>
-      val it = reader.open(run.file, start, len, run.fileSize, part.bucket)
-      opened += it
-      it
-    }.filter { r => decoded += 1; visible(r) }
 
   private def merged: Iterator[InternalRow] = new Iterator[InternalRow] {
     private val its = part.runs.map(rows)
@@ -906,19 +984,13 @@ class KvMergeReader(part: KvMergePartition, required: StructType,
     else false
 
   override def get(): InternalRow = out
-
-
-  override def close(): Unit = opened.foreach {
-    case c: java.io.Closeable => c.close()
-    case _ => ()
-  }
 }
 
 class KvMergeReaderFactory(required: StructType, keyField: String,
                            reader: KvRowReader, asOf: Option[Long])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new KvMergeReader(partition.asInstanceOf[KvMergePartition], required,
+    new KvMergeReader(partition.asInstanceOf[KvRunsPartition], required,
       keyField, reader, asOf)
 }
 
@@ -937,24 +1009,6 @@ object KvMergeReaderFactory {
       }
     new KvMergeReaderFactory(required, keyField, KvRowReader(readFields, conf), asOf)
   }
-}
-
-/** A reader's [[KvScanMetrics]] row counts. A grouped partition (several
-  * row groups of one bucket in one task) reads through several readers;
-  * each starts from the counts of the one before. */
-trait KvRowCounts extends PartitionReader[InternalRow] {
-  protected var decoded, emitted = 0L
-
-  override def initMetricsValues(
-      metrics: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric]): Unit =
-    metrics.foreach { m =>
-      if (m.name == KvScanMetrics.RowsDecoded) decoded += m.value
-      else if (m.name == KvScanMetrics.RowsEmitted) emitted += m.value
-    }
-
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    KvScanMetrics.rows(decoded, emitted)
 }
 
 /** The scan's Spark SQL metrics: rows the parquet reader decoded and
@@ -1072,10 +1126,23 @@ object KvV2Util {
   def dataFiles(path: String, conf: Configuration): Seq[FileStatus] = {
     val dir = new HPath(s"$path/data")
     val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) Seq.empty
+    if (!fs.exists(dir) && !restoreIfStranded(path, conf)) Seq.empty
     else leafFiles(fs, dir)
       .filter(_.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.toString)
+  }
+
+  /** Restore a data dir stranded aside by a crash between a compaction's
+    * two renames (`KvTable.swapData`): `.data-old` moves back to `data/`.
+    * The listing calls it only when `data/` is missing, so every reader
+    * and every compaction heals the table and a healthy one pays nothing.
+    * True when `data/` exists afterwards. */
+  def restoreIfStranded(path: String, conf: Configuration): Boolean = {
+    val (data, old) = (new HPath(s"$path/data"), new HPath(s"$path/.data-old"))
+    val fs = data.getFileSystem(conf)
+    if (!fs.exists(data) && fs.exists(old))
+      require(fs.rename(old, data), s"kvtable $path: could not restore stranded $old")
+    fs.exists(data)
   }
 
   private def hidden(name: String): Boolean =
@@ -1122,7 +1189,7 @@ object KvV2Util {
     * synthesized `__bucket` column (the partition-directory value), like
     * Spark's own parquet partition-column discovery. */
   def inferSchema(path: String, conf: Configuration): StructType = {
-    val msg = KvStats.read(path, conf).map(_.schema).filter(_.nonEmpty) match {
+    val msg = KvStats.readSchema(path, conf) match {
       case Some(s) =>
         org.apache.parquet.schema.MessageTypeParser.parseMessageType(s)
       case None =>
@@ -1237,9 +1304,14 @@ object KvV2Util {
           case None => // not in manifest: one footer read (the slow path)
             (KvStats.fromFooter(f.getPath, rel, f.getLen, conf).groups, false)
         }
-        groups.collect {
-          case g if KvStats.groupPasses(g.stats, pushed) =>
-            KvInputPartition(f.getPath.toString, g.start, g.len, f.getLen,
+        // the first group's split starts at byte 0 and the last one's
+        // ends at the file's end, so a one-group file is one whole-file
+        // split, as Spark's file source plans it
+        groups.zipWithIndex.collect {
+          case (g, i) if KvStats.groupPasses(g.stats, pushed) =>
+            val start = if (i == 0) 0L else g.start
+            val end = if (i == groups.size - 1) f.getLen else g.start + g.len
+            KvInputPartition(f.getPath.toString, start, end - start, f.getLen,
               hosts, bucket, g.rows, keyName.flatMap(k => g.stats.get(k)),
               sorted = fileSorted)
         }
@@ -1281,7 +1353,7 @@ object KvV2Util {
     graft.kv.TableLock.withLock(path, conf) {
       val fs = new HPath(path).getFileSystem(conf)
       dataFiles(path, conf).foreach(f => fs.delete(f.getPath, false))
-      val schemaStr = KvStats.read(path, conf).map(_.schema).getOrElse("")
+      val schemaStr = KvStats.readSchema(path, conf).getOrElse("")
       KvStats.write(path, KvStats.Manifest(schemaStr, Seq.empty), conf)
       val (prevVer, _) = readMeta(path, conf)
       writeMeta(path, conf, prevVer + 1, 0)

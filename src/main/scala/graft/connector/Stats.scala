@@ -2,6 +2,7 @@ package graft.connector
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonToken
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.conf.Configuration
@@ -250,6 +251,33 @@ object KvStats {
       (base.toSeq ++ segs).foreach(_.files.foreach(f => merged.update(f.path, f)))
       val schema = (base.toSeq ++ segs).map(_.schema).find(_.nonEmpty).getOrElse("")
       Some(Manifest(schema, merged.values.toSeq))
+    }
+  }
+
+  /** The merged manifest's parquet schema string — the base's, else the
+    * first segment's that has one — read without parsing any file
+    * entry: the writer puts `schema` first, so a schema inference costs
+    * O(1), not O(files), however large the manifest grows. */
+  def readSchema(path: String, conf: Configuration): Option[String] =
+    (new HPath(statsFile(path)) +: segmentFiles(path, conf)).iterator
+      .flatMap(schemaOf(_, conf)).find(_.nonEmpty)
+
+  private def schemaOf(f: HPath, conf: Configuration): Option[String] = {
+    val fs = f.getFileSystem(conf)
+    if (!fs.exists(f)) None
+    else {
+      val p = mapper.getFactory.createParser(fs.open(f): java.io.InputStream)
+      try {
+        var schema: Option[String] = None
+        if (p.nextToken() == JsonToken.START_OBJECT)
+          while (schema.isEmpty && p.nextToken() == JsonToken.FIELD_NAME) {
+            val name = p.currentName()
+            p.nextToken()
+            if (name == "schema") schema = Some(p.getText) else p.skipChildren()
+          }
+        schema
+      } catch { case _: Exception => None } // corrupt -> footer fallback
+      finally p.close()
     }
   }
 

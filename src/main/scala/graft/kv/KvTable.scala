@@ -32,7 +32,9 @@ object SinkMode {
   * through the one `format("kvtable")` writer (graft.connector), with
   * three engine columns — `__version` (writer-assigned batch
   * number or user-supplied column, e.g. an event time), `__seq`
-  * (intra-batch tiebreak), `__tombstone` (delete marker). The read view
+  * (intra-batch tiebreak), `__tombstone` (delete marker) — and every
+  * read scans them through the same connector ([[readRaw]] is its raw
+  * log scan). The read view
   * is last-write-wins per key. On a bucket-compacted table whose files
   * are all recorded key-sorted, the connector's scan merges each
   * bucket's sorted runs and emits only the newest row per key
@@ -304,54 +306,30 @@ object KvTable {
     if (batch <= prevVer) writeMeta(spark, path, prevVer, buckets)
   }
 
-  /** Restore a data dir stranded aside by a crash between [[swapData]]'s
-    * two renames. Called only when the data dir is MISSING (zero
-    * filesystem overhead on the normal path) — this is the documented
-    * self-healing entry point, reachable from every read/compact, not
-    * just the next compaction attempt. */
-  private def restoreIfStranded(spark: SparkSession, path: String): Boolean = {
-    val f = fs(spark, path)
-    val data = new HPath(dataDir(path))
-    val old = new HPath(s"$path/.data-old")
-    if (!f.exists(data) && f.exists(old)) {
-      require(f.rename(old, data),
-        s"KvTable $path: could not restore stranded $old")
-      true
-    } else false
-  }
-
-  /** Raw log scan (all versions + tombstones), for debugging/compaction.
-    * The schema is declared — the manifest's, footer fallback
+  /** Raw log scan (all versions + tombstones): the kvtable connector's
+    * scan of the table, `format("kvtable")`. The schema is declared —
+    * the manifest's, footer fallback
     * ([[graft.connector.KvV2Util.inferSchema]], `__bucket` last) — so
-    * building the read runs no Spark job. Self-heals a crash-stranded
-    * `.data-old` generation before resolving the data dir (the
-    * failure-path check costs nothing when the table is healthy — it
-    * only runs after the read fails to resolve).
-    *
-    * A table whose appends so far held zero rows has no data dir at all
-    * and reads as an empty frame of that schema. */
-  def readRaw(spark: SparkSession, path: String): DataFrame = {
-    val schema = graft.connector.KvV2Util.inferSchema(path, KvHadoopConf(spark))
-    val dir = dataDir(path)
-    def load() = spark.read.schema(schema).parquet(dir)
-    try load()
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" =>
-        if (restoreIfStranded(spark, path)) load()
-        else if (exists(spark, path))
-          spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-        else throw e
-    }
-  }
+    * building the read runs no Spark job; the scan prunes row groups by
+    * manifest stats and Blooms, routes key filters to their bucket, packs
+    * small row groups into few tasks, and heals a crash-stranded
+    * `.data-old` generation. A table whose appends so far held zero rows
+    * reads as an empty frame of that schema. */
+  def readRaw(spark: SparkSession, path: String): DataFrame =
+    spark.read.format("kvtable").load(path)
 
   /** The last-write-wins read view: one row per live key, newest
     * (version, seq) wins, tombstones filtered out. Value columns carry
-    * (family, qualifier) metadata like the reference's fieldMap.
+    * (family, qualifier) metadata like the reference's fieldMap. On a
+    * bucket-compacted table whose files are all recorded key-sorted the
+    * connector's scan merges each bucket's runs and returns live rows
+    * only: no aggregation, no sort, no shuffle. Otherwise it is
+    * [[lwwView]] over [[readRaw]].
     */
-  def read(spark: SparkSession, path: String): DataFrame =
-    readRange(spark, path, None, None)
+  def read(spark: SparkSession, path: String): DataFrame = view(spark, path)()
+
+  /** Alias of [[read]]. */
+  def readV2(spark: SparkSession, path: String): DataFrame = read(spark, path)
 
   /** Alias of [[write]]. */
   def writeV2(df: DataFrame, path: String, schema: KvSchema,
@@ -364,32 +342,31 @@ object KvTable {
                version: Option[Long] = None): Unit =
     delete(keys, path, schema, version)
 
-  /** LWW view over the custom V2 connector (`format("kvtable")`,
-    * graft.connector) instead of the built-in parquet source: same
-    * result, but split planning, manifest-stats pruning and locality go
-    * through the engine's own region-scan analog.
-    *
-    * On a bucket-compacted table whose files are all recorded key-sorted
-    * the connector's scan merges each bucket's runs and returns live
-    * rows only ([[mergeView]]): no aggregation, no sort, no shuffle.
-    * Otherwise it is [[lwwView]] over the raw log. */
-  def readV2(spark: SparkSession, path: String): DataFrame = {
+  /** The LWW view as of `asOf`: each live key's key and value columns,
+    * then `extra`. Its rows are the merge scan's when the table
+    * qualifies ([[graft.connector.KvV2Util.mergeable]]: bucket-compacted,
+    * every file recorded key-sorted), otherwise the aggregate
+    * [[collapse]] of [[readRaw]]; either way each carries its
+    * `__version`, and `__bucket` on a bucketed table, for `extra` to
+    * select. `pre` filters the raw rows before the collapse, or the
+    * merged rows; it must keep the same winners either way — a filter
+    * on the key or `__bucket`, or a lower bound on `__version`. */
+  private def view(spark: SparkSession, path: String, asOf: Option[Long] = None,
+                   extra: Seq[Column] = Nil)(
+      pre: DataFrame => DataFrame = identity): DataFrame = {
     val schema = readSchema(spark, path)
-    mergeView(spark, path).fold(
-      lwwView(spark.read.format("kvtable").load(path), schema))(live(_, schema))
+    val rows =
+      if (graft.connector.KvV2Util.mergeable(path, KvHadoopConf(spark)))
+        pre(graft.connector.KvBatchTable.lwwView(spark, path, asOf))
+      else {
+        val raw = readRaw(spark, path)
+        collapse(pre(asOf.fold(raw)(v => raw.filter(col(VersionCol) <= v))), schema)
+      }
+    live(rows, schema, extra: _*)
   }
 
-  /** The merge-on-read LWW view of the table — each live key's newest
-    * raw row, engine columns included — when the table qualifies
-    * ([[graft.connector.KvV2Util.mergeable]]: bucket-compacted, every
-    * file recorded key-sorted); None keeps the aggregate. */
-  private def mergeView(spark: SparkSession, path: String): Option[DataFrame] =
-    if (graft.connector.KvV2Util.mergeable(path, KvHadoopConf(spark)))
-      Some(graft.connector.KvBatchTable.lwwView(spark, path))
-    else None
-
   /** The key and value columns (with their (family, qualifier)
-    * metadata) of a merge view, then `extra`. */
+    * metadata) of LWW rows, then `extra`. */
   private def live(view: DataFrame, schema: KvSchema,
                    extra: Column*): DataFrame =
     view.select((col(schema.keyField) +: schema.valueFields.map(f =>
@@ -398,31 +375,31 @@ object KvTable {
   /** LWW collapse over an externally-obtained raw log DataFrame — e.g. a
     * catalog SQL read (`spark.table("graft_kv.ns.t")`, see
     * [[graft.connector.KvCatalog]]), which exposes the raw log. This is
-    * the aggregate path, for tables the merge scan does not serve.
-    * Bucketed reads group by (`__bucket`, key): the bucket is a pure
-    * function of the key so the result is identical, but the scan's
-    * reported per-bucket KeyGroupedPartitioning then satisfies the
-    * aggregation's distribution and the plan runs with NO shuffle (with
-    * `spark.sql.sources.v2.bucketing.enabled`). */
+    * the aggregate path, for tables the merge scan does not serve. */
   def lwwView(raw: DataFrame, schema: KvSchema): DataFrame =
-    if (raw.columns.contains(BucketCol))
-      collapse(raw, schema, groupExtra = Seq(col(BucketCol)))
-    else collapse(raw, schema)
+    live(collapse(raw, schema), schema)
 
-  /** The aggregate LWW collapse: Spark plans it as Sort + SortAggregate
-    * (a struct aggregation buffer rules out hash aggregation), after an
-    * Exchange unless the scan's partitioning satisfies the grouping.
-    * Reads the merge scan serves ([[mergeView]]) skip it. */
-  private def collapse(raw: DataFrame, schema: KvSchema,
-                       groupExtra: Seq[Column] = Nil,
-                       keepExtra: Boolean = false): DataFrame = {
-    val payload = struct(
-      (col(TombstoneCol) +: schema.valueFields.map(f => col(f.name))): _*)
-    val kept = if (keepExtra) groupExtra else Nil
-    raw.groupBy(groupExtra :+ col(schema.keyField): _*)
+  /** The aggregate LWW collapse: each live key's newest raw row — key,
+    * values and its original `__version` (compaction keeps it, so a
+    * later append carrying an older event time cannot win against a
+    * renumbered cell). Spark plans it as Sort + SortAggregate (a struct
+    * aggregation buffer rules out hash aggregation), after an Exchange
+    * unless the scan's partitioning satisfies the grouping: bucketed
+    * logs group by (`__bucket`, key) and keep `__bucket` — the bucket is
+    * a pure function of the key, so the result is identical, but the
+    * scan's reported per-bucket KeyGroupedPartitioning then satisfies
+    * the aggregation's distribution and the plan runs with NO shuffle
+    * (with `spark.sql.sources.v2.bucketing.enabled`). Reads the merge
+    * scan serves ([[view]]) skip it. */
+  private def collapse(raw: DataFrame, schema: KvSchema): DataFrame = {
+    val groups = (if (raw.columns.contains(BucketCol)) Seq(col(BucketCol)) else Nil) :+
+      col(schema.keyField)
+    val payload = struct((col(TombstoneCol) +: col(VersionCol) +:
+      schema.valueFields.map(f => col(f.name))): _*)
+    raw.groupBy(groups: _*)
       .agg(max_by(payload, struct(col(VersionCol), col(SeqCol))).as("__row"))
       .filter(!col("__row")(TombstoneCol))
-      .select(kept ++ (col(schema.keyField) +:
+      .select(groups ++ (col("__row")(VersionCol).as(VersionCol) +:
         schema.valueFields.map(f => col("__row")(f.name).as(f.name, f.metadata))): _*)
   }
 
@@ -430,7 +407,7 @@ object KvTable {
     * tables on their rowkeys — the bucketing payoff: both sides scan
     * region-locally (`KeyGroupedPartitioning(__bucket)`), each side's
     * LWW view is its merge scan (or a partition-local collapse when the
-    * table does not qualify, see [[readV2]]), and the join matches
+    * table does not qualify, see [[read]]), and the join matches
     * bucket partitions directly, so the WHOLE plan — two scans, two
     * LWW views, one join — has ZERO Exchange (spec-asserted); merge
     * scans report (`__bucket`, key) order, so a sort-merge join sorts
@@ -466,10 +443,7 @@ object KvTable {
       s"column collision between the two tables: " +
         s"${(overlap -- allowed).mkString(", ")}")
     def side(path: String, s: KvSchema, suffix: String) =
-      mergeView(spark, path).fold(
-        collapse(spark.read.format("kvtable").load(path), s,
-          groupExtra = Seq(col(BucketCol)), keepExtra = true))(
-        live(_, s, col(BucketCol)))
+      view(spark, path, extra = Seq(col(BucketCol)))()
         .withColumnRenamed(BucketCol, s"${BucketCol}$suffix")
         .withColumnRenamed(s.keyField, s"${s.keyField}$suffix")
     val a = side(pathA, sa, "__a")
@@ -491,19 +465,17 @@ object KvTable {
   /** Rowkey-range scan (`Scan(startRow, stopRow)` analog,
     * `HBaseScheme.java:61-71`): closed-open `[lower, upper)` — fixing the
     * reference's two boundary bugs (SURVEY.md §2b). The predicate lands on
-    * the scan (min/max pruning) BEFORE the merge ([[readV2]]) or, on
+    * the scan (min/max pruning) BEFORE the merge ([[read]]) or, on
     * tables the merge does not serve, the LWW aggregation over [[readRaw]].
     */
   def readRange(spark: SparkSession, path: String,
                 lower: Option[Any], upper: Option[Any]): DataFrame = {
-    val schema = readSchema(spark, path)
-    val key = schema.keyField
+    val key = readSchema(spark, path).keyField
     def bounded(df: DataFrame): DataFrame = {
       val lo = lower.fold(df)(l => df.filter(col(key) >= lit(l)))
       upper.fold(lo)(u => lo.filter(col(key) < lit(u)))
     }
-    mergeView(spark, path).fold(collapse(bounded(readRaw(spark, path)), schema))(
-      v => live(bounded(v), schema))
+    view(spark, path)(bounded)
   }
 
   /** Multi-version read: the newest `n` live versions per key, newest
@@ -543,10 +515,8 @@ object KvTable {
     * as-of reads see through appends, not across compactions (same as
     * HBase: a major compaction discards shadowed cells).
     */
-  def readAsOf(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val schema = readSchema(spark, path)
-    collapse(readRaw(spark, path).filter(col(VersionCol) <= version), schema)
-  }
+  def readAsOf(spark: SparkSession, path: String, version: Long): DataFrame =
+    view(spark, path, asOf = Some(version))()
 
   /** Largest `__version` present in the log (0 for an empty table) —
     * from the stats manifest, footer fallback for unmanifested files;
@@ -625,10 +595,8 @@ object KvTable {
     * the predicate lands on the parquet scan and prunes whole append
     * batches via file min/max stats before the collapse.
     */
-  def readTtl(spark: SparkSession, path: String, minVersion: Long): DataFrame = {
-    val schema = readSchema(spark, path)
-    collapse(readRaw(spark, path).filter(col(VersionCol) >= minVersion), schema)
-  }
+  def readTtl(spark: SparkSession, path: String, minVersion: Long): DataFrame =
+    view(spark, path)(expire(Some(minVersion)))
 
   /** Client-side direct read (`HBaseTap.openForRead` ->
     * `TupleEntryIterator`, `HBaseTap.java:107-113`): a driver-local
@@ -640,24 +608,6 @@ object KvTable {
     import scala.jdk.CollectionConverters._
     read(spark, path).orderBy(col(readSchema(spark, path).keyField))
       .toLocalIterator().asScala
-  }
-
-  /** LWW collapse that KEEPS each surviving row's original `__version`.
-    * Compaction must not renumber versions: a table written with
-    * `versionFrom` (event-time versions) would otherwise have any
-    * post-compaction append — even one carrying an OLDER event time —
-    * win against the reset version and silently invert LWW ordering.
-    */
-  private def collapseKeepVersion(raw: DataFrame, schema: KvSchema): DataFrame = {
-    val payload = struct(
-      (col(TombstoneCol) +: col(VersionCol) +:
-        schema.valueFields.map(f => col(f.name))): _*)
-    raw.groupBy(col(schema.keyField))
-      .agg(max_by(payload, struct(col(VersionCol), col(SeqCol))).as("__row"))
-      .filter(!col("__row")(TombstoneCol))
-      .select((col(schema.keyField) +:
-        schema.valueFields.map(f => col("__row")(f.name).as(f.name, f.metadata))) :+
-        col("__row")(VersionCol).as(VersionCol): _*)
   }
 
   /** Rewrite the log so each key holds exactly its current version (the
@@ -672,9 +622,7 @@ object KvTable {
     recoverMinor(spark, path) // BEFORE the read plan lists files
     val schema = readSchema(spark, path)
     val lastVer = readMetaVersion(spark, path)
-    val current = collapseKeepVersion(expireRaw(spark, path, expireBelow), schema)
-      .withColumn(SeqCol, lit(0L))
-      .withColumn(TombstoneCol, lit(false))
+    val current = rewritten(spark, path, expireBelow)
       // key-sorted store files (HBase major compaction emits sorted
       // HFiles): tight row-group key stats + the scan can report
       // per-partition rowkey ordering (SupportsReportOrdering)
@@ -683,15 +631,24 @@ object KvTable {
       keySorted = true)
     }
 
-  /** Raw log, optionally with TTL-expired cells dropped — the physical
-    * half of HBase's TTL: a major compaction discards expired cells, so
-    * after `compact(path, expireBelow = Some(v))` the files hold exactly
-    * what [[readTtl]] showed at cutoff `v`. */
-  private def expireRaw(spark: SparkSession, path: String,
-                        expireBelow: Option[Long]): DataFrame = {
-    val raw = readRaw(spark, path)
-    expireBelow.fold(raw)(v => raw.filter(col(VersionCol) >= v))
-  }
+  /** Rows with `__version` below `minVersion` dropped: TTL-expired
+    * cells. Applied before the LWW choice or after it, the survivors are
+    * the same (an expired winner's older versions are expired too). */
+  private def expire(minVersion: Option[Long])(rows: DataFrame): DataFrame =
+    minVersion.fold(rows)(v => rows.filter(col(VersionCol) >= v))
+
+  /** A major compaction's output rows: each live key's newest cell at
+    * its original `__version` (compaction must not renumber versions —
+    * a table written with event-time versions would otherwise have any
+    * later append, even one carrying an OLDER event time, win against
+    * the reset version), TTL-expired cells dropped — the physical half
+    * of HBase's TTL: after `compact(path, expireBelow = Some(v))` the
+    * files hold exactly what [[readTtl]] showed at cutoff `v`. `extra`
+    * columns follow the engine columns. */
+  private def rewritten(spark: SparkSession, path: String,
+                        expireBelow: Option[Long], extra: Column*): DataFrame =
+    view(spark, path, extra = Seq(col(VersionCol), lit(0L).as(SeqCol),
+      lit(false).as(TombstoneCol)) ++ extra)(expire(expireBelow))
 
   /** MINOR compaction: merge each region's SMALL files into one, without
     * rewriting the table — the maintenance op that actually runs at
@@ -731,14 +688,15 @@ object KvTable {
       val conf = KvHadoopConf(spark)
       val f = fs(spark, path)
       recoverMinor(spark, path)
-      // merge with the FILE schema: readRaw's schema includes the
+      // merge with the FILE schema: the table schema includes the
       // __bucket PARTITION column (a directory coordinate), which must
       // not become a physical all-null column in merged files — its
       // "all null" footer stats would poison bucket-predicate pruning
       // and a manifest rebuild would then double-add the column.
       // Lazy: an empty table (no data dir) must no-op before any read.
       lazy val dataSchema = org.apache.spark.sql.types.StructType(
-        readRaw(spark, path).schema.fields.filterNot(_.name == BucketCol))
+        graft.connector.KvV2Util.inferSchema(path, conf).fields
+          .filterNot(_.name == BucketCol))
       lazy val keyField = readSchema(spark, path).keyField
       val root = new HPath(dataDir(path))
       val groups: Seq[HPath] =
@@ -853,7 +811,7 @@ object KvTable {
     * the HBase region-addressing analog for read-mostly tables.
     *
     * Into the table's own bucket count, on a table the merge scan
-    * serves ([[mergeView]]), the rewrite reads through that merge: each
+    * serves ([[view]]), the rewrite reads through that merge: each
     * bucket's winners arrive key-sorted in their own partition and are
     * written as they come — no aggregation, repartition or sort. The
     * `expireBelow` bound prunes row groups before the merge and drops
@@ -868,17 +826,12 @@ object KvTable {
     recoverMinor(spark, path) // BEFORE the read plan lists files
     val schema = readSchema(spark, path)
     val lastVer = readMetaVersion(spark, path)
-    val merge =
-      if (buckets == numBuckets(spark, path)) mergeView(spark, path) else None
-    val current = merge match {
-      case Some(view) =>
-        live(expireBelow.fold(view)(v => view.filter(col(VersionCol) >= v)),
-          schema, col(VersionCol), lit(0L).as(SeqCol), lit(false).as(TombstoneCol),
-          col(BucketCol))
-      case None =>
-        collapseKeepVersion(expireRaw(spark, path, expireBelow), schema)
-          .withColumn(SeqCol, lit(0L))
-          .withColumn(TombstoneCol, lit(false))
+    val current =
+      if (buckets == numBuckets(spark, path) &&
+          graft.connector.KvV2Util.mergeable(path, KvHadoopConf(spark)))
+        rewritten(spark, path, expireBelow, col(BucketCol))
+      else
+        rewritten(spark, path, expireBelow)
           .withColumn(BucketCol, pmod(hash(col(schema.keyField)), lit(buckets)))
           .repartition(buckets, col(BucketCol))
           // key-sorted regions: tight, non-overlapping row-group key
@@ -888,7 +841,6 @@ object KvTable {
           // produces for later appends (HBase stores are key-sorted for
           // the same reason)
           .sortWithinPartitions(col(schema.keyField))
-    }
     swapData(spark, path, current, buckets, lastVersion = lastVer,
       keySorted = true)
     }
@@ -942,9 +894,7 @@ object KvTable {
     clusterCols.foreach(c => require(schema.fieldNames.contains(c),
       s"$c is not a column of $path"))
     val lastVer = readMetaVersion(spark, path)
-    val current = collapseKeepVersion(expireRaw(spark, path, expireBelow), schema)
-      .withColumn(SeqCol, lit(0L))
-      .withColumn(TombstoneCol, lit(false))
+    val current = rewritten(spark, path, expireBelow)
     val asDouble = clusterCols.map { c =>
       val dt = current.schema(c).dataType
       import org.apache.spark.sql.types._
@@ -990,8 +940,9 @@ object KvTable {
     * back into place), so a failure can not leave meta describing a
     * layout the files don't have. A crash exactly between the two
     * renames leaves the old generation intact under `.data-old`
-    * (restored by the next compaction attempt's entry check); at no
-    * point is the only copy of the data deleted.
+    * (restored by the next listing of the table's files, see
+    * [[graft.connector.KvV2Util.restoreIfStranded]]); at no point is the
+    * only copy of the data deleted.
     */
   private[kv] def swapData(spark: SparkSession, path: String, current: DataFrame,
                        buckets: Int, lastVersion: Long,
@@ -1000,7 +951,7 @@ object KvTable {
     val old = s"$path/.data-old"
     val f = fs(spark, path)
     // recover from a crash that stranded the data dir aside
-    restoreIfStranded(spark, path)
+    graft.connector.KvV2Util.restoreIfStranded(path, KvHadoopConf(spark))
     val w = current.write.mode("overwrite")
     (if (buckets > 0) w.partitionBy(BucketCol) else w).parquet(tmp)
     // A dynamic-partitioned write of an EMPTY collapse (every key
@@ -1065,16 +1016,13 @@ object KvTable {
     * single bucket directory on a bucket-compacted table (the HBase
     * region-addressing step); on an unbucketed table the key predicate
     * prunes row groups via the manifest min/max stats. IN-list
-    * multi-gets go the same way: `readV2(...).filter(col(k).isin(...))`.
+    * multi-gets go the same way: `read(...).filter(col(k).isin(...))`.
     */
   def get(spark: SparkSession, path: String, key: Any): DataFrame = {
-    val schema = readSchema(spark, path)
-    val merge = mergeView(spark, path)
-    val rows = merge.getOrElse(spark.read.format("kvtable").load(path))
+    val k = readSchema(spark, path).keyField
     // Cast the lookup value to the STORED key type — a Scala Int probed
     // against a LongType key would Murmur3-hash to the wrong bucket.
-    val keyType = rows.schema(schema.keyField).dataType
-    val probe = rows.filter(col(schema.keyField) === lit(key).cast(keyType))
-    if (merge.isDefined) live(probe, schema) else collapse(probe, schema)
+    view(spark, path)(rows =>
+      rows.filter(col(k) === lit(key).cast(rows.schema(k).dataType)))
   }
 }

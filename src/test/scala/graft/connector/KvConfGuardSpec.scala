@@ -92,18 +92,32 @@ class KvConfGuardSpec extends AnyFunSuite {
     assert(offenses.isEmpty, offenses.mkString("\n"))
   }
 
-  test("KvTable appends only through the kvtable connector: no Spark " +
-    "parquet write into a table's data dir") {
-    val p = Paths.get("src/main/scala/graft/kv/KvTable.scala")
+  /** The lines of `file` matching `pattern`, comments excluded, each as
+    * `file:line: code`. */
+  private def matches(file: String, pattern: Regex): Seq[String] = {
+    val p = Paths.get(file)
     // comments blanked line for line, so the reported numbers are the file's
     val lines = "(?s)/\\*.*?\\*/".r
       .replaceAllIn(new String(Files.readAllBytes(p), "UTF-8"),
         m => "\n" * m.matched.count(_ == '\n'))
       .split("\n").toSeq.map(_.replaceAll("//.*", ""))
-    val writes = lines.zipWithIndex.collect {
-      case (line, i) if "(?<!read)\\.parquet\\(dataDir\\(".r
-          .findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+    lines.zipWithIndex.collect {
+      case (line, i) if pattern.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
     }
+  }
+
+  test("KvTable appends only through the kvtable connector: no Spark " +
+    "parquet write into a table's data dir") {
+    val writes = matches("src/main/scala/graft/kv/KvTable.scala",
+      "(?<!read)\\.parquet\\(dataDir\\(".r)
     assert(writes.isEmpty, writes.mkString("\n"))
+  }
+
+  test("KvTable, KvCounter, KvAppend and KvReplica read a table's log " +
+    "only through the kvtable connector: no Spark parquet read of its " +
+    "data dir") {
+    val reads = Seq("KvTable", "KvCounter", "KvAppend", "KvReplica").flatMap(n =>
+      matches(s"src/main/scala/graft/kv/$n.scala", "parquet\\(\\s*dataDir\\(".r))
+    assert(reads.isEmpty, reads.mkString("\n"))
   }
 }

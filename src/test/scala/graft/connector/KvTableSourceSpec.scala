@@ -160,10 +160,34 @@ class KvTableSourceSpec extends SparkSpec {
       .as[(String, String, Long)].collect()
     assert(rows === Array(("a1", "x", 1L), ("a2", "y", 2L),
       ("z8", "p", 8L), ("z9", "q", 9L)))
-    // matches the parquet-path read exactly
-    val viaParquet = KvTable.readRaw(spark, path)
+    // matches Spark's own parquet read of the data files exactly
+    val viaParquet = spark.read.parquet(s"$path/data")
       .select("k", "v", "n").orderBy("k").as[(String, String, Long)].collect()
     assert(rows === viaParquet)
+  }
+
+  test("an unbucketed raw scan packs unsorted single-group appends into " +
+    "as many tasks as Spark's file source plans over the same files") {
+    val path = TestSpark.scratch("v2-packing")
+    val schema = KvSchema.of("k", "v" -> ("f", "v"))
+    val n = 12
+    // key-descending rows: no file is recorded key-sorted
+    (0 until n).foreach(i => KvTable.write(
+      Seq((f"k$i%02d-b", s"v$i"), (f"k$i%02d-a", s"w$i")).toDF("k", "v").coalesce(1),
+      path, schema))
+    val raw = KvTable.readRaw(spark, path)
+    val files = spark.read.parquet(s"$path/data")
+    val tasks = raw.rdd.getNumPartitions
+    assert(tasks === files.rdd.getNumPartitions)
+    assert(tasks < n, s"$n single-group files planned $tasks tasks")
+    val cols = Seq("k", "v", "__version", "__seq", "__tombstone").map(col)
+    val got = raw.select(cols: _*)
+    assert(got.collect().map(_.toString).sorted.toSeq ===
+      files.select(cols: _*).collect().map(_.toString).sorted.toSeq)
+    val scan = KvMergeFixtures.nodes(got.queryExecution.executedPlan).collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.head
+    assert(scan.metrics(KvScanMetrics.RowGroupsPlanned).value === n.toLong)
   }
 
   test("key-range filter prunes whole files from the plan (region pruning)") {
@@ -408,6 +432,9 @@ class KvTableSourceSpec extends SparkSpec {
       // merged view == full per-file coverage (every file has stats entries)
       val merged = KvStats.read(path, conf).get
       assert(merged.files.length === KvV2Util.dataFiles(path, conf).length)
+      // the schema-only read agrees with the merged manifest's schema
+      assert(merged.schema.nonEmpty &&
+        KvStats.readSchema(path, conf) === Some(merged.schema))
       // fold: lowering the threshold makes the next append compact segments
       System.setProperty("graft.kvstats.foldSegments", "2")
       try {
@@ -415,6 +442,7 @@ class KvTableSourceSpec extends SparkSpec {
         assert(segSizes.isEmpty, s"$label: fold must absorb all segments into the base")
         val folded = KvStats.read(path, conf).get
         assert(folded.files.length === KvV2Util.dataFiles(path, conf).length)
+        assert(KvStats.readSchema(path, conf) === Some(folded.schema))
       } finally System.clearProperty("graft.kvstats.foldSegments")
       // the LWW view is intact through segment + fold lifecycles
       assert(KvTable.read(spark, path).count() === appends + 2)

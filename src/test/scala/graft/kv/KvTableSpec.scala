@@ -282,17 +282,37 @@ class KvTableSpec extends SparkSpec {
 
   test("a crash between swap renames self-heals on the next READ " +
     "(not only the next compaction)") {
-    val path = TestSpark.scratch("kv-swap-crash-read")
-    KvTable.write(parsed, path, schema, SinkMode.Replace)
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
-    // simulate the crash window exactly between the two renames:
-    // data/ moved aside, replacement never published
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$path/data"),
-      new org.apache.hadoop.fs.Path(s"$path/.data-old")))
-    assert(KvTable.read(spark, path).count() === 5) // self-restores
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/data")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/.data-old")))
+    for (buckets <- Seq(0, 2)) {
+      val path = TestSpark.scratch(s"kv-swap-crash-read-$buckets")
+      KvTable.write(parsed, path, schema, SinkMode.Replace)
+      if (buckets > 0) KvTable.compactBucketed(spark, path, buckets)
+      val (data, old) = (new org.apache.hadoop.fs.Path(s"$path/data"),
+        new org.apache.hadoop.fs.Path(s"$path/.data-old"))
+      // the raw log: 13 cells, or 5 after the compaction
+      val cells = KvTable.readRaw(spark, path).count()
+      val reads: Seq[(String, Long, () => Long)] = Seq(
+        ("read", 5L, () => KvTable.read(spark, path).count()),
+        ("readV2", 5L, () => KvTable.readV2(spark, path).count()),
+        ("readRange", 2L, () => KvTable.readRange(spark, path, Some("2"), Some("4")).count()),
+        ("get", 1L, () => KvTable.get(spark, path, "3").count()),
+        ("readAsOf", 5L, () => KvTable.readAsOf(spark, path, 1L).count()),
+        ("readTtl", 5L, () => KvTable.readTtl(spark, path, 0L).count()),
+        ("readVersions", 5L, () => KvTable.readVersions(spark, path, 1).count()),
+        ("readChanges", cells, () => KvTable.readChanges(spark, path, 0L).count()),
+        ("readRaw", cells, () => KvTable.readRaw(spark, path).count()),
+        ("format(kvtable)", cells, () =>
+          spark.read.format("kvtable").load(path).select("num").collect().length.toLong),
+        ("openForRead", 5L, () => KvTable.openForRead(spark, path).size.toLong))
+      for ((name, want, rows) <- reads) {
+        // simulate the crash window exactly between the two renames:
+        // data/ moved aside, replacement never published
+        assert(fs.rename(data, old))
+        assert(rows() === want, s"$name on buckets=$buckets")
+        assert(fs.exists(data) && !fs.exists(old), s"$name on buckets=$buckets")
+      }
+    }
   }
 
   test("a delete with a regressed version cannot regress the meta " +

@@ -1,7 +1,9 @@
 package graft.kv
 
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import graft.{SparkSpec, TestSpark}
+import graft.connector.{KvMergeFixtures, KvScanMetrics}
 
 class KvZOrderSpec extends SparkSpec {
   import spark.implicits._
@@ -34,18 +36,23 @@ class KvZOrderSpec extends SparkSpec {
     assert(after === before)
 
     // pruning: a narrow predicate on EITHER dimension must drop most
-    // partitions (each file covers a compact z-range = a small x AND y
+    // row groups (each file covers a compact z-range = a small x AND y
     // rectangle; 16 files over a 16x16-cell curve -> a 2-cell-wide
-    // slice in one dimension intersects few files)
+    // slice in one dimension intersects few files). Counted by the
+    // scan's metric: the scan packs small groups into fewer tasks.
     val raw = spark.read.format("kvtable").load(path)
-    val total = raw.select("k", "x", "y").rdd.getNumPartitions
-    assert(total >= 8, s"expected >=8 row-group partitions, got $total")
-    val px = raw.filter($"x" >= 30).select("k", "x", "y")
-      .rdd.getNumPartitions
-    val py = raw.filter($"y" >= 30).select("k", "x", "y")
-      .rdd.getNumPartitions
-    assert(px <= total / 2, s"x-predicate kept $px of $total partitions")
-    assert(py <= total / 2, s"y-predicate kept $py of $total partitions")
+    def groupsPlanned(df: org.apache.spark.sql.DataFrame): Long = {
+      df.collect()
+      KvMergeFixtures.nodes(df.queryExecution.executedPlan).collect {
+        case b: BatchScanExec => b.metrics(KvScanMetrics.RowGroupsPlanned).value
+      }.sum
+    }
+    val total = groupsPlanned(raw.select("k", "x", "y"))
+    assert(total >= 8, s"expected >=8 row groups planned, got $total")
+    val px = groupsPlanned(raw.filter($"x" >= 30).select("k", "x", "y"))
+    val py = groupsPlanned(raw.filter($"y" >= 30).select("k", "x", "y"))
+    assert(px <= total / 2, s"x-predicate kept $px of $total row groups")
+    assert(py <= total / 2, s"y-predicate kept $py of $total row groups")
     // and the pruned scans still return exactly the right rows
     assert(raw.filter($"x" >= 30).count() === 2 * 32)
     assert(raw.filter($"y" >= 30).count() === 2 * 32)
