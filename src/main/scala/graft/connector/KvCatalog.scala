@@ -270,10 +270,8 @@ class KvCatalog extends TableCatalog with SupportsNamespaces
   }
 
   private def rewriteManifest(path: String, folded: KvStats.Manifest,
-                              newSchema: String): Unit = {
-    KvStats.clear(path, conf)
-    KvStats.write(path, KvStats.Manifest(newSchema, folded.files), conf)
-  }
+                              newSchema: String): Unit =
+    KvStats.write(path, folded.copy(schema = newSchema), conf)
 
   override def dropTable(ident: Identifier): Boolean = {
     val existed = tableExists(ident)

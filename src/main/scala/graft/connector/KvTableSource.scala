@@ -59,7 +59,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * duplicate a row, is deliberately NOT reproduced).
   *
   * Rows are decoded by Spark's own parquet reader and written by its
-  * parquet writer (the codec compaction uses), so every parquet type
+  * parquet writer (appends and compactions alike), so every parquet type
   * Spark reads is supported, including files of the earlier
   * hand-written encoder (INT64-micros timestamps, all-optional columns).
   */
@@ -644,9 +644,9 @@ class KvScan(path: String, fullSchema: StructType, required: StructType,
   }
 
   /** Per-partition rowkey ordering, reported when EVERY planned
-    * partition's file is recorded key-sorted in the manifest (V2
-    * writers observe the order as rows stream through; compaction
-    * records the sort it just performed) and the key survives into the
+    * partition's file is recorded key-sorted in the manifest (the V2
+    * writer observes the order as rows stream through, compaction
+    * output included) and the key survives into the
     * read schema. A partition is one row group of a sorted file, or
     * one bucket's merge of sorted runs, so its rows are ascending in
     * the key; Spark then drops the local Sort under windows / merge

@@ -56,9 +56,8 @@ class KvWriteBuilder(path: String, info: LogicalWriteInfo,
       else KvV2Util.readMeta(path, hadoopConf)._2
     private val routeKey: Option[String] =
       if (routeBuckets <= 0) None
-      else Option(info.options.get("kvschema"))
-        .map(j => graft.kv.KvSchema.fromJson(j).keyField)
-        .orElse(KvV2Util.readKeyField(path, hadoopConf))
+      else KvWriteUtil.keyField(path, Option(info.options.get("kvschema")),
+          hadoopConf)
         .filter(k => info.schema().fieldNames.contains(k))
 
     import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -134,7 +133,7 @@ class KvStreamingWrite(path: String, schema: StructType,
     // per-epoch version: planned on the driver at epoch start, same
     // counter the batch path bumps at its commit
     val (lastVer, buckets) = KvV2Util.readMeta(path, hadoopConf)
-    val routeKey = KvV2Util.readKeyField(path, hadoopConf)
+    val routeKey = KvWriteUtil.keyField(path, kvSchemaJson, hadoopConf)
     new KvStreamingWriterFactory(path, schema, lastVer + 1, sharedConf,
       buckets, routeKey)
   }
@@ -209,9 +208,9 @@ class KvBatchWrite(path: String, schema: StructType,
   private val routeBuckets: Int =
     if (truncate) 0 else KvV2Util.readMeta(path, conf)._2
   // resolved unconditionally: bucket routing needs it when bucketed,
-  // and the per-file rowkey BLOOM needs it on every table
+  // and the per-file rowkey BLOOM and key order need it on every table
   private val routeKey: Option[String] =
-    KvV2Util.readKeyField(path, conf)
+    KvWriteUtil.keyField(path, kvSchemaJson, conf)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new KvWriterFactory(path, schema, assignedVersion,
@@ -325,15 +324,13 @@ class KvWriterFactory(path: String, schema: StructType,
 /** Per-task buffered writer: each row goes through Spark's
   * `ParquetOutputWriter`, on the write's configuration as Spark's
   * `prepareWrite` set it up on the driver ([[KvWriteUtil.writeConf]]),
-  * so appends encode exactly as compaction's files do. Rows carrying a
-  * `__bucket` column are
+  * so files encode as Spark's own parquet source would write them. Rows
+  * carrying a `__bucket` column (a compaction's bucketed output) are
   * routed to per-bucket files under `data/__bucket=N/` (the column is a
-  * DIRECTORY coordinate, excluded from the parquet schema — the same
-  * layout compaction's `partitionBy` writer produces), so appends to a
-  * bucket-compacted table stay bucket-aligned. Rows WITHOUT the column
-  * are routed by hashing the rowkey when the table is bucket-compacted
-  * (`routeBuckets` > 0, from the meta at job start) — so a plain SQL
-  * `INSERT INTO` keeps the region layout too. Unbucketed tables write
+  * DIRECTORY coordinate, excluded from the parquet schema). Rows
+  * WITHOUT the column are routed by hashing the rowkey when the table is
+  * bucket-compacted (`routeBuckets` > 0, from the meta at job start) — so
+  * a plain SQL `INSERT INTO` keeps the region layout too. Unbucketed tables write
   * one file, as before. `conf` is the write's broadcast configuration:
   * read, never set.
   */
@@ -403,27 +400,23 @@ class KvDataWriter(path: String, schema: StructType,
       Array(true)))
 
   // OBSERVED per-file key order: true while every key this writer sent
-  // to the file was >= its predecessor (type-aware compare mirroring
-  // Spark's ascending sort). Recorded in the manifest and the basis for
+  // to the file was >= its predecessor under Spark's ordering of the key
+  // type (the order a sort produces and the merge scan merges by; raw
+  // bytes for strings). Recorded in the manifest and the basis for
   // the scan's SupportsReportOrdering — observation, not assumption, so
   // unsorted inputs (plain unbucketed appends) simply record false.
+  private lazy val keyOrd = org.apache.spark.sql.catalyst.types.PhysicalDataType
+    .ordering(schema(routeKeyIdx).dataType)
   private val keyOrder = scala.collection.mutable.LinkedHashMap
-    .empty[Int, (Array[String], Array[Boolean])]
-  private def observeKey(bucket: Int, kr: String, faithful: Boolean): Unit = {
-    val (last, ok) = keyOrder.getOrElseUpdate(bucket,
-      (Array[String](null), Array(true)))
-    if (kr == null || !faithful) ok(0) = false // unverifiable key -> unknown
-    else if (ok(0) && last(0) != null) {
-      val cmp = schema(routeKeyIdx).dataType match {
-        case LongType | IntegerType =>
-          java.lang.Long.compare(last(0).toLong, kr.toLong)
-        case _ => // string rendering: UTF8 binary order, like parquet
-          java.util.Arrays.compareUnsigned(
-            last(0).getBytes("UTF-8"), kr.getBytes("UTF-8"))
-      }
-      if (cmp > 0) ok(0) = false
+    .empty[Int, (Array[Any], Array[Boolean])]
+  private def observeKey(bucket: Int, row: InternalRow): Unit = {
+    val (last, ok) = keyOrder.getOrElseUpdate(bucket, (Array[Any](null), Array(true)))
+    if (routeKeyIdx < 0 || row.isNullAt(routeKeyIdx)) ok(0) = false // unknown
+    else if (ok(0)) {
+      val k = InternalRow.copyValue(row.get(routeKeyIdx, schema(routeKeyIdx).dataType))
+      if (last(0) != null && keyOrd.compare(last(0), k) > 0) ok(0) = false
+      last(0) = k
     }
-    last(0) = kr
   }
   private def keyRendering(row: InternalRow): String =
     if (routeKeyIdx < 0 || row.isNullAt(routeKeyIdx)) null
@@ -433,19 +426,6 @@ class KvDataWriter(path: String, schema: StructType,
       case IntegerType => row.getInt(routeKeyIdx).toString
       case _ => null
     }
-
-  // The string rendering is byte-faithful only for valid UTF-8: toString
-  // collapses invalid sequences to U+FFFD, so two distinct raw keys can
-  // render equal or even reorder (raw 0xFF > 0xEF 0xBF 0xBE, but their
-  // renderings U+FFFD < U+FFFE). Rather than record an ordering the raw
-  // bytes don't have — which would let the scan report sorted output and
-  // Spark drop a required Sort — such keys decline the sorted claim.
-  private def keyFaithful(row: InternalRow): Boolean =
-    routeKeyIdx < 0 || row.isNullAt(routeKeyIdx) ||
-      (schema(routeKeyIdx).dataType match {
-        case StringType => row.getUTF8String(routeKeyIdx).isValid
-        case _ => true
-      })
 
   private def writerFor(bucket: Int) = writers.getOrElseUpdate(bucket, {
     val name = newName()
@@ -473,7 +453,7 @@ class KvDataWriter(path: String, schema: StructType,
     val (bits, valid) = bloomFor(bucket)
     val kr = keyRendering(row)
     if (kr == null) valid(0) = false else KvBloom.add(bits, kr)
-    observeKey(bucket, kr, keyFaithful(row))
+    observeKey(bucket, row)
     writerFor(bucket)._3.write(fileRow)
   }
 
@@ -526,6 +506,15 @@ class KvDataWriter(path: String, schema: StructType,
 }
 
 object KvWriteUtil {
+  /** The rowkey a write into `path` routes, Blooms and orders by: the
+    * write's `kvschema` option, else the table's `_kvschema.json`. The
+    * option comes first because a new table's first commit creates that
+    * file only after its tasks have written. */
+  def keyField(path: String, kvSchemaJson: Option[String],
+               conf: Configuration): Option[String] =
+    kvSchemaJson.map(graft.kv.KvSchema.fromJson(_).keyField)
+      .orElse(KvV2Util.readKeyField(path, conf))
+
   /** On-disk schema of a data file, every column nullable: the incoming
     * columns minus the `__bucket` directory coordinate, plus the engine
     * columns when the rows arrive without `__version` (the writer
@@ -544,7 +533,7 @@ object KvWriteUtil {
     * rows of `incoming`: Spark's `prepareWrite` sets it up once on the
     * driver from the session's SQL conf — timestamp encoding,
     * compression, row-group and page sizes follow the same settings as
-    * compaction's writes — and it is broadcast to the tasks. */
+    * Spark's parquet source — and it is broadcast to the tasks. */
   def writeConf(conf: Configuration, incoming: StructType)
       : Broadcast[SerializableConfiguration] = {
     val job = Job.getInstance(conf) // a copy: `conf` itself is not set

@@ -19,8 +19,8 @@ import org.apache.spark.sql.sources._
   * region metadata once from the master (`TableInputFormatWrap.java:46`);
   * here the stats are persisted AT WRITE TIME (V2 writer tasks extract
   * their own file's stats and ship them in the commit message — zero
-  * driver footer IO; compaction back-fills incrementally, reading only
-  * footers of files not yet in the manifest) and planning
+  * driver footer IO; every append and compaction writes through that
+  * writer) and planning
   * reads one small base JSON plus at most [[foldThreshold]] append
   * segments (see the segmented-layout note at the manifest IO section).
   *
@@ -50,13 +50,11 @@ object KvStats {
     * `bloom` is an optional base64 rowkey bloom filter (see [[KvBloom]])
     * computed task-side by the V2 writer while the file streamed through
     * it — the HBase per-store-file bloom: point gets skip whole files
-    * whose bloom excludes the key. Absent on compaction-written files
-    * (footer extraction never sees row values); blooms matter
-    * exactly for the many-small-append phase BEFORE compaction, which
-    * is when point reads touch the most files. */
+    * whose bloom excludes the key. Absent only on files placed outside
+    * the writer (footer extraction never sees row values). */
   /** `sorted` records that the file's rows are ascending in the rowkey
-    * (V2 writers OBSERVE it while rows stream through; compaction sets
-    * it when it just key-sorted the data) — the basis for the scan's
+    * (the V2 writer OBSERVES it while rows stream through, compaction
+    * output included) — the basis for the scan's
     * `SupportsReportOrdering` report. False = unknown, never wrong. */
   final case class FileStat(path: String, len: Long, groups: Seq[GroupStat],
                             bloom: Option[String] = None,
@@ -291,14 +289,6 @@ object KvStats {
     writeManifestFile(new HPath(dir, name), m, conf)
   }
 
-  /** Delete base + all segments (compaction replaced every file). */
-  def clear(path: String, conf: Configuration): Unit = {
-    val base = new HPath(statsFile(path))
-    val fs = base.getFileSystem(conf)
-    fs.delete(base, false)
-    fs.delete(new HPath(segDir(path)), true)
-  }
-
   private def parse(root: JsonNode): Manifest = {
     val files = root.get("files").elements().asScala.map { fn =>
       val groups = fn.get("groups").elements().asScala.map { gn =>
@@ -391,12 +381,13 @@ object KvStats {
     } else if (added.nonEmpty)
       writeSegment(path, Manifest(schema, added), conf)
 
-  /** Incremental back-fill for files written OUTSIDE the V2 writer
-    * (compaction): reads footers ONLY for files not already present (or
-    * changed length) and records them through [[append]] — O(new files)
-    * footer IO and manifest bytes, independent of table size. */
-  def refresh(path: String, conf: Configuration,
-              keySorted: Boolean = false): Unit = {
+  /** Incremental back-fill for files placed in `data/` OUTSIDE the V2
+    * writer (every append and compaction writes through it): reads
+    * footers ONLY for files not already present (or changed length) and
+    * records them through [[append]], unsorted and without a Bloom —
+    * O(new files) footer IO and manifest bytes, independent of table
+    * size. */
+  def refresh(path: String, conf: Configuration): Unit = {
     val files = KvV2Util.dataFiles(path, conf)
     val prior = read(path, conf)
     val existing: Map[String, FileStat] =
@@ -407,7 +398,7 @@ object KvStats {
     val fresh = files.flatMap { f =>
       val rel = relativize(path, f.getPath, conf)
       if (existing.get(rel).exists(_.len == f.getLen)) None
-      else Some(fromFooter(f.getPath, rel, f.getLen, conf).copy(sorted = keySorted))
+      else Some(fromFooter(f.getPath, rel, f.getLen, conf))
     }
     append(path, schemaStr, prior, fresh, conf)
   }
@@ -416,8 +407,10 @@ object KvStats {
 /** Per-file rowkey bloom filter — HBase's per-store-file (ROW) bloom.
   * 8192 bits / 4 FNV-1a-derived hashes: ~1 KB per file in the manifest,
   * false-positive rate ~2.4% at 1000 keys per file (appends are small
-  * by definition — large files come from compaction, which has tight
-  * sorted min/max instead). Keys are hashed by their STRING rendering,
+  * by definition). Compacted files carry the writer's Bloom too; on a
+  * large file it saturates (every probe passes) but never excludes a
+  * key, and such files have tight sorted min/max instead. Keys are
+  * hashed by their STRING rendering,
   * identical on the write path (row values) and the probe path (Spark
   * filter literals) for string/long/int keys. False positives cost one
   * wasted file read; false negatives are impossible, so tombstones are

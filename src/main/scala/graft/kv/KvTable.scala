@@ -627,8 +627,7 @@ object KvTable {
       // HFiles): tight row-group key stats + the scan can report
       // per-partition rowkey ordering (SupportsReportOrdering)
       .sortWithinPartitions(col(schema.keyField))
-    swapData(spark, path, current, buckets = 0, lastVersion = lastVer,
-      keySorted = true)
+    swapData(spark, path, current, buckets = 0, lastVersion = lastVer)
     }
 
   /** Rows with `__version` below `minVersion` dropped: TTL-expired
@@ -658,11 +657,12 @@ object KvTable {
     * accumulates many small files (micro-batches, per-task appends)
     * whose per-file overhead dominates scans. This op merges, per
     * bucket directory (per region), every data file smaller than
-    * `smallFileBytes` into one key-sorted file (recorded sorted, so the
-    * merge-on-read scan keeps serving the table and its fan-in — one
-    * reader per run — drops) and deletes the originals —
-    * large files are never read or touched, so the cost is
-    * O(small-file bytes), independent of table size.
+    * `smallFileBytes` into one key-sorted file and deletes the
+    * originals — large files are never read or touched, so the cost is
+    * O(small-file bytes), independent of table size. All buckets merge
+    * in ONE write through the kvtable connector (a task per bucket, no
+    * shuffle), whose observed key order and Bloom keep the merge-on-read
+    * scan serving the table while its fan-in — one reader per run — drops.
     *
     * Physically LOSSLESS, deliberately: rows keep their exact
     * (`__version`, `__seq`, tombstone) — unlike major compaction it
@@ -670,14 +670,15 @@ object KvTable {
     * unaffected (HBase's minor compaction likewise keeps delete
     * markers; only a major discards history).
     *
-    * Crash safety: each group commit is journaled (`_minorlog.json`:
-    * target file + originals) before the publish rename. A crash
-    * between publish and the deletes can leave BOTH the merged file
-    * and some originals visible — harmless to the LWW view (identical
-    * (key, version, seq) rows collapse) but visible to raw-log
-    * consumers until the journal is replayed, which happens at the
-    * START of the next compactMinor (or any compaction). Single-writer
-    * per table, like every mutation (TableLock).
+    * Crash safety: the merge is written as a scratch kvtable and
+    * journaled (`_minorlog.json`: scratch dir + originals) before
+    * [[recoverMinor]] publishes it. A crash between publish and the
+    * deletes can leave BOTH a merged file and some originals visible —
+    * harmless to the LWW view (identical (key, version, seq) rows
+    * collapse) but visible to raw-log consumers until the journal is
+    * replayed, at the START of the next compactMinor (or any
+    * compaction). Single-writer per table, like every mutation
+    * (TableLock).
     *
     * @return number of file groups merged
     */
@@ -685,123 +686,121 @@ object KvTable {
                    smallFileBytes: Long = 32L * 1024 * 1024,
                    minFiles: Int = 2): Int =
     TableLock.withLock(path, KvHadoopConf(spark)) {
-      val conf = KvHadoopConf(spark)
-      val f = fs(spark, path)
       recoverMinor(spark, path)
-      // merge with the FILE schema: the table schema includes the
-      // __bucket PARTITION column (a directory coordinate), which must
-      // not become a physical all-null column in merged files — its
-      // "all null" footer stats would poison bucket-predicate pruning
-      // and a manifest rebuild would then double-add the column.
-      // Lazy: an empty table (no data dir) must no-op before any read.
-      lazy val dataSchema = org.apache.spark.sql.types.StructType(
-        graft.connector.KvV2Util.inferSchema(path, conf).fields
-          .filterNot(_.name == BucketCol))
-      lazy val keyField = readSchema(spark, path).keyField
-      val root = new HPath(dataDir(path))
-      val groups: Seq[HPath] =
-        if (!f.exists(root)) Seq.empty // created-but-never-written table
-        else {
-          val entries = f.listStatus(root)
-          val bucketDirs = entries.filter(e => e.isDirectory &&
-            e.getPath.getName.startsWith(s"$BucketCol="))
-          if (bucketDirs.nonEmpty) bucketDirs.map(_.getPath).toSeq
-          else Seq(root)
-        }
-      var merged = 0
-      groups.foreach { g =>
-        val smalls = f.listStatus(g).filter { e =>
-          val n = e.getPath.getName
-          e.isFile && n.endsWith(".parquet") && !n.startsWith(".") &&
-            !n.startsWith("_") && e.getLen < smallFileBytes
-        }
-        if (smalls.length >= minFiles) {
-          val tmp = s"$path/.minor-tmp"
-          f.delete(new HPath(tmp), true)
-          // key-sorted, so the merged file stays a sorted run for the
-          // merge-on-read scan
-          spark.read.schema(dataSchema)
-            .parquet(smalls.map(_.getPath.toString).toIndexedSeq: _*)
-            .coalesce(1)
-            .sortWithinPartitions(col(keyField))
-            .write.parquet(tmp)
-          val produced = f.listStatus(new HPath(tmp))
-            .filter(e => e.isFile && e.getPath.getName.endsWith(".parquet"))
-          require(produced.length == 1,
-            s"minor compaction expected one merged file, got ${produced.length}")
-          val target = new HPath(g,
-            s"minor-${java.util.UUID.randomUUID().toString.take(8)}.parquet")
-          // journal BEFORE publishing: lists what to delete once the
-          // target exists, replayed by recoverMinor after a crash
-          writeString(spark, minorLog(path), minorLogJson(
-            relToData(path, target), smalls.map(e => relToData(path, e.getPath))))
-          require(f.rename(produced.head.getPath, target),
-            s"KvTable $path: minor compaction could not publish $target")
-          smalls.foreach(e => f.delete(e.getPath, false))
-          f.delete(new HPath(tmp), true)
-          // manifest: drop merged-away entries, add the new file's stat
-          // (ONE footer read) — O(group) not O(table)
-          import graft.connector.KvStats
-          KvStats.read(path, conf).foreach { m =>
-            // manifest paths are TABLE-root-relative ("data/...") — use
-            // the same relativize the writers use, not the journal's
-            // data-dir-relative rendering
-            val dropped = smalls
-              .map(e => KvStats.relativize(path, e.getPath, conf)).toSet
-            val tgtLen = f.getFileStatus(target).getLen
-            val kept = m.files.filterNot(fs0 => dropped.contains(fs0.path))
-            val added = KvStats.fromFooter(target,
-              KvStats.relativize(path, target, conf), tgtLen, conf)
-              .copy(sorted = true)
-            KvStats.clear(path, conf)
-            KvStats.write(path, KvStats.Manifest(m.schema, kept :+ added), conf)
-          }
-          f.delete(new HPath(minorLog(path)), false)
-          merged += 1
-        }
-      }
+      val merged = stageMinor(spark, path, smallFileBytes, minFiles)
+      recoverMinor(spark, path)
       merged
     }
 
+  private val MinorTmp = ".minor-tmp"
   private def minorLog(path: String) = s"$path/_minorlog.json"
-  private def relToData(path: String, file: HPath): String = {
-    val base = new HPath(dataDir(path)).toUri.getPath
-    val p = file.toUri.getPath
-    require(p.startsWith(base), s"$p outside $base")
-    p.drop(base.length + 1)
-  }
-  private def minorLogJson(target: String, olds: Seq[String]): String = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    s"""{"target":"${esc(target)}","olds":[${olds.map(o => s""""${esc(o)}"""").mkString(",")}]}"""
+
+  /** [[compactMinor]] up to its publish: each qualifying directory's
+    * merged small files written into the scratch table and journaled;
+    * returns the number of groups staged. */
+  private[kv] def stageMinor(spark: SparkSession, path: String,
+                             smallFileBytes: Long, minFiles: Int): Int = {
+    val conf = KvHadoopConf(spark)
+    val f = fs(spark, path)
+    val root = new HPath(dataDir(path))
+    val dirs =
+      if (!f.exists(root)) Nil // created-but-never-written table
+      else f.listStatus(root).toSeq.filter(e => e.isDirectory &&
+        e.getPath.getName.startsWith(s"$BucketCol=")).map(_.getPath) match {
+        case Nil => Seq(root)
+        case bucketDirs => bucketDirs
+      }
+    val groups = dirs.map { g =>
+      g -> f.listStatus(g).filter { e =>
+        val n = e.getPath.getName
+        e.isFile && n.endsWith(".parquet") && !n.startsWith(".") &&
+          !n.startsWith("_") && e.getLen < smallFileBytes
+      }.toSeq
+    }.filter(_._2.length >= minFiles)
+    if (groups.nonEmpty) {
+      val schema = readSchema(spark, path)
+      // merge with the FILE schema: the table schema includes the
+      // __bucket PARTITION column (a directory coordinate), which a
+      // bucket group carries as a literal for the writer's routing
+      val dataSchema = org.apache.spark.sql.types.StructType(
+        graft.connector.KvV2Util.inferSchema(path, conf).fields
+          .filterNot(_.name == BucketCol))
+      // one key-sorted task per group: the merged file stays a sorted run
+      val parts = groups.map { case (g, smalls) =>
+        val rows = spark.read.schema(dataSchema)
+          .parquet(smalls.map(_.getPath.toString): _*)
+          .coalesce(1)
+          .sortWithinPartitions(col(schema.keyField))
+        if (g == root) rows
+        else rows.withColumn(BucketCol, lit(g.getName.stripPrefix(s"$BucketCol=").toInt))
+      }
+      // an RDD union keeps each group's task (a Dataset union of
+      // single-partition children runs them all in one task)
+      val merge = spark.createDataFrame(
+        spark.sparkContext.union(parts.map(_.rdd)), parts.head.schema)
+      writeScratch(merge, scratch(spark, path, MinorTmp), schema)
+      MetaSidecar.write(spark, minorLog(path), "scratch", MinorTmp, "originals",
+        groups.flatMap(_._2).map(e =>
+          graft.connector.KvStats.relativize(path, e.getPath, conf)))
+    }
+    groups.size
   }
 
-  /** Replay a crashed minor compaction's journal: if the merged target
-    * was published, finish the originals' deletes; if not, discard the
-    * temp output. Either way the table returns to a clean state and the
-    * journal is removed. */
+  /** Publish a journaled minor compaction — its last step, and the replay
+    * of one a crash interrupted: each file of the scratch table not yet
+    * published moves to `data/<bucket dir>/minor-<name>`, the originals
+    * are deleted, and ONE manifest edit swaps their entries for the
+    * scratch manifest's (the writer's task stats, paths renamed); every
+    * other entry is kept as it is. Runs under the table lock, before any
+    * compaction plans its read. */
   private[kv] def recoverMinor(spark: SparkSession, path: String): Unit = {
+    import graft.connector.KvStats
+    val log = minorLog(path)
+    if (!MetaSidecar.exists(spark, log)) return
+    val conf = KvHadoopConf(spark)
     val f = fs(spark, path)
-    val log = new HPath(minorLog(path))
-    if (!f.exists(log)) return
-    val json = {
-      val in = f.open(log)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val (scratchName, originals, _) =
+      MetaSidecar.read(spark, log, "scratch", "originals")
+    val tmp = s"$path/$scratchName"
+    val staged = KvStats.read(tmp, conf).getOrElse(throw new IllegalStateException(
+      s"KvTable $path: minor compaction journal without its scratch table"))
+    val published = staged.files.map { st =>
+      val cut = st.path.lastIndexOf('/') + 1
+      val target = s"${st.path.take(cut)}minor-${st.path.drop(cut)}"
+      val src = new HPath(s"$tmp/${st.path}")
+      if (f.exists(src))
+        require(f.rename(src, new HPath(s"$path/$target")),
+          s"KvTable $path: minor compaction could not publish $target")
+      st.copy(path = target)
     }
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(json)
-    val target = new HPath(s"${dataDir(path)}/${node.get("target").asText}")
-    if (f.exists(target)) {
-      val it = node.get("olds").elements()
-      while (it.hasNext)
-        f.delete(new HPath(s"${dataDir(path)}/${it.next().asText}"), false)
-      // entries for deleted files may linger in the manifest; rebuild
-      graft.connector.KvStats.clear(path, KvHadoopConf(spark))
-      graft.connector.KvStats.refresh(path, KvHadoopConf(spark))
+    originals.foreach(o => f.delete(new HPath(s"$path/$o"), false))
+    KvStats.read(path, conf).foreach { m =>
+      val replaced = (originals ++ published.map(_.path)).toSet
+      KvStats.write(path, KvStats.Manifest(m.schema,
+        m.files.filterNot(e => replaced(e.path)) ++ published), conf)
     }
-    f.delete(new HPath(s"$path/.minor-tmp"), true)
-    f.delete(log, false)
+    // the journal goes first: a stale scratch table without it is
+    // removed by the next compaction that writes one
+    MetaSidecar.delete(spark, log)
+    scratch(spark, path, scratchName)
   }
+
+  /** `path/name` cleared for a scratch kvtable, under the table lock: a
+    * crashed compaction's leftover and the lock its commit took, which
+    * would stall the next commit there for the lock's full wait. */
+  private def scratch(spark: SparkSession, path: String, name: String): String = {
+    val tmp = s"$path/$name"
+    val f = fs(spark, path)
+    f.delete(new HPath(tmp), true)
+    f.delete(TableLock.lockPath(tmp), false)
+    tmp
+  }
+
+  /** Raw log `rows` written as a new kvtable at `tmp` by the connector's
+    * writer (rows carrying `__bucket` land in `data/__bucket=N/`). */
+  private def writeScratch(rows: DataFrame, tmp: String, schema: KvSchema): Unit =
+    rows.write.format("kvtable").option("kvschema", schema.toJson)
+      .mode("append").save(tmp)
 
   /** Major compaction INTO a hash-bucketed layout: the log is rewritten
     * as `__bucket=<pmod(hash(key), n)>/...` partition directories, one
@@ -841,8 +840,7 @@ object KvTable {
           // produces for later appends (HBase stores are key-sorted for
           // the same reason)
           .sortWithinPartitions(col(schema.keyField))
-    swapData(spark, path, current, buckets, lastVersion = lastVer,
-      keySorted = true)
+    swapData(spark, path, current, buckets, lastVersion = lastVer)
     }
 
   /** Major compaction CLUSTERED along a Z-curve over `clusterCols` —
@@ -935,40 +933,31 @@ object KvTable {
   private val ZvCol = "__zv"
 
   /** Swap the rewritten log in with the old generation renamed ASIDE
-    * (never deleted first): every rename/delete result is CHECKED — a
-    * false return aborts (and the second rename rolls the old generation
-    * back into place), so a failure can not leave meta describing a
-    * layout the files don't have. A crash exactly between the two
-    * renames leaves the old generation intact under `.data-old`
+    * (never deleted first). The new generation is written as a scratch
+    * kvtable, whose manifest — paths already `data/…`, each file's task
+    * stats, observed key order and rowkey Bloom — becomes the table's
+    * once its `data/` is swapped in. Every rename/delete result is
+    * CHECKED — a false return aborts (and the second rename rolls the old
+    * generation back into place), so a failure can not leave meta
+    * describing a layout the files don't have. A crash exactly between
+    * the two renames leaves the old generation intact under `.data-old`
     * (restored by the next listing of the table's files, see
     * [[graft.connector.KvV2Util.restoreIfStranded]]); at no point is the
-    * only copy of the data deleted.
+    * only copy of the data deleted. An empty
+    * generation still publishes an (empty) `data/`, so a stale
+    * `.data-old` can never come back.
     */
   private[kv] def swapData(spark: SparkSession, path: String, current: DataFrame,
-                       buckets: Int, lastVersion: Long,
-                       keySorted: Boolean = false): Unit = {
-    val tmp = s"$path/.compact-tmp"
+                           buckets: Int, lastVersion: Long): Unit = {
+    val conf = KvHadoopConf(spark)
+    val tmp = scratch(spark, path, ".compact-tmp")
     val old = s"$path/.data-old"
     val f = fs(spark, path)
     // recover from a crash that stranded the data dir aside
-    graft.connector.KvV2Util.restoreIfStranded(path, KvHadoopConf(spark))
-    val w = current.write.mode("overwrite")
-    (if (buckets > 0) w.partitionBy(BucketCol) else w).parquet(tmp)
-    // A dynamic-partitioned write of an EMPTY collapse (every key
-    // tombstoned) emits NO files at all — unreadable (found by the
-    // KvLifecycleProps random-op sequences). Write one empty
-    // schema-bearing file into bucket 0 instead, so the table keeps its
-    // bucket layout and row-level ops still run on it after the
-    // compaction that asked for that layout (found by KvRowLevelProps).
-    if (buckets > 0) {
-      val it = f.listFiles(new HPath(tmp), true)
-      var hasParquet = false
-      while (!hasParquet && it.hasNext)
-        hasParquet = it.next().getPath.getName.endsWith(".parquet")
-      if (!hasParquet)
-        current.drop(BucketCol).write.mode("overwrite")
-          .parquet(s"$tmp/$BucketCol=0")
-    }
+    graft.connector.KvV2Util.restoreIfStranded(path, conf)
+    writeScratch(current, tmp, readSchema(spark, path))
+    val manifest = graft.connector.KvStats.read(tmp, conf).get // every commit writes one
+    f.mkdirs(new HPath(dataDir(tmp))) // a write of no rows adds no file
     if (f.exists(new HPath(old)))
       require(f.delete(new HPath(old), true),
         s"KvTable $path: could not clean stale $old")
@@ -977,19 +966,15 @@ object KvTable {
         !f.rename(new HPath(dataDir(path)), new HPath(old)))
       throw new java.io.IOException(
         s"KvTable $path: compaction could not move data aside")
-    if (!f.rename(new HPath(tmp), new HPath(dataDir(path)))) {
+    if (!f.rename(new HPath(dataDir(tmp)), new HPath(dataDir(path)))) {
       f.rename(new HPath(old), new HPath(dataDir(path))) // roll back
       throw new java.io.IOException(
         s"KvTable $path: compaction could not publish $tmp; old data restored")
     }
     writeMeta(spark, path, lastVersion, buckets)
     f.delete(new HPath(old), true)
-    // compaction replaced every file: rebuild the stats manifest
-    // (base + segments) from scratch
-    graft.connector.KvStats.clear(path,
-      KvHadoopConf(spark))
-    graft.connector.KvStats.refresh(path,
-      KvHadoopConf(spark), keySorted = keySorted)
+    graft.connector.KvStats.write(path, manifest, conf)
+    scratch(spark, path, ".compact-tmp")
   }
 
   /** Cells surviving HBase-Delete masking: drop tombstones and every

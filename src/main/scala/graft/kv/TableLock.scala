@@ -31,7 +31,7 @@ import org.apache.hadoop.fs.{Path => HPath}
   */
 object TableLock {
 
-  private def lockPath(path: String) = new HPath(path + ".kvlock")
+  private[kv] def lockPath(path: String) = new HPath(path + ".kvlock")
 
   // Per-path monitor for same-JVM writers: HDFS/object-store create-if-
   // absent is atomic across processes, but RawLocalFileSystem's is a

@@ -113,6 +113,26 @@ class KvConfGuardSpec extends AnyFunSuite {
     assert(writes.isEmpty, writes.mkString("\n"))
   }
 
+  test("KvTable, KvCounter and KvAppend write data files only through " +
+    "the kvtable connector") {
+    // a `.parquet(` call whose nearest preceding reader/writer access is
+    // `.write` is a DataFrameWriter write (reads, e.g. of an explicit
+    // file list, are the other guard's business)
+    val access = "\\.(read|write)(Stream)?\\b|\\.parquet\\(".r
+    val writes = Seq("KvTable", "KvCounter", "KvAppend").flatMap { n =>
+      val p = Paths.get(s"src/main/scala/graft/kv/$n.scala")
+      val src = code(p)
+      var last = ""
+      access.findAllMatchIn(src).flatMap { m =>
+        if (m.matched != ".parquet(") { last = m.matched; None }
+        else if (last == ".write")
+          Some(s"$p: ...${src.slice(m.start - 80, m.end).trim}")
+        else None
+      }.toSeq
+    }
+    assert(writes.isEmpty, writes.mkString("\n"))
+  }
+
   test("KvTable, KvCounter, KvAppend and KvReplica read a table's log " +
     "only through the kvtable connector: no Spark parquet read of its " +
     "data dir") {

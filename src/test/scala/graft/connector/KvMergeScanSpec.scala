@@ -1,7 +1,7 @@
 package graft.connector
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.{AppendDataExec, BatchScanExec}
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, TestSpark}
@@ -68,11 +68,26 @@ class KvMergeScanSpec extends SparkSpec {
       j.queryExecution.executedPlan.toString)
 
     val plans = executedPlans(spark)(KvTable.compactBucketed(spark, path, 4))
-    val writes = plans.filter(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
+    val writes = plans.filter(p => nodes(p).exists(_.isInstanceOf[AppendDataExec]))
     assert(writes.nonEmpty, plans.mkString("\n"))
     writes.foreach(p => assert(blocking(p).isEmpty, p.toString))
     assert(collectRows(KvTable.readV2(spark, path)) === want)
     assert(mergeable(path), "compaction must record its files sorted")
+  }
+
+  test("a bucketed table keyed by a date or a double keeps the merge scan " +
+    "after compactBucketed: its writer observes the key order") {
+    for ((name, key) <- Seq("date" -> expr("date_add(date'2024-01-01', cast(id as int))"),
+        "double" -> expr("id * 1.5 - 20"))) {
+      val path = TestSpark.scratch(s"merge-key-$name")
+      val rows = spark.range(40).select(key.as("k"), col("id").cast("string").as("v"))
+      KvTable.write(rows, path, schema, SinkMode.Replace)
+      KvTable.compactBucketed(spark, path, 4)
+      assert(mergeable(path), name)
+      val df = KvTable.read(spark, path)
+      assert(df.count() === 40, name)
+      assert(scans(df).forall(_.scan.description().contains("LwwMerge")), name)
+    }
   }
 
   test("unbucketed tables and a table with a file not recorded sorted keep " +

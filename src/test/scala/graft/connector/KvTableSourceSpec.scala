@@ -669,9 +669,21 @@ class KvTableSourceSpec extends SparkSpec {
       .as[String].collect() === Array("odd33"))
     // IN-list over keys from both files keeps both
     assert(df.filter(col("k").isin("k0033", "k0034")).count() === 2)
-    // a compaction-written file has NO bloom and must never be skipped,
-    // also next to a bloomed append that excludes the probed key
-    KvTable.compact(spark, path)
+    // a file placed outside the writer has NO bloom and must never be
+    // skipped, also next to a bloomed append that excludes the probed key:
+    // one such file replaces the log's two (their keys are disjoint)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    val placed = s"$path/.placed-tmp"
+    spark.read.parquet(s"$path/data").coalesce(1).write.parquet(placed)
+    KvV2Util.dataFiles(path, conf).foreach(f => fs.delete(f.getPath, false))
+    fs.listStatus(new org.apache.hadoop.fs.Path(placed))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .foreach(f => fs.rename(f.getPath,
+        new org.apache.hadoop.fs.Path(s"$path/data/placed.parquet")))
+    Seq(placed, KvStats.statsFile(path), KvStats.segDir(path))
+      .foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
+    KvStats.refresh(path, conf)
     KvTable.write(Seq(("k0501", "late")).toDF("k", "v"), path, schema)
     val blooms = KvStats.read(path, spark.sparkContext.hadoopConfiguration)
       .get.files.map(_.bloom.isDefined)
@@ -686,6 +698,28 @@ class KvTableSourceSpec extends SparkSpec {
     // the get sees the tombstone and the row stays deleted
     KvTable.deleteV2(Seq("k0033").toDF("k"), path, schema)
     assert(KvTable.readV2(spark, path).filter(col("k") === "k0033").count() === 0)
+  }
+
+  test("a new table's first write, batch or streaming, records its " +
+    "files' rowkey Bloom and observed key order") {
+    val schema = KvSchema.of("k", "v" -> ("f", "v"))
+    val rows = (1 to 50).map(i => (f"k$i%03d", s"v$i")).toDF("k", "v").coalesce(1)
+    val batch = TestSpark.scratch("v2-first-write")
+    KvTable.write(rows, batch, schema, SinkMode.Replace)
+    val stream = TestSpark.scratch("v2-first-epoch")
+    val in = TestSpark.scratch("v2-first-epoch-in")
+    rows.write.parquet(in)
+    spark.readStream.schema(spark.read.parquet(in).schema).parquet(in)
+      .writeStream.format("kvtable")
+      .option("kvschema", schema.toJson)
+      .option("checkpointLocation", TestSpark.scratch("v2-first-epoch-ckpt"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start(stream).awaitTermination()
+    for (path <- Seq(batch, stream)) {
+      val files = KvStats.read(path, spark.sparkContext.hadoopConfiguration).get.files
+      assert(files.size === 1, path)
+      assert(files.head.bloom.isDefined && files.head.sorted, s"$path: ${files.head}")
+    }
   }
 
   test("MIN/MAX over stats-covered int/long columns are metadata-" +

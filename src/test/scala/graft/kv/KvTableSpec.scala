@@ -452,6 +452,123 @@ class KvTableSpec extends SparkSpec {
     assert(KvTable.compactMinor(spark, path) === 0)
   }
 
+  test("compactMinor on a bucketed table merges every bucket in ONE " +
+    "Spark write job") {
+    import graft.connector.KvMergeFixtures.jobs
+    val path = TestSpark.scratch("kv-minor-one-job")
+    val s = KvSchema.of("k", "v" -> ("f", "v"))
+    KvTable.bulkLoad((1 to 400).map(i => (f"k$i%04d", s"v$i")).toDF("k", "v"),
+      path, s, buckets = 6)
+    (1 to 2).foreach(a => KvTable.write(
+      (1 to 400 by 7).map(i => (f"k$i%04d", s"u$a")).toDF("k", "v"), path, s))
+    val before = KvTable.readRaw(spark, path).collect().map(_.toString).toSet
+    var merged = 0
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val perTask = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        tasks.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(perTask)
+    try assert(jobs(spark) { merged = KvTable.compactMinor(spark, path) } === 1)
+    finally spark.sparkContext.removeSparkListener(perTask)
+    assert(merged === 6)
+    assert(tasks.get === 6, "one task per bucket")
+    assert(KvTable.readRaw(spark, path).collect().map(_.toString).toSet === before)
+    val conf = graft.connector.KvHadoopConf(spark)
+    assert(graft.connector.KvV2Util.dataFiles(path, conf).map(_.getPath.getName)
+      .forall(_.startsWith("minor-")))
+    assert(graft.connector.KvV2Util.mergeable(path, conf))
+  }
+
+  test("a replayed minor-compaction journal publishes the rest of its " +
+    "scratch table and keeps every other file's manifest entry") {
+    import graft.connector.{KvHadoopConf, KvStats, KvV2Util}
+    import org.apache.hadoop.fs.{Path => HPath}
+    val path = TestSpark.scratch("kv-minor-replay")
+    val s = KvSchema.of("k", "v" -> ("f", "v"))
+    val conf = KvHadoopConf(spark)
+    val fs = new HPath(path).getFileSystem(conf)
+    KvTable.bulkLoad((1 to 2000).map(i => (f"k$i%05d", s"v$i")).toDF("k", "v"),
+      path, s, buckets = 4)
+    val bulk = KvV2Util.dataFiles(path, conf).map(_.getPath)
+    (1 to 2).foreach(a => KvTable.write(
+      (1 to 40).map(i => (f"k${i * 37}%05d", s"u$a-$i")).toDF("k", "v"), path, s))
+    def raw = KvTable.readRaw(spark, path).collect().map(_.toString).toSet
+    val before = raw
+    val appended = KvV2Util.dataFiles(path, conf).filterNot(f => bulk.contains(f.getPath))
+    // only the appends are small
+    val small = KvV2Util.dataFiles(path, conf).filter(f => bulk.contains(f.getPath))
+      .map(_.getLen).min
+    assert(appended.nonEmpty && appended.forall(_.getLen < small))
+    assert(KvTable.stageMinor(spark, path, small, 2) === 4)
+    // crash after the first of the four merged files was published
+    val first = KvStats.read(s"$path/.minor-tmp", conf).get.files.head.path
+    val cut = first.lastIndexOf('/') + 1
+    assert(fs.rename(new HPath(s"$path/.minor-tmp/$first"),
+      new HPath(s"$path/${first.take(cut)}minor-${first.drop(cut)}")))
+    // the next run replays the journal; nothing is left to merge after it
+    assert(KvTable.compactMinor(spark, path, smallFileBytes = small) === 0)
+    assert(appended.forall(f => !fs.exists(f.getPath)), "an original survived")
+    assert(!fs.exists(new HPath(s"$path/_minorlog.json")))
+    assert(!fs.exists(new HPath(s"$path/.minor-tmp")))
+    assert(raw === before)
+    assert(KvV2Util.mergeable(path, conf))
+    val entries = KvStats.read(path, conf).get.files
+    assert(entries.size === 8)
+    assert(entries.forall(e => e.bloom.isDefined && e.sorted), entries.map(_.path))
+    assert(bulk.forall(b => entries.exists(e => b.toString.endsWith(e.path))))
+  }
+
+  test("a crashed compaction's scratch table and its lock stall no " +
+    "compaction") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val path = TestSpark.scratch("kv-stale-scratch")
+    val s = KvSchema.of("k", "v" -> ("f", "v"), "n" -> ("f", "n"))
+    val fs = new HPath(path).getFileSystem(graft.connector.KvHadoopConf(spark))
+    (1 to 3).foreach(a => KvTable.write((1 to 30).map(i => (f"k$i%02d", s"v$a", i.toLong * a))
+      .toDF("k", "v", "n"), path, s, if (a == 1) SinkMode.Replace else SinkMode.Append))
+    def lww = KvTable.read(spark, path).collect().map(_.toString).toSet
+    val want = lww
+    /** A stale scratch table at each compaction's scratch path, with the
+      * (fresh) lock its commit would have left. */
+    def plant(at: String): Unit = Seq(".compact-tmp", ".minor-tmp").foreach { d =>
+      fs.mkdirs(new HPath(s"$at/$d/data"))
+      fs.create(new HPath(s"$at/$d/data/part-0.parquet")).close()
+      fs.create(new HPath(s"$at/$d.kvlock")).close()
+    }
+    def prompt(name: String)(op: => Unit): Unit = {
+      val t0 = System.nanoTime()
+      op
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(secs < 30, s"$name took $secs s")
+    }
+    for ((name, op) <- Seq[(String, () => Unit)](
+        "compactMinor" -> (() => assert(KvTable.compactMinor(spark, path) === 1)),
+        "compact" -> (() => KvTable.compact(spark, path)),
+        "compactBucketed" -> (() => KvTable.compactBucketed(spark, path, 3)),
+        "compactZOrder" -> (() => KvTable.compactZOrder(spark, path, Seq("n"))))) {
+      plant(path)
+      prompt(name)(op())
+      assert(lww === want, name)
+    }
+    val counter = TestSpark.scratch("kv-stale-scratch-counter")
+    KvCounter.increment(Seq(("a", 1L), ("b", 2L)).toDF("k", KvCounter.DeltaCol),
+      counter, "k", SinkMode.Replace)
+    KvCounter.increment(Seq(("a", 5L)).toDF("k", KvCounter.DeltaCol), counter, "k")
+    plant(counter)
+    prompt("KvCounter.compact")(KvCounter.compact(spark, counter))
+    assert(KvCounter.read(spark, counter).as[(String, Long)].collect().toMap ===
+      Map("a" -> 6L, "b" -> 2L))
+    val appends = TestSpark.scratch("kv-stale-scratch-append")
+    KvAppend.appendTo(Seq(("a", "x")).toDF("k", KvAppend.PieceCol), appends, "k",
+      SinkMode.Replace)
+    KvAppend.appendTo(Seq(("a", "y")).toDF("k", KvAppend.PieceCol), appends, "k")
+    plant(appends)
+    prompt("KvAppend.compact")(KvAppend.compact(spark, appends))
+    assert(KvAppend.read(spark, appends).as[(String, String)].collect().toMap ===
+      Map("a" -> "xy"))
+  }
+
   test("compact preserves the LWW view") {
     val path = TestSpark.scratch("kv-compact")
     KvTable.write(parsed, path, schema, SinkMode.Replace)
